@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.ops.ChainIndex
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
   * array<float>, label) — the vector half of an LLM data pipeline.
@@ -55,6 +56,13 @@ object Embeddings {
   // batch path, so streamed and batch-built index rows are bit-identical
   private[graft] def norm(c: Column): Column = sqrt(dot(c, c))
 
+  /** The corpus as (vec_id, v, nrm) — the frame every search, index
+    * build and batch starts from. */
+  private[graft] def vectors(spark: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding").as("v"))
+      .withColumn("nrm", norm(col("v")))
+
   /** Shared oracle CTE: vectors with double view + norm. */
   private val embCte: String =
     """WITH ev AS (
@@ -74,9 +82,7 @@ object Embeddings {
     import spark.implicits._
     val topk = udaf(new graft.functions.TopKAggregator(5),
       org.apache.spark.sql.Encoders.product[graft.functions.Scored])
-    val e = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".as("v"))
-      .withColumn("nrm", norm($"v"))
+    val e = vectors(spark, dir)
     val q = e.filter($"vec_id" < 5)
       .select($"vec_id".as("qid"), $"v".as("qv"), $"nrm".as("qn"))
     val c = e.filter($"vec_id" >= 5)
@@ -318,9 +324,7 @@ object Embeddings {
   def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
     graft.GraftExtensions.ensure(spark)
     import spark.implicits._
-    val eRaw = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".as("v"))
-      .withColumn("nrm", norm($"v"))
+    val eRaw = vectors(spark, dir)
     // training runs eagerly (driver-side Lloyd, its own action-lived cache)
     // and returns a LocalRelation — re-planning it per consumer is free
     val cents = lloydCentroids(eRaw, k = 10, iters = 5)
@@ -393,230 +397,83 @@ object Embeddings {
   // build amortizes across every query until the next refresh instead
   // of being paid per query.
 
-  // roots whose index is complete this process — the E21 read path's
-  // build-once memo (any buildIvfIndex marks its root, so a prior
-  // emb_ivf_mv refresh also satisfies emb_ivf_read); also the writers'
-  // monitor (see buildIvfIndex)
-  private val ivfBuilt = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Artifact root for one (dataset, variant) pair — path/nonce/cleanup
-    * machinery shared with every MV family via
-    * [[graft.ops.ArtifactRoots]] (canonical-dataset-path hash +
-    * per-process nonce, shutdown-hook deletion).
+  /** The IVF index's chain layers: `cells` (the inverted file, one hive
+    * partition per cell — the FAISS IVF-flat layout as a filesystem fact;
+    * appends add rows) and `centroids` (the frozen quantizer, carried
+    * forward by every compaction). cells + centroids publish as ONE
+    * version, so a reader never pairs new cells with an old quantizer.
+    * Resident ids = cells.vec_id; each version's bloom sidecar covers
+    * exactly the vectors it adds.
     */
-  private[graft] def ivfRoot(dir: String, tag: String): String =
-    graft.ops.ArtifactRoots.path(s"graft_ivf_mv_$tag", Some(dir))
+  private[graft] val Ivf = new ChainIndex.Family("graft_ivf_mv_", "IVF index",
+    Seq(
+      ChainIndex.Layer("cells", ChainIndex.AppendShaped, partitionBy = Some("cell")),
+      ChainIndex.Layer("centroids", ChainIndex.RewriteShaped)),
+    Some(ChainIndex.ResidentIds("vec_id", Seq("cells"))))
 
   /** Build + persist the IVF index over the vectors selected by `pred`:
     * train the coarse quantizer (k=10 × 5 Lloyd rounds, E2's exact
-    * recipe), assign every selected vector map-side, write the inverted
-    * file hive-partitioned by `cell` (each cell one directory — the
-    * FAISS IVF-flat layout as a filesystem fact) and the centroid table
-    * alongside it. The vector set is cached for exactly the build's
-    * actions (training collects + the two writes) and released before
-    * return — lloydCentroids sees the cache via its caller-caches
-    * contract and skips its internal copy.
-    */
-  /** All index WRITERS serialize on ivfBuilt's monitor (same single-
-    * writer-per-process contract as the pair-graph MV): a refresh
-    * (emb_ivf_mv) can never interleave its overwrite with another
-    * build, and the read path's double-check below excludes a
-    * concurrent first-build of the same root. Readers concurrent with
-    * a refresh can still observe the overwrite mid-scan — plain parquet
-    * has no snapshot isolation; the registry is single-threaded per
-    * dataset, which satisfies the constraint.
+    * recipe), assign every selected vector map-side, and write cells,
+    * centroids and the resident-id bloom overlapped on the driver pool
+    * (wall = max(layer), not Σ(layer)). The vector set is cached for
+    * exactly the build's actions (training collects + the writes) and
+    * released before return — lloydCentroids sees the cache via its
+    * caller-caches contract and skips its internal copy. A rebuild starts
+    * a new chain; the previous chain is retained for live readers.
     */
   private[graft] def buildIvfIndex(spark: SparkSession, dir: String, tag: String,
-                                   pred: DataFrame => DataFrame): String = ivfBuilt.synchronized {
-    graft.GraftExtensions.ensure(spark)
-    import spark.implicits._
-    val root = graft.ops.ArtifactRoots.register(s"graft_ivf_mv_$tag", Some(dir))
-    val eAll = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".as("v"))
-      .withColumn("nrm", norm($"v"))
-    val e = pred(eAll).cache()
-    try {
-      val cents = lloydCentroids(e, k = 10, iters = 5)
-      // cells + centroids swap ATOMICALLY as one S6v snapshot version: a
-      // refresh overwriting them in place could otherwise be observed
-      // mid-swap by a concurrent E21 reader (new cells scored against
-      // the old quantizer — wrong data, no error). E17 appends publish
-      // batch-sized DELTA versions on the same chain (never files into a
-      // committed dir), so every committed version is immutable — time
-      // travel to N reproduces N — and GC is chain-aware: a rebuild
-      // starts a new chain, the previous chain (full + its deltas) is
-      // retained for live readers.
-      graft.weather.Staging.publishSnapshot(spark, root) { p =>
-        // three independent layer writes overlapped on the driver pool
-        // (guide §2.6, r16): wall = max(layer) not Σ(layer)
+                                   pred: DataFrame => DataFrame): String =
+    Ivf.build(spark, dir, tag) { v =>
+      graft.GraftExtensions.ensure(spark)
+      import spark.implicits._
+      val eAll = vectors(spark, dir)
+      val e = pred(eAll).cache()
+      try {
+        val cents = lloydCentroids(e, k = 10, iters = 5)
         graft.ops.Par.all(
-          () => assignCells(e, cents).select($"vec_id", $"v", $"nrm", $"cell")
-            .repartition($"cell")
-            .write.mode("overwrite").partitionBy("cell").parquet(s"$p/cells"),
-          () => cents.repartition(1).write.mode("overwrite").parquet(s"$p/centroids"),
-          // resident-id bloom sidecar (graft.ops.IdBloom): what keeps later
-          // appends' dup guards O(batch) instead of scanning this version's
-          // vec_id column per ingest
-          () => graft.ops.IdBloom.write(spark, p, e.select($"vec_id"), "vec_id"))
-      }
-      graft.weather.Staging.gcChains(spark, root, keepChains = 2)
-    } finally { e.unpersist(false); () }
-    ivfBuilt.put(root, java.lang.Boolean.TRUE)
-    root
-  }
+          () => v.write("cells", assignCells(e, cents).select($"vec_id", $"v", $"nrm", $"cell")),
+          () => v.write("centroids", cents),
+          // what keeps later appends' dup guards O(batch) instead of
+          // scanning this version's vec_id column per ingest
+          () => v.bloom(e))
+      } finally { e.unpersist(false); () }
+    }
 
   /** E17's ingest step: route a NEW batch into an existing index with
-    * the FROZEN quantizer — read the persisted centroids back, assign
-    * the batch map-side, append to the cell partitions. No retraining,
-    * no touch of the resident vectors: per-batch cost is batch-sized
-    * (the L8 asymmetric-dedup discipline applied to the vector index),
-    * which is what lets a streaming ingest keep an index fresh without
-    * ever re-paying the corpus-sized build. Parquet round-trips doubles
-    * bit-exactly, so frozen-centroid assignment matches what training-
-    * time assignment of the same rows would produce (IvfMvSpec pins it).
-    */
-  /** `compactAfterDeltas` > 0 opts into auto-compaction: after the
-    * append commits, if the chain holds MORE than that many delta
-    * versions, [[compactIvfIndex]] collapses it (the measured trigger —
-    * compact when Σ per-read delta overhead approaches the compaction
-    * bill; both writers hold the same monitor, so the pair is atomic
-    * w.r.t. other writers and readers keep the previous chain).
-    *
-    * Ingest-guard cost (round-16): the dup guard probes the batch's ids
-    * against the chain's per-version BLOOM sidecars first
-    * ([[graft.ops.IdBloom]]) — map-side, O(batch) — and touches the
-    * index's resident `vec_id` column only when a batch id is flagged
-    * (a real replay, or the 1%-fpp false-positive sliver), which is the
-    * failure path, not the steady state. A chain missing any sidecar
-    * degrades to the exact column scan — cost, never correctness.
-    *
-    * `idempotent = true` (the streaming-sink mode) replaces the loud
-    * require with drop-resident-rows semantics: the batch is filtered to
-    * its not-yet-resident remainder (same bloom-first machinery) and an
-    * entirely-replayed batch publishes NOTHING — what makes foreachBatch
-    * at-least-once delivery exactly-once on the chain. A delta publish
-    * is all-or-nothing (one marker), so a replayed batch is either fully
-    * resident (filters to empty) or fully new; the filter also runs
-    * INSIDE the writers' monitor, so two concurrent idempotent ingests
-    * of overlapping batches serialize — the second lands only the rows
-    * the first didn't (partial overlap included).
+    * the FROZEN quantizer — read the chain's committed centroids, assign
+    * the batch map-side, publish its cell rows as one DELTA version. No
+    * retraining, no touch of the resident vectors: per-batch cost is
+    * batch-sized (the L8 asymmetric-dedup discipline applied to the
+    * vector index), which is what lets a streaming ingest keep an index
+    * fresh without ever re-paying the corpus-sized build. Parquet
+    * round-trips doubles bit-exactly, so frozen-centroid assignment
+    * matches what training-time assignment of the same rows would produce
+    * (IvfMvSpec pins it). The guard, idempotent mode, empty-batch and
+    * auto-compaction contract is [[graft.ops.ChainIndex.Family.append]]'s;
+    * a re-ingested vec_id would otherwise rank the same cid into two
+    * top-k slots. Needs a committed index, not a build in this process.
     */
   private[graft] def appendIvfIndex(spark: SparkSession, root: String, batch: DataFrame,
                                     compactAfterDeltas: Int = 0,
-                                    idempotent: Boolean = false): Unit =
-    // serialized with rebuilds on the writers' monitor: an append racing
-    // a concurrent rebuild could otherwise assign against a quantizer
-    // the rebuild is about to retire (and land its delta on the new
-    // chain); under the monitor the chain it resolves is the chain it
-    // extends
-    ivfBuilt.synchronized {
-      import spark.implicits._
-      // an EMPTY batch publishes nothing (the streaming-sink contract):
-      // a hive-partitioned write of zero rows leaves only _SUCCESS in
-      // the cells dir, which would poison every later chain read with
-      // an unreadable layer
-      if (!batch.isEmpty) {
-        // checkpoint the batch once (the appendNswIndex discipline): it
-        // feeds the dup-guard action AND the delta write — a lazy source
-        // would re-derive per consumer. Freed in the finally: the guard's
-        // require and the publish are exactly the retry-after-failure
-        // paths, and a long-lived ingest driver retrying a poisoned batch
-        // must not leak a checkpoint per attempt.
-        val b0 = batch.select($"vec_id", $"v", $"nrm").localCheckpoint()
-        val ckpts = scala.collection.mutable.ArrayBuffer[DataFrame](b0)
-        try {
-          val dirs = graft.weather.Staging.chainDirs(spark, root)
-          // the exact resident-id frame — constructed ONLY when the bloom
-          // probe flags a batch id (by-name in both guard forms)
-          def residentIds =
-            graft.weather.Staging.readChainIn(spark, dirs, "cells").select($"vec_id")
-          // ingest-contract guard (parity with the NSW and pair-graph
-          // appends): a re-ingested vec_id — e.g. a batch retried after a
-          // failure PAST the commit marker — would land duplicate cells
-          // rows and rank the same cid into two top-k slots, silently
-          val b =
-            if (idempotent) {
-              val fresh = graft.ops.IdBloom.filterFresh(spark, dirs, b0, "vec_id", residentIds)
-              if (fresh eq b0) b0
-              else { val c = fresh.localCheckpoint(); ckpts += c; c }
-            } else {
-              require(!graft.ops.IdBloom.overlaps(spark, dirs, b0, "vec_id", residentIds),
-                s"appendIvfIndex: batch re-ingests vec_ids already resident in $root — " +
-                  "vec_ids must be disjoint (CDC ingest contract)")
-              b0
-            }
-          // an entirely-replayed idempotent batch publishes nothing
-          if (!idempotent || !b.isEmpty) {
-            // frozen quantizer = the chain's committed centroids; the batch
-            // publishes as a DELTA version carrying only its own cell rows —
-            // committed versions stay immutable, a crash before the marker
-            // leaves the index at its previous version, and readers union
-            // cells across the chain
-            val cents = graft.weather.Staging.readChainLatestIn(spark, dirs, "centroids")
-            graft.weather.Staging.publishSnapshotDelta(spark, root) { p =>
-              graft.ops.Par.all(
-                () => assignCells(b, cents).select($"vec_id", $"v", $"nrm", $"cell")
-                  .repartition($"cell")
-                  .write.mode("overwrite").partitionBy("cell").parquet(s"$p/cells"),
-                () => graft.ops.IdBloom.write(spark, p, b.select($"vec_id"), "vec_id"))
-            }
-          }
-        } finally graft.ops.Ckpt.free(ckpts.toSeq: _*)
-        if (compactAfterDeltas > 0 &&
-            graft.weather.Staging.chainVersions(spark, root).size - 1 > compactAfterDeltas)
-          compactIvfIndex(spark, root)
-      }
+                                    idempotent: Boolean = false): Unit = {
+    import spark.implicits._
+    Ivf.append(spark, root, batch.select($"vec_id", $"v", $"nrm"), "appendIvfIndex",
+        compactAfterDeltas, idempotent) { (b, dirs, v) =>
+      val cents = graft.weather.Staging.readChainLatestIn(spark, dirs, "centroids")
+      graft.ops.Par.all(
+        () => v.write("cells", assignCells(b, cents).select($"vec_id", $"v", $"nrm", $"cell")),
+        () => v.bloom(b))
     }
+  }
 
-  /** Compact the index chain (full version + N append deltas) into ONE
-    * new full version: cells = the chain union rewritten with the
-    * standard hive-partitioned-by-cell layout, centroids carried forward
-    * bit-exactly (parquet double round-trip is exact, so the quantizer
-    * stays FROZEN across compactions — later appends and queries score
-    * against the identical quantizer). A pure artifact rewrite, no
-    * retraining and no touch of the base vectors: cost ∝ index size,
-    * where a rebuild is corpus-sized (Lloyd rounds over every vector).
-    * Resets the per-delta chain-read overhead that accumulates under a
-    * streaming ingest — each retained delta adds one FileSourceScan to
-    * every probed read (still pruned, but per-scan setup is real).
-    * Publishes through the S6v protocol on the writers' monitor: one
-    * commit marker, previous chain retained for live readers, a crash
-    * commits nothing. A delta-less chain is a no-op.
+  /** Compact the index chain into ONE full version (cells = the chain
+    * union, centroids carried forward bit-exactly, so the quantizer stays
+    * FROZEN across compactions). Cost ∝ index size, where a rebuild is
+    * corpus-sized (Lloyd rounds over every vector); resets the per-delta
+    * chain-read overhead a streaming ingest accumulates.
     */
   private[graft] def compactIvfIndex(spark: SparkSession, root: String): Unit =
-    ivfBuilt.synchronized {
-      import spark.implicits._
-      val S = graft.weather.Staging
-      // ONE pinned chain resolution for both layers (the readers'
-      // chainDirs discipline): in-process writers share this monitor, but
-      // a writer or gcChains in ANOTHER process between two independent
-      // readChain calls could pair centroids and cells from different
-      // chains — the pin makes the compacted version self-consistent by
-      // construction
-      val dirs = S.chainDirs(spark, root)
-      if (dirs.size > 1) {
-        val cells = S.readChainIn(spark, dirs, "cells")
-        val cents = S.readChainLatestIn(spark, dirs, "centroids")
-        S.publishSnapshot(spark, root) { p =>
-          graft.ops.Par.all(
-          () => cells.select($"vec_id", $"v", $"nrm", $"cell")
-            .repartition($"cell")
-            .write.mode("overwrite").partitionBy("cell").parquet(s"$p/cells"),
-          () => cents.repartition(1).write.mode("overwrite").parquet(s"$p/centroids"),
-          // ONE fresh bloom recomputed over the exact cells id frame
-          // already being rewritten — never a merge of the old blobs
-          // (bit-incompatible across sizes), and deliberately not a copy:
-          // carrying every historical blob forward would grow the per-row
-          // probe cost and the union fpp linearly with total appends ever
-          // made, quietly degrading steady-state ingest back to the exact
-          // resident scan. Recompute resets both to one 1%-fpp blob per
-          // compaction cycle and heals a chain whose sidecars were lost.
-          () => graft.ops.IdBloom.write(spark, p, cells.select($"vec_id"), "vec_id"))
-        }
-        S.gcChains(spark, root, keepChains = 2)
-        ()
-      }
-    }
+    Ivf.compact(spark, root)
 
   /** Answer the standard query set (vec_id < 5, top-3 probes, top-3
     * hits) from a persisted index. The probe list is resolved DRIVER-
@@ -632,9 +489,7 @@ object Embeddings {
   private[graft] def ivfQueryFromIndex(spark: SparkSession, dir: String, root: String): DataFrame = {
     graft.GraftExtensions.ensure(spark)
     import spark.implicits._
-    val q = Tables.embeddings(spark, dir).filter($"vec_id" < 5)
-      .select($"vec_id", $"embedding".as("v"))
-      .withColumn("nrm", norm($"v"))
+    val q = vectors(spark, dir).filter($"vec_id" < 5)
     // pin the CHAIN once (Staging.chainDirs — ONE marker-set listing),
     // then derive BOTH layers from the pinned dirs: centroids from the
     // chain's newest carrier, cells as the union of the full base +
@@ -683,13 +538,8 @@ object Embeddings {
     * round-trips floats bit-exactly → shares E2's oracle SQL.
     */
   def ivfReadTopK(spark: SparkSession, dir: String): DataFrame = {
-    val root = ivfRoot(dir, "full")
-    // double-checked, NOT computeIfAbsent: buildIvfIndex marks its own
-    // root in ivfBuilt, and a same-map write inside computeIfAbsent's
-    // mapping function is an illegal recursive update
-    if (!ivfBuilt.containsKey(root)) ivfBuilt.synchronized {
-      if (!ivfBuilt.containsKey(root)) { buildIvfIndex(spark, dir, "full", identity); () }
-    }
+    val root = Ivf.root(dir, "full")
+    Ivf.ensureBuilt(root) { buildIvfIndex(spark, dir, "full", identity); () }
     ivfQueryFromIndex(spark, dir, root)
   }
 
@@ -707,14 +557,22 @@ object Embeddings {
   // every micro-batch; the full rebuild (E16) becomes a periodic
   // compaction, exactly like S11/S12's merge-then-compact file story.
 
-  def ivfAppendTopK(spark: SparkSession, dir: String): DataFrame = {
+  def ivfAppendTopK(spark: SparkSession, dir: String): DataFrame =
+    ivfHeldOutTopK(spark, dir, "incr") { (root, heldOut) =>
+      appendIvfIndex(spark, root, heldOut(col("vec_id") % 10 === 7))
+    }
+
+  /** The E17 split on index variant `tag`: build on 90% of the corpus,
+    * `ingest` the held-out 10% (given as a vec_id-filtered batch
+    * factory), then run the standard query batch over the index with
+    * `is_new` marking the held-out hits.
+    */
+  private def ivfHeldOutTopK(spark: SparkSession, dir: String, tag: String)(
+      ingest: (String, Column => DataFrame) => Unit): DataFrame = {
     graft.GraftExtensions.ensure(spark)
     import spark.implicits._
-    val root = buildIvfIndex(spark, dir, "incr", _.filter($"vec_id" % 10 =!= 7))
-    val batch = Tables.embeddings(spark, dir).filter($"vec_id" % 10 === 7)
-      .select($"vec_id", $"embedding".as("v"))
-      .withColumn("nrm", norm($"v"))
-    appendIvfIndex(spark, root, batch)
+    val root = buildIvfIndex(spark, dir, tag, _.filter($"vec_id" % 10 =!= 7))
+    ingest(root, vectors(spark, dir).filter(_))
     ivfQueryFromIndex(spark, dir, root)
       .withColumn("is_new", ($"cid" % 10 === 7).cast("int"))
   }
@@ -747,20 +605,13 @@ object Embeddings {
     * query FAIL (not silently degrade to the uncompacted chain) if the
     * auto-compaction trigger ever regresses.
     */
-  def ivfCompactTopK(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.ensure(spark)
-    import spark.implicits._
-    val root = buildIvfIndex(spark, dir, "cmp", _.filter($"vec_id" % 10 =!= 7))
-    def batch(m: Int) = Tables.embeddings(spark, dir).filter($"vec_id" % 20 === m)
-      .select($"vec_id", $"embedding".as("v"))
-      .withColumn("nrm", norm($"v"))
-    appendIvfIndex(spark, root, batch(7), compactAfterDeltas = 1)
-    appendIvfIndex(spark, root, batch(17), compactAfterDeltas = 1)
-    require(graft.weather.Staging.chainVersions(spark, root).size == 1,
-      "emb_ivf_compact: auto-compaction did not collapse the chain")
-    ivfQueryFromIndex(spark, dir, root)
-      .withColumn("is_new", ($"cid" % 10 === 7).cast("int"))
-  }
+  def ivfCompactTopK(spark: SparkSession, dir: String): DataFrame =
+    ivfHeldOutTopK(spark, dir, "cmp") { (root, heldOut) =>
+      for (m <- Seq(7, 17))
+        appendIvfIndex(spark, root, heldOut(col("vec_id") % 20 === m), compactAfterDeltas = 1)
+      require(graft.weather.Staging.chainVersions(spark, root).size == 1,
+        "emb_ivf_compact: auto-compaction did not collapse the chain")
+    }
 
   val ivfCompactTopKSql: String = ivfAppendTopKSql
 
@@ -922,9 +773,7 @@ object Embeddings {
   def semDedup(spark: SparkSession, dir: String): DataFrame = {
     graft.GraftExtensions.ensure(spark)
     import spark.implicits._
-    val eRaw = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".as("v"))
-      .withColumn("nrm", norm($"v"))
+    val eRaw = vectors(spark, dir)
     val cents = lloydCentroids(eRaw, k = 10, iters = 5)
     // assigned feeds three consumers (both join sides + the final left
     // join): cache for the one collecting action, then release
@@ -1045,9 +894,7 @@ object Embeddings {
   def multiProbeNearDup(spark: SparkSession, dir: String): DataFrame = {
     graft.GraftExtensions.ensure(spark)
     import spark.implicits._
-    val e = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".as("v"))
-      .withColumn("nrm", norm($"v"))
+    val e = vectors(spark, dir)
     // both legs are map-side off the native projection now — no shared
     // shuffle worth caching (the old bits frame fed two aggregations)
     val bits = srpBits(e)
@@ -1083,9 +930,7 @@ object Embeddings {
   def lshNearDup(spark: SparkSession, dir: String): DataFrame = {
     graft.GraftExtensions.ensure(spark)
     import spark.implicits._
-    val e = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".as("v"))
-      .withColumn("nrm", norm($"v"))
+    val e = vectors(spark, dir)
     srpCandidates(e)
       .join(e.select($"vec_id".as("va"), $"v".as("av"), $"nrm".as("an")), Seq("va"))
       .join(e.select($"vec_id".as("vb"), $"v".as("bv"), $"nrm".as("bn")), Seq("vb"))
@@ -1205,10 +1050,7 @@ object Embeddings {
     import spark.implicits._
     val topk = udaf(new graft.functions.TopKAggregator(5),
       org.apache.spark.sql.Encoders.product[graft.functions.Scored])
-    val e = graft.ops.ScopedCache.untilConsumed(
-      Tables.embeddings(spark, dir)
-        .select($"vec_id", $"embedding".as("v"))
-        .withColumn("nrm", norm($"v")))
+    val e = graft.ops.ScopedCache.untilConsumed(vectors(spark, dir))
     val scored = srpCandidates(e)
       .join(e.select($"vec_id".as("va"), $"v".as("av"), $"nrm".as("an")), Seq("va"))
       .join(e.select($"vec_id".as("vb"), $"v".as("bv"), $"nrm".as("bn")), Seq("vb"))
@@ -1276,9 +1118,7 @@ object Embeddings {
     */
   private[graft] def nswFrames(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val e0 = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".as("v"))
-      .withColumn("nrm", norm($"v"))
+    val e0 = vectors(spark, dir)
     val e = e0.filter($"vec_id" >= 5).localCheckpoint()
     val q = broadcast(e0.filter($"vec_id" < 5)
       .select($"vec_id".as("qid"), $"v".as("qv"), $"nrm".as("qn")))
@@ -1471,57 +1311,43 @@ object Embeddings {
   // (ProbeNsw, sf0.1: build+persist 6.4 s ONCE, then 1.4–2.0 s per
   // query batch from the artifact, vs 7.4–12.6 s per batch when each
   // rebuilds — the build cost crosses over on the second batch).
-  /** Index WRITERS serialize on nswBuilt's monitor (the buildIvfIndex /
-    * pair-graph contract): a refresh can never interleave its overwrite
-    * with another build, and the read path's double-check excludes a
-    * concurrent first-build of the same root.
+  /** The NSW index's chain layers: `adj` (the src-clustered edge list —
+    * row-group locality and min/max skipping on the beam's join key;
+    * inserts append edge increments) and `vecs` (the appended-vector
+    * archive, absent until the first insert — searches and later inserts
+    * score against corpus ∪ vecs). No resident-id sidecar, deliberately:
+    * the NSW resident set is pred(LIVE corpus) ∪ vecs, not chain-derived,
+    * so a build-time bloom could not soundly prove disjointness;
+    * [[appendNswIndex]]'s guard is exact instead.
     */
-  private val nswBuilt = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private[graft] val Nsw = new ChainIndex.Family("graft_ivf_mv_nsw", "NSW index", Seq(
+    ChainIndex.Layer("adj", ChainIndex.AppendShaped, clusterBy = Seq("src"), sortBy = Seq("src", "dst")),
+    ChainIndex.Layer("vecs", ChainIndex.AppendShaped, clusterBy = Seq("vec_id"), optional = true)))
 
-  private[graft] def nswRoot(dir: String, tag: String = ""): String =
-    graft.ops.ArtifactRoots.path(s"graft_ivf_mv_nsw$tag", Some(dir))
+  private[graft] def nswRoot(dir: String, tag: String = ""): String = Nsw.root(dir, tag)
 
   /** Build + publish the NSW adjacency artifact for `dir`, releasing
     * every build-side checkpoint before returning. Returns the root.
     * `tag`/`pred` parameterize a variant index over a corpus subset (the
     * buildIvfIndex convention — E23's registered query builds its
-    * resident index on 90% of the corpus and appends the rest).
+    * resident index on 90% of the corpus and appends the rest). Each
+    * NN-descent refresh derives from the BASE corpus table only and
+    * starts a new chain — appended vectors not yet merged into the corpus
+    * are superseded by it, the same refresh-owns-the-corpus contract as
+    * the pair-graph MV.
     */
   private[graft] def buildNswIndex(spark: SparkSession, dir: String, tag: String = "",
                                    pred: DataFrame => DataFrame = identity): String =
-    nswBuilt.synchronized {
-      import spark.implicits._
-      val root = graft.ops.ArtifactRoots.register(s"graft_ivf_mv_nsw$tag", Some(dir))
+    Nsw.build(spark, dir, tag) { v =>
       val (e0, _) = nswFrames(spark, dir)
-      // checkpoint registry freed on every exit (the appendNswIndex
-      // discipline): a build failure — including publish-lock contention
-      // — must not strand corpus-sized blocks in a retrying driver
+      // freed on every exit: a build failure must not strand
+      // corpus-sized blocks in a retrying driver
       val ckpts = scala.collection.mutable.ArrayBuffer[DataFrame](e0)
       try {
-        val e = pred(e0)
-        val adj = nswAdjacency(e)
+        val adj = nswAdjacency(pred(e0))
         ckpts += adj
-        // each NN-descent refresh publishes as the next S6v snapshot
-        // version — an E22 reader mid-scan is never yanked by an E20
-        // refresh's overwrite. The adjacency lives in a named `adj` layer
-        // (E23 appends publish batch deltas carrying `adj` increments plus
-        // a `vecs` archive on the same chain); a refresh derives from the
-        // BASE corpus table only and starts a new chain — appended vectors
-        // not yet merged into the corpus are superseded by it, the same
-        // refresh-owns-the-corpus contract as the pair-graph MV.
-        graft.weather.Staging.publishSnapshot(spark, root) { p =>
-          adj.repartition(4, $"src").sortWithinPartitions($"src", $"dst")
-            .write.mode("overwrite").parquet(s"$p/adj")
-          // no IdBloom sidecar for NSW, deliberately: the NSW resident
-          // set is pred(LIVE corpus) ∪ vecs — not chain-derived — so a
-          // build-time bloom could not soundly prove disjointness, and
-          // appendNswIndex's guard is exact (and free: it probes the e
-          // frame the insert beam materializes anyway)
-        }
-        graft.weather.Staging.gcChains(spark, root, keepChains = 2)
+        v.write("adj", adj)
       } finally graft.ops.Ckpt.free(ckpts.toSeq: _*)
-      nswBuilt.put(root, java.lang.Boolean.TRUE)
-      root
     }
 
   /** Answer the standard query batch from a persisted adjacency: the 4
@@ -1585,15 +1411,7 @@ object Embeddings {
     */
   def nswReadTopK(spark: SparkSession, dir: String): DataFrame = {
     val root = nswRoot(dir)
-    // double-checked on the writer monitor, NOT computeIfAbsent (a
-    // same-map put inside the mapping function is an illegal recursive
-    // update; buildNswIndex marks its own root). The inner re-check is
-    // load-bearing: without it two concurrent first readers would each
-    // run a full NN-descent build back to back (correct via the
-    // snapshot publish, but one whole build wasted).
-    if (!nswBuilt.containsKey(root)) nswBuilt.synchronized {
-      if (!nswBuilt.containsKey(root)) { buildNswIndex(spark, dir); () }
-    }
+    Nsw.ensureBuilt(root) { buildNswIndex(spark, dir); () }
     nswQueryFromIndex(spark, dir, root)
   }
 
@@ -1642,42 +1460,27 @@ object Embeddings {
   private[graft] def appendNswIndex(spark: SparkSession, dir: String,
                                     batch: DataFrame, tag: String = "",
                                     pred: DataFrame => DataFrame = identity,
-                                    compactAfterDeltas: Int = 0): Unit =
-      nswBuilt.synchronized {
+                                    compactAfterDeltas: Int = 0): Unit = {
     graft.GraftExtensions.ensure(spark)
     import spark.implicits._
     val S = graft.weather.Staging
     val root = nswRoot(dir, tag)
-    require(nswBuilt.containsKey(root),
-      s"appendNswIndex: no built NSW index for $dir — refresh first")
-    if (!batch.isEmpty) {
-      // every checkpoint lands in `ckpts` the moment it exists, and the
-      // finally frees them all on EVERY exit — including the dup-guard
-      // require and a publish failure, the paths a retrying ingest
-      // driver hits repeatedly. Double-free is safe (unpersist on an
+    Nsw.requireBuilt(root, "appendNswIndex", dir)
+    Nsw.append(spark, root, batch.select($"vec_id", $"v", $"nrm"), "appendNswIndex",
+        compactAfterDeltas) { (b, dirs, v) =>
+      // every checkpoint lands in `ckpts` the moment it exists and is
+      // freed on EVERY exit. Double-free is safe (unpersist on an
       // already-released RDD is a no-op), so e0 stays listed even after
       // corpusWithVecs frees it internally on the union branch.
       val ckpts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       try {
-        val b = batch.select($"vec_id", $"v", $"nrm").localCheckpoint()
-        ckpts += b
         val (e0, _) = nswFrames(spark, dir)
         ckpts += e0
-        // ONE chain pin shared by the vecs union and the adjacency read
-        val dirs = S.chainDirs(spark, root)
         val (eCk, e) = corpusWithVecs(spark, dirs, e0, pred)
         ckpts += eCk
-        // ingest-contract guard: a resident vec_id re-ingested would land
-        // duplicate vecs rows and double-score every beam candidate.
-        // EXACT by construction, deliberately NOT bloom-first: unlike IVF
-        // and the pair graph, whose resident sets are chain-derived, the
-        // NSW resident set references the LIVE corpus table
-        // (pred(corpus) ∪ vecs) — a sidecar written at build time covers
-        // only the build-time corpus, so a bloom-first probe would miss
-        // corpus rows added since the build and admit a duplicate. The
-        // exact semi-join costs nothing extra here: the insert beam
-        // already materialized e (corpus∪vecs, checkpointed above), so
-        // the guard probes a frame this append constructs regardless.
+        // ingest-contract guard, exact (see above): a resident vec_id
+        // re-ingested would land duplicate vecs rows and double-score
+        // every beam candidate
         val dup = b.select($"vec_id")
           .join(e.select($"vec_id"), Seq("vec_id"), "left_semi")
           .limit(1).count()
@@ -1701,17 +1504,10 @@ object Embeddings {
           .unionByName(found.select($"dst".as("src"), $"src".as("dst")))
           .unionByName(bbEdges)
           .distinct()
-        S.publishSnapshotDelta(spark, root) { p =>
-          graft.ops.Par.all(
-            () => delta.repartition(4, $"src").sortWithinPartitions($"src", $"dst")
-              .write.mode("overwrite").parquet(s"$p/adj"),
-            () => b.repartition(4, $"vec_id").sortWithinPartitions($"vec_id")
-              .write.mode("overwrite").parquet(s"$p/vecs"))
-        }
+        graft.ops.Par.all(
+          () => v.write("adj", delta),
+          () => v.write("vecs", b))
       } finally graft.ops.Ckpt.free(ckpts.toSeq: _*)
-      if (compactAfterDeltas > 0 &&
-          S.chainVersions(spark, root).size - 1 > compactAfterDeltas)
-        compactNswIndex(spark, root)
     }
   }
 
@@ -1726,53 +1522,31 @@ object Embeddings {
     * union, final query beam — so incremental ingest is certified
     * end-to-end, not just protocol-tested.
     */
-  def nswAppendTopK(spark: SparkSession, dir: String): DataFrame = {
+  def nswAppendTopK(spark: SparkSession, dir: String): DataFrame =
+    nswHeldOutTopK(spark, dir, "incr")(_ => ())
+
+  /** E23's pipeline on index variant `tag`; `maintain` runs on the root
+    * after the insert, before the query beam. */
+  private def nswHeldOutTopK(spark: SparkSession, dir: String, tag: String)(
+      maintain: String => Unit): DataFrame = {
     graft.GraftExtensions.ensure(spark)
     import spark.implicits._
     val pred: DataFrame => DataFrame = _.filter($"vec_id" % 10 =!= 7)
-    val root = buildNswIndex(spark, dir, "incr", pred)
-    val batch = Tables.embeddings(spark, dir)
-      .filter($"vec_id" >= 5 && $"vec_id" % 10 === 7)
-      .select($"vec_id", $"embedding".as("v"))
-      .withColumn("nrm", norm($"v"))
-    appendNswIndex(spark, dir, batch, "incr", pred)
+    val root = buildNswIndex(spark, dir, tag, pred)
+    appendNswIndex(spark, dir, vectors(spark, dir).filter($"vec_id" >= 5 && $"vec_id" % 10 === 7),
+      tag, pred)
+    maintain(root)
     nswQueryFromIndex(spark, dir, root, pred)
       .withColumn("is_new", ($"cid" % 10 === 7).cast("int"))
   }
 
   /** Compact the NSW chain (full build + N insert deltas) into ONE new
-    * full version: adj = the chain union rewritten src-clustered, vecs =
-    * the appended-vector archive unioned (it must survive — searches and
-    * later appends score against corpus ∪ vecs). A pure artifact
-    * rewrite, no NN-descent; the [[compactIvfIndex]] contract applied to
-    * the graph index. Delta-less chain = no-op.
+    * full version: adj = the chain union, vecs = the appended-vector
+    * archive unioned (it must survive — searches and later appends score
+    * against corpus ∪ vecs). A pure artifact rewrite, no NN-descent.
     */
   private[graft] def compactNswIndex(spark: SparkSession, root: String): Unit =
-    nswBuilt.synchronized {
-      import spark.implicits._
-      val S = graft.weather.Staging
-      // ONE pinned chain resolution for both layers (the compactIvfIndex
-      // rationale: adj and vecs must come from the same chain)
-      val dirs = S.chainDirs(spark, root)
-      if (dirs.size > 1) {
-        val adj = S.readChainIn(spark, dirs, "adj")
-        val vecs =
-          if (S.chainHasLayerIn(spark, dirs, "vecs")) Some(S.readChainIn(spark, dirs, "vecs"))
-          else None
-        S.publishSnapshot(spark, root) { p =>
-          graft.ops.Par.all(
-            () => adj.repartition(4, $"src").sortWithinPartitions($"src", $"dst")
-              .write.mode("overwrite").parquet(s"$p/adj"),
-            () => vecs.foreach(_.repartition(4, $"vec_id").sortWithinPartitions($"vec_id")
-              .write.mode("overwrite").parquet(s"$p/vecs")))
-          // no sidecar (see buildNswIndex: the NSW guard is exact, not
-          // bloom-first, because its resident set references the live
-          // corpus table)
-        }
-        S.gcChains(spark, root, keepChains = 2)
-        ()
-      }
-    }
+    Nsw.compact(spark, root)
 
   /** E25 NSW compaction as a REGISTERED, oracle-checked query — E24's
     * convention applied to the graph index: the E23 pipeline runs
@@ -1793,22 +1567,12 @@ object Embeddings {
     * Round14Spec/Round15Spec; what the oracle adds here is the
     * compacted-artifact correctness through the registered read path.
     */
-  def nswCompactTopK(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.ensure(spark)
-    import spark.implicits._
-    val pred: DataFrame => DataFrame = _.filter($"vec_id" % 10 =!= 7)
-    val root = buildNswIndex(spark, dir, "cmp", pred)
-    val batch = Tables.embeddings(spark, dir)
-      .filter($"vec_id" >= 5 && $"vec_id" % 10 === 7)
-      .select($"vec_id", $"embedding".as("v"))
-      .withColumn("nrm", norm($"v"))
-    appendNswIndex(spark, dir, batch, "cmp", pred)
-    compactNswIndex(spark, root)
-    require(graft.weather.Staging.chainVersions(spark, root).size == 1,
-      "emb_nsw_compact: compaction did not collapse the chain")
-    nswQueryFromIndex(spark, dir, root, pred)
-      .withColumn("is_new", ($"cid" % 10 === 7).cast("int"))
-  }
+  def nswCompactTopK(spark: SparkSession, dir: String): DataFrame =
+    nswHeldOutTopK(spark, dir, "cmp") { root =>
+      compactNswIndex(spark, root)
+      require(graft.weather.Staging.chainVersions(spark, root).size == 1,
+        "emb_nsw_compact: compaction did not collapse the chain")
+    }
 
   /** One beam-search round's CTEs, parameterized by adjacency / corpus /
     * query table names and a CTE-name prefix — E23's oracle runs TWO
@@ -2170,9 +1934,7 @@ object Embeddings {
     import spark.implicits._
     val shortk = udaf(new graft.functions.TopKCodesAggregator(25),
       org.apache.spark.sql.Encoders.product[graft.functions.ScoredCode])
-    val eRaw = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".as("v"))
-      .withColumn("nrm", norm($"v"))
+    val eRaw = vectors(spark, dir)
     // ONE plain cache of the vectors spans ALL phases — the 2+1 Lloyd
     // training collects, the encode scan, the ADC query tables and the
     // re-rank fetch. untilConsumed would be wrong here: the first
@@ -2347,9 +2109,7 @@ object Embeddings {
     import spark.implicits._
     val shortk = udaf(new graft.functions.TopKCodesAggregator(25),
       org.apache.spark.sql.Encoders.product[graft.functions.ScoredCode])
-    val eRaw = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding".as("v"))
-      .withColumn("nrm", norm($"v"))
+    val eRaw = vectors(spark, dir)
     val e = eRaw.cache()
     val cents = lloydCentroids(e, k = 10, iters = 5)
     val centsSeq = pqCodebookSeq(e)
@@ -2493,10 +2253,7 @@ object Embeddings {
     import spark.implicits._
     val topk = udaf(new graft.functions.TopKAggregator(25),
       org.apache.spark.sql.Encoders.product[graft.functions.Scored])
-    val e = graft.ops.ScopedCache.untilConsumed(
-      Tables.embeddings(spark, dir)
-        .select($"vec_id", $"embedding".as("v"))
-        .withColumn("nrm", norm($"v")))
+    val e = graft.ops.ScopedCache.untilConsumed(vectors(spark, dir))
     val q = e.filter($"vec_id" < 5)
       .select($"vec_id".as("qid"), $"v".as("qv"), $"nrm".as("qn"))
     val c = e.filter($"vec_id" >= 5)

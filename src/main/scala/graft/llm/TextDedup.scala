@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.ops.ChainIndex
 
 /** Deduplication operators for LLM training-data pipelines, over the driver
   * `documents` table (doc_id, text, lang, source, n_chars).
@@ -403,61 +404,53 @@ object TextDedup {
   // pairs, union them into /pairs, and re-run CC seeded from the stored
   // labels — per-day cost is batch-sized, the full refresh becomes a
   // periodic compaction (the S12 story).
-  // built-this-process memo + the writers' monitor; path/nonce/cleanup
-  // machinery shared with every MV family via graft.ops.ArtifactRoots
-  private val pgBuilt = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  /** The pair-graph MV's chain layers. `sigs` ((band, sig)-clustered —
+    * the append probe's join key) and `sizes` are the signature index and
+    * set sizes appendPairGraphMv probes, so an append never re-shingles
+    * the resident corpus (the L8 asymmetric-index discipline); `pairs`
+    * (doc_a-clustered) is the verified pair layer; `batchdocs` archives
+    * appended batch text (absent until the first append — later appends
+    * re-shingle resident candidate PARTNERS from corpus ∪ batchdocs, and
+    * a prior batch's docs are not in the corpus table); `labels` (doc_id,
+    * component) is rewritten in full by every mutation. Resident ids =
+    * sizes ∪ batchdocs: a <3-word appended doc never shingles and so has
+    * NO sizes row — sizes alone would let a replay of such a doc through.
+    * Edge left open deliberately: a BASE-corpus <3-word doc re-ingested
+    * as a "new" batch doc is not caught (the corpus table is not
+    * scanned), but it is harmless — a shingle-less doc has no sigs, is
+    * never a candidate partner, and its duplicate batchdocs row can never
+    * reach the verify join.
+    */
+  private[graft] val PairGraph = new ChainIndex.Family("graft_pairgraph_mv", "pair-graph MV",
+    Seq(
+      ChainIndex.Layer("sigs", ChainIndex.AppendShaped, clusterBy = Seq("band", "sig")),
+      ChainIndex.Layer("sizes", ChainIndex.AppendShaped, clusterBy = Seq("doc_id")),
+      ChainIndex.Layer("pairs", ChainIndex.AppendShaped,
+        clusterBy = Seq("doc_a"), sortBy = Seq("doc_a", "doc_b")),
+      ChainIndex.Layer("batchdocs", ChainIndex.AppendShaped, clusterBy = Seq("doc_id"), optional = true),
+      ChainIndex.Layer("labels", ChainIndex.RewriteShaped, clusterBy = Seq("doc_id"))),
+    Some(ChainIndex.ResidentIds("doc_id", Seq("sizes", "batchdocs"))))
 
-  private[graft] def pairGraphRoot(dir: String): String =
-    graft.ops.ArtifactRoots.path("graft_pairgraph_mv", Some(dir))
+  private[graft] def pairGraphRoot(dir: String): String = PairGraph.root(dir)
 
   /** Derive the pair graph FRESH (never reading the MV's own previous
-    * output) and publish both layers: `/pairs` (doc_a, doc_b, n_common,
-    * n_a, n_b, jaccard) clustered on doc_a, and `/labels` (doc_id,
-    * component) clustered on doc_id — component = min doc_id reachable,
-    * the algorithm-independent labeling the C3 oracle certifies. CC runs
-    * over the READ-BACK pairs artifact, so the labels' lineage roots at
-    * the artifact (one corpus-sized LSH job total) and the iteration's
-    * localCheckpoints never re-plan the shingle pipeline. Returns the
-    * root.
-    */
-  /** Concurrency contract: all three mutators — refresh, append, the
-    * build-on-first-read — serialize on pgBuilt's monitor (at most one
-    * WRITER per process and dataset at a time), and every mutation
-    * publishes through the S6v chain protocol, so readers concurrent
-    * with a refresh or append only ever observe complete committed
-    * versions — committed snap dirs are immutable and chain GC retains
-    * the previous chain for readers that resolved it (the VACUUM
-    * retention contract).
+    * output) and publish every layer as one full version: component =
+    * min doc_id reachable, the algorithm-independent labeling the C3
+    * oracle certifies. Returns the root. Every mutation (refresh, append,
+    * compaction, the build-on-first-read) serializes on the family's
+    * writer monitor and publishes through the S6v chain protocol, so
+    * readers only ever observe complete committed versions, and a crash
+    * anywhere inside a mutation leaves the MV at its previous committed
+    * version.
     */
   private[graft] def refreshPairGraphMv(spark: SparkSession, dir: String): String =
-    pgBuilt.synchronized {
-      val root = doRefreshPairGraph(spark, dir)
-      pgBuilt.put(root, java.lang.Boolean.TRUE)
-      root
-    }
-
-  /** Every mutation of the MV is one ATOMIC commit since round 14: the
-    * refresh publishes all four layers (sigs, sizes, pairs, labels) as
-    * one S6v FULL snapshot version, an append publishes its batch-sized
-    * increments plus the relabel as one DELTA version on the same chain
-    * (Staging.publishSnapshotDelta). Readers resolve the chain — latest
-    * full + committed deltas — so a reader holding a version is isolated
-    * from any concurrent refresh or append (committed dirs are
-    * immutable), and a crash ANYWHERE inside a mutation leaves no
-    * marker: the MV stays at its previous committed version, internally
-    * consistent, no wholesale invalidation needed (the round-13 catch
-    * block that deleted the root out from under pinned readers is gone
-    * with the hazard it patched).
-    */
-  private def doRefreshPairGraph(spark: SparkSession, dir: String): String = {
-    import spark.implicits._
-    val root = graft.ops.ArtifactRoots.register("graft_pairgraph_mv", Some(dir))
-    // plain cache + explicit release (not ScopedCache): the shingle frame
-    // is consumed by THREE write actions here, and the scoped form would
-    // release it after the first
-    val sh = shingles(Tables.documents(spark, dir)).cache()
-    try {
-      graft.weather.Staging.publishSnapshot(spark, root) { p =>
+    PairGraph.build(spark, dir) { v =>
+      import spark.implicits._
+      // plain cache + explicit release (not ScopedCache): the shingle
+      // frame is consumed by THREE write actions here, and the scoped
+      // form would release it after the first
+      val sh = shingles(Tables.documents(spark, dir)).cache()
+      try {
         // sig deliberately NOT cached despite three consumers: the
         // candidate self-join's two sides share one ReusedExchange when
         // the plan stays lazy, and an A/B showed caching it doubles the
@@ -465,34 +458,19 @@ object TextDedup {
         // severing that reuse
         val sig = minhashBandSigs(sh)
         val szs = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-        // the signature index and set sizes ARE part of the artifact: they
-        // are what appendPairGraphMv probes, so an append never re-shingles
-        // the resident corpus (the L8 asymmetric-index discipline). The
-        // index is (band, sig)-clustered — the probe join's key.
         // The four top-level chains overlap on the driver pool (guide
-        // §2.6, r16): sigs ∥ sizes ∥ bloom ∥ the pair chain. Round-17
-        // change INSIDE the pair chain: the r16 form serialized labels
-        // after the pairs WRITE (CC re-read the written parquet, so the
-        // chain was verify → write → CC rounds → labels write, end to
-        // end). Now the verified pair set is materialized ONCE as an
-        // eager checkpoint — the same lineage truncation the artifact
-        // read-back gave (CC's iteration plans against a LogicalRDD
-        // leaf, never the shingle pipeline) — and the pairs write and
-        // the CC→labels chain consume the persisted blocks in PARALLEL
-        // (nested Par.all), exactly the shape the append path already
-        // uses (newPairs ckpt → pairs write ∥ relabel). Both layers
-        // still commit in the ONE snapshot version, so labels-vs-pairs
-        // consistency stays a single-marker fact; the checkpoint is
-        // freed on every exit including publish failure.
+        // §2.6): sigs ∥ sizes ∥ bloom ∥ the pair chain. Inside the pair
+        // chain the verified pair set is materialized ONCE as an eager
+        // checkpoint (CC's iteration plans against a LogicalRDD leaf,
+        // never the shingle pipeline), and the pairs write and the
+        // CC→labels chain consume it in PARALLEL — the append path's
+        // shape. The checkpoint is freed on every exit.
         graft.ops.Par.all(
-          () => sig.repartition(4, $"band", $"sig").sortWithinPartitions($"band", $"sig")
-            .write.mode("overwrite").parquet(s"$p/sigs"),
-          () => szs.repartition(4, $"doc_id").sortWithinPartitions($"doc_id")
-            .write.mode("overwrite").parquet(s"$p/sizes"),
-          // resident-id bloom sidecar over the shingled ids — exactly the
-          // set this version contributes to [[residentDocIds]] (a fresh
-          // refresh starts a new chain, so there is no batchdocs layer yet)
-          () => graft.ops.IdBloom.write(spark, p, szs.select($"doc_id"), "doc_id"),
+          () => v.write("sigs", sig),
+          () => v.write("sizes", szs),
+          // a fresh refresh starts a new chain, so its resident ids are
+          // exactly the shingled ones (no batchdocs layer yet)
+          () => v.bloom(szs),
           () => {
             val cand = sig.as("a").join(sig.as("b"),
                 $"a.band" === $"b.band" && $"a.sig" === $"b.sig" && $"a.doc_id" < $"b.doc_id")
@@ -500,22 +478,13 @@ object TextDedup {
             val vp = verifiedPairs(cand, sh, sh, szs, szs).localCheckpoint()
             try {
               graft.ops.Par.all(
-                () => vp.repartition(4, $"doc_a").sortWithinPartitions($"doc_a", $"doc_b")
-                  .write.mode("overwrite").parquet(s"$p/pairs"),
-                () => graft.ops.Graph.connectedComponents(vp.select($"doc_a", $"doc_b"))
-                  .select($"node".as("doc_id"), $"component")
-                  .repartition(4, $"doc_id").sortWithinPartitions($"doc_id")
-                  .write.mode("overwrite").parquet(s"$p/labels"))
+                () => v.write("pairs", vp),
+                () => v.write("labels", graft.ops.Graph.connectedComponents(vp.select($"doc_a", $"doc_b"))
+                  .select($"node".as("doc_id"), $"component")))
             } finally graft.ops.Ckpt.free(vp)
           })
-      }
-    } finally { sh.unpersist(false); () }
-    // a refresh starts a NEW chain; retain the previous chain for its
-    // readers, drop anything older (the VACUUM contract — retention must
-    // exceed the longest-running reader)
-    graft.weather.Staging.gcChains(spark, root, keepChains = 2)
-    root
-  }
+      } finally { sh.unpersist(false); () }
+    }
 
   /** The verified near-dup pair layer across the current chain (full
     * refresh + every committed append batch) — the artifact C12's oracle
@@ -524,10 +493,10 @@ object TextDedup {
   private[graft] def pairGraphPairs(spark: SparkSession, dir: String): DataFrame =
     graft.weather.Staging.readChain(spark, pairGraphRoot(dir), "pairs")
 
-  /** Incremental batch ingest into a BUILT pair-graph MV — the per-day
-    * path of the 100 TB daily-crawl shape (the full refresh becomes a
-    * periodic compaction, the S12 story). Per-batch cost is batch-bounded
-    * everywhere:
+  /** Incremental batch ingest into a pair-graph MV BUILT in this process
+    * — the per-day path of the 100 TB daily-crawl shape (the full refresh
+    * becomes a periodic compaction, the S12 story). Per-batch cost is
+    * batch-bounded everywhere:
     *  - the batch is shingled and signed once (batch-sized);
     *  - candidates = batch probes the STORED (band, sig) index (the L8
     *    asymmetric join — never resident×resident) plus the batch's own
@@ -536,109 +505,43 @@ object TextDedup {
     *    the resident side (a semi-join-pruned corpus scan; batch side
     *    reuses its cached shingles), with resident set sizes read from
     *    the stored /sizes — no corpus-wide recompute;
-    *  - relabeling runs CC over the batch's new pairs UNION one star edge
-    *    per already-labeled doc (component → member), so the iteration
-    *    state is (labels + new-pairs)-sized and existing components merge
-    *    correctly when a batch doc bridges them. Labels stay exactly
-    *    "min doc_id reachable" — identical to a full rebuild
+    *  - relabeling runs CC over the ROOT graph of the batch's new pairs,
+    *    so the iteration state is merge-frontier-sized. Labels stay
+    *    exactly "min doc_id reachable" — identical to a full rebuild
     *    (PairGraphMvSpec pins append == rebuild on a split corpus).
     * The batch frame must carry (doc_id, text) with doc_ids disjoint from
-    * the resident corpus (CDC-style ingest contract).
-    */
-  /** `compactAfterDeltas` > 0 opts into auto-compaction: when the chain
-    * holds more than that many delta versions after this append,
-    * [[compactPairGraphMv]] collapses it under the same writer monitor —
-    * the operational form of ProbeAppend's measured trigger.
-    */
-  /** `idempotent = true` (the streaming-sink mode): instead of the loud
-    * require, rows already resident are DROPPED and only the remainder
-    * appends — an entirely-replayed micro-batch publishes nothing, which
-    * is what turns foreachBatch's at-least-once delivery into
-    * exactly-once on the chain. The filter runs inside the writers'
-    * monitor, so two concurrent idempotent ingests of overlapping
-    * batches serialize (the second lands only what the first didn't).
+    * the resident corpus (CDC-style ingest contract). The dup guard,
+    * idempotent (streaming-sink) mode, empty-batch and auto-compaction
+    * contract is [[graft.ops.ChainIndex.Family.append]]'s; a resident
+    * doc_id re-ingested would land duplicate sizes and sigs rows,
+    * multiplying rows through the verify size-join. Auto-compaction
+    * operationalizes the trigger the chain-append measurements in
+    * SURVEY.md price (each retained delta adds one small scan to every
+    * chain read).
     */
   private[graft] def appendPairGraphMv(spark: SparkSession, dir: String,
                                        batch: DataFrame,
                                        compactAfterDeltas: Int = 0,
-                                       idempotent: Boolean = false): String = pgBuilt.synchronized {
-    import spark.implicits._
+                                       idempotent: Boolean = false): String = {
     val root = pairGraphRoot(dir)
-    require(pgBuilt.containsKey(root),
-      s"appendPairGraphMv: no built pair-graph MV for $dir — refresh first")
-    // an EMPTY batch publishes nothing (the streaming-sink contract) and
-    // pays nothing: the short-circuit runs BEFORE the dup guard's probe,
-    // so routinely-empty micro-batches cost one isEmpty probe
-    if (!batch.isEmpty) {
-      // ONE pinned chain resolution shared by the guard and the append
-      // body (the readers' chainDirs discipline)
-      val dirs = graft.weather.Staging.chainDirs(spark, root)
-      // ingest-contract guard: a batch doc_id already resident would land
-      // duplicate sizes and sigs rows, multiplying rows through the
-      // verify size-join and silently corrupting pairs/labels. The
-      // resident-id set is sizes ∪ batchdocs ([[residentDocIds]]): a
-      // <3-word appended doc never shingles and so has NO sizes row —
-      // sizes alone would let a replay of such a doc through. Cost
-      // (round-16): bloom-first via the per-version IdBloom sidecars —
-      // every version's blob covers exactly what it contributes to
-      // residentDocIds (refresh: sizes ids; delta: ALL batch ids, short
-      // docs included) — so the exact sizes∪batchdocs scan runs only for
-      // flagged ids: O(batch) steady state, O(resident) only on the
-      // replay/false-positive path.
-      if (idempotent) {
-        val b0 = batch.select($"doc_id", $"text").localCheckpoint()
-        val ckpts = scala.collection.mutable.ArrayBuffer[DataFrame](b0)
-        try {
-          val fresh = graft.ops.IdBloom.filterFresh(spark, dirs, b0, "doc_id",
-            residentDocIds(spark, dirs))
-          val f =
-            if (fresh eq b0) b0
-            else { val c = fresh.localCheckpoint(); ckpts += c; c }
-          if (!f.isEmpty) appendNonEmpty(spark, root, dir, f, dirs)
-        } finally graft.ops.Ckpt.free(ckpts.toSeq: _*)
-      } else {
-        require(!graft.ops.IdBloom.overlaps(spark, dirs, batch, "doc_id",
-            residentDocIds(spark, dirs)),
-          s"appendPairGraphMv: batch re-ingests doc_ids already resident in $root — " +
-            "doc_ids must be disjoint (CDC ingest contract)")
-        appendNonEmpty(spark, root, dir, batch, dirs)
-      }
-      if (compactAfterDeltas > 0 &&
-          graft.weather.Staging.chainVersions(spark, root).size - 1 > compactAfterDeltas)
-        compactPairGraphMv(spark, dir): Unit
-    }
+    PairGraph.requireBuilt(root, "appendPairGraphMv", dir)
+    PairGraph.append(spark, root, batch.select(col("doc_id"), col("text")), "appendPairGraphMv",
+      compactAfterDeltas, idempotent)(pairGraphDelta(spark, dir))
     root
   }
 
-  /** Every doc_id resident in the MV's current chain: sizes (all
-    * shingled docs — base corpus + appended) ∪ batchdocs (EVERY appended
-    * doc, including <3-word docs that never shingle and so never get a
-    * sizes row). This is the replay-detection set shared by the append
-    * dup guard and the streaming sink's idempotence anti-join — sizes
-    * alone would miss a replayed short doc (duplicate batchdocs rows,
-    * one extra delta per replay). Edge left open deliberately: a
-    * BASE-corpus <3-word doc re-ingested as a "new" batch doc is not
-    * caught (the corpus table is not scanned), but it is harmless — a
-    * shingle-less doc has no sigs, is never a candidate partner, and
-    * its duplicate batchdocs row can never reach the verify join.
-    */
-  private[graft] def residentDocIds(spark: SparkSession, dirs: Seq[String]): DataFrame = {
-    val S = graft.weather.Staging
-    val sz = S.readChainIn(spark, dirs, "sizes").select(col("doc_id"))
-    if (S.chainHasLayerIn(spark, dirs, "batchdocs"))
-      sz.unionByName(S.readChainIn(spark, dirs, "batchdocs").select(col("doc_id")))
-    else sz
-  }
-
-  private def appendNonEmpty(spark: SparkSession, root: String, dir: String,
-                             batch: DataFrame, dirs: Seq[String]): Unit = {
+  /** One append's delta version: the batch's sigs/sizes/pairs/batchdocs
+    * increments, its bloom, and the full relabel. */
+  private def pairGraphDelta(spark: SparkSession, dir: String)(
+      batch: DataFrame, dirs: Seq[String], v: ChainIndex.Version): Unit = {
     import spark.implicits._
+    val S = graft.weather.Staging
     val bsh = shingles(batch).cache()
     try {
       val bsig = minhashBandSigs(bsh)
       val bszs = bsh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-      val esig = graft.weather.Staging.readChainIn(spark, dirs, "sigs")
-      val eszs = graft.weather.Staging.readChainIn(spark, dirs, "sizes")
+      val esig = S.readChainIn(spark, dirs, "sigs")
+      val eszs = S.readChainIn(spark, dirs, "sizes")
       // asymmetric probe: batch → resident index (da = batch, db = resident)
       val candBE = bsig.as("a").join(esig.as("b"),
           $"a.band" === $"b.band" && $"a.sig" === $"b.sig")
@@ -651,14 +554,12 @@ object TextDedup {
       // The resident side is corpus ∪ PREVIOUSLY APPENDED batches — the
       // corpus table alone would silently drop any cross-batch pair on
       // the second and later appends (partner shingles would be absent,
-      // the verify intersection empty, the component merge lost); each
-      // append therefore also archives its batch text in its delta's
-      // batchdocs layer, batch-sized per append
+      // the verify intersection empty, the component merge lost)
+      val corpus = Tables.documents(spark, dir).select($"doc_id", $"text")
       val residentDocs =
-        if (graft.weather.Staging.chainHasLayerIn(spark, dirs, "batchdocs"))
-          Tables.documents(spark, dir).select($"doc_id", $"text")
-            .unionByName(graft.weather.Staging.readChainIn(spark, dirs, "batchdocs"))
-        else Tables.documents(spark, dir).select($"doc_id", $"text")
+        if (S.chainHasLayerIn(spark, dirs, "batchdocs"))
+          corpus.unionByName(S.readChainIn(spark, dirs, "batchdocs"))
+        else corpus
       val partners = candBE.select($"db".as("doc_id")).distinct()
       val esh = shingles(
         residentDocs.join(partners, Seq("doc_id"), "left_semi"))
@@ -669,149 +570,67 @@ object TextDedup {
         // relabel input (round-17, guide §2.3 shuffle-fewer-bytes applied
         // to the CC iteration): run CC over the ROOT graph only — each new
         // pair mapped to its endpoints' old component roots (self, when
-        // unlabeled) — then re-point members with ONE join, instead of
-        // feeding CC one star edge per already-labeled doc ∪ the new
-        // pairs. Equivalence: a member's only connectivity is through its
-        // root, so root-level reachability IS full reachability; an old
-        // root is its component's min doc_id, so min-over-roots = min doc
-        // of the merged component, and an unmerged root's label is
-        // itself (the left-join coalesce). The output row set is
-        // unchanged: every old-labeled doc (membership's first branch —
-        // labels components always have ≥2 members, so every labeled doc
-        // appeared in a star edge before) ∪ every new-pair doc (second
-        // branch). Iteration state shrinks from (all labeled docs +
-        // pairs) to (touched roots + batch docs) — at 100 TB the
-        // difference between corpus-sized and merge-frontier-sized CC
-        // rounds; root self-loops (a pair internal to one old component)
-        // add no connectivity and are dropped before the loop.
-        val oldLbl = graft.weather.Staging.readChainLatestIn(spark, dirs, "labels")
-        // ONE delta version carries the batch's sigs/sizes/pairs/batchdocs
-        // increments plus the full relabel; the commit marker is the
-        // atomic point — a failure anywhere in here leaves no marker, the
-        // MV stays at its previous committed version (still internally
-        // consistent), and the batch can simply be retried
-        graft.weather.Staging.publishSnapshotDelta(spark, root) { p =>
-          // six INDEPENDENT write chains (labels' CC reads star + the
-          // newPairs checkpoint, not the written pairs file) — overlapped
-          // on the driver pool, wall = max(layer) not Σ(layer) (guide §2.6)
-          graft.ops.Par.all(
-            () => newPairs.repartition(4, $"doc_a").sortWithinPartitions($"doc_a", $"doc_b")
-              .write.mode("overwrite").parquet(s"$p/pairs"),
-            () => bsig.repartition(4, $"band", $"sig").sortWithinPartitions($"band", $"sig")
-              .write.mode("overwrite").parquet(s"$p/sigs"),
-            () => bszs.repartition(4, $"doc_id").sortWithinPartitions($"doc_id")
-              .write.mode("overwrite").parquet(s"$p/sizes"),
-            () => batch.select($"doc_id", $"text")
-              .repartition(4, $"doc_id").sortWithinPartitions($"doc_id")
-              .write.mode("overwrite").parquet(s"$p/batchdocs"),
-            () => {
-              val np = newPairs.select($"doc_a", $"doc_b")
-              val rp = np
-                .join(oldLbl.select($"doc_id".as("doc_a"), $"component".as("ra")),
-                  Seq("doc_a"), "left")
-                .join(oldLbl.select($"doc_id".as("doc_b"), $"component".as("rb")),
-                  Seq("doc_b"), "left")
-                .select(coalesce($"ra", $"doc_a").as("u"), coalesce($"rb", $"doc_b").as("v"))
-                .filter($"u" =!= $"v")
-              val merged = graft.ops.Graph.connectedComponents(rp)
-                .select($"node".as("root"), $"component".as("mc"))
-              // re-point: old members via their root (left join — unmerged
-              // components keep their label); docs NEW to the label set are
-              // exactly merged's nodes absent from the old labels (every
-              // new-pair doc reaches CC as its own root, and old roots all
-              // have a labels row), so one anti-join recovers them
-              val relabeled = oldLbl.select($"doc_id", $"component".as("root"))
-                .join(merged, Seq("root"), "left")
-                .select($"doc_id", coalesce($"mc", $"root").as("component"))
-              val newDocLbl = merged.select($"root".as("doc_id"), $"mc".as("component"))
-                .join(oldLbl.select($"doc_id"), Seq("doc_id"), "left_anti")
-              relabeled.unionByName(newDocLbl)
-                .repartition(4, $"doc_id").sortWithinPartitions($"doc_id")
-                .write.mode("overwrite").parquet(s"$p/labels")
-            },
-            // bloom over ALL batch ids (matching the batchdocs layer, so a
-            // replayed <3-word doc is flagged too — the short-doc hole)
-            () => graft.ops.IdBloom.write(spark, p, batch.select($"doc_id"), "doc_id"))
-        }
-      // freed on EVERY exit: a publish-lock failure is a retry path, and
-      // a retrying ingest driver must not leak a pairs-sized checkpoint
-      // per attempt
+        // unlabeled) — then re-point members with ONE join. Equivalence:
+        // a member's only connectivity is through its root, so root-level
+        // reachability IS full reachability; an old root is its
+        // component's min doc_id, so min-over-roots = min doc of the
+        // merged component, and an unmerged root's label is itself (the
+        // left-join coalesce). Iteration state shrinks from (all labeled
+        // docs + pairs) to (touched roots + batch docs); root self-loops
+        // (a pair internal to one old component) add no connectivity and
+        // are dropped before the loop.
+        val oldLbl = S.readChainLatestIn(spark, dirs, "labels")
+        // six INDEPENDENT write chains (labels' CC reads the newPairs
+        // checkpoint, not the written pairs file) — overlapped on the
+        // driver pool, wall = max(layer) not Σ(layer) (guide §2.6)
+        graft.ops.Par.all(
+          () => v.write("pairs", newPairs),
+          () => v.write("sigs", bsig),
+          () => v.write("sizes", bszs),
+          () => v.write("batchdocs", batch),
+          () => {
+            val np = newPairs.select($"doc_a", $"doc_b")
+            val rp = np
+              .join(oldLbl.select($"doc_id".as("doc_a"), $"component".as("ra")),
+                Seq("doc_a"), "left")
+              .join(oldLbl.select($"doc_id".as("doc_b"), $"component".as("rb")),
+                Seq("doc_b"), "left")
+              .select(coalesce($"ra", $"doc_a").as("u"), coalesce($"rb", $"doc_b").as("v"))
+              .filter($"u" =!= $"v")
+            val merged = graft.ops.Graph.connectedComponents(rp)
+              .select($"node".as("root"), $"component".as("mc"))
+            // re-point: old members via their root (left join — unmerged
+            // components keep their label); docs NEW to the label set are
+            // exactly merged's nodes absent from the old labels (every
+            // new-pair doc reaches CC as its own root, and old roots all
+            // have a labels row), so one anti-join recovers them
+            val relabeled = oldLbl.select($"doc_id", $"component".as("root"))
+              .join(merged, Seq("root"), "left")
+              .select($"doc_id", coalesce($"mc", $"root").as("component"))
+            val newDocLbl = merged.select($"root".as("doc_id"), $"mc".as("component"))
+              .join(oldLbl.select($"doc_id"), Seq("doc_id"), "left_anti")
+            v.write("labels", relabeled.unionByName(newDocLbl))
+          },
+          // bloom over ALL batch ids (matching the batchdocs layer, so a
+          // replayed <3-word doc is flagged too — the short-doc hole)
+          () => v.bloom(batch))
       } finally graft.ops.Ckpt.free(newPairs)
     } finally { bsh.unpersist(false); () }
   }
 
-  /** Compact the MV's current chain (full version + N append deltas)
-    * into ONE new full version — a pure artifact rewrite, NO
-    * re-derivation: the append-shaped layers (sigs, sizes, pairs,
-    * batchdocs) are each the chain union rewritten with their standard
-    * clustering, labels come from the newest version (every mutation
-    * rewrites them in full). Read-equivalent to the chain it replaces by
-    * construction, so every consumer and every later append sees
-    * identical data — including cross-batch pair verification, because
-    * the archived batchdocs ride along into the compacted version.
-    *
-    * This is the maintenance op ProbeAppend's measured slope prices:
-    * each retained delta adds ~one small scan to every chain read
-    * (~0.06 s/dir at sf0.1), so a long-running ingest compacts when
-    * Σ per-read delta overhead approaches the compaction bill. Unlike a
-    * [[refreshPairGraphMv]] (which re-shingles and re-verifies the whole
-    * corpus — derivation-sized), compaction costs one artifact
-    * read+write — at 100 TB that is the difference between rewriting the
-    * index files and re-running LSH over the corpus. Publishes through
-    * the same S6v protocol as every other mutation: one commit marker,
-    * concurrent readers keep their resolved chain (previous chain
-    * retained by the VACUUM contract), a crash commits nothing. A
-    * delta-less chain is a no-op.
+  /** Compact the MV's chain into ONE full version — a pure artifact
+    * rewrite, NO re-derivation: read-equivalent to the chain it replaces,
+    * including cross-batch pair verification (batchdocs rides along).
+    * Unlike a [[refreshPairGraphMv]] (which re-shingles and re-verifies
+    * the whole corpus), compaction costs one artifact read+write. Needs a
+    * build in this process.
     */
-  private[graft] def compactPairGraphMv(spark: SparkSession, dir: String): String =
-    pgBuilt.synchronized {
-      import spark.implicits._
-      val S = graft.weather.Staging
-      val root = pairGraphRoot(dir)
-      require(pgBuilt.containsKey(root),
-        s"compactPairGraphMv: no built pair-graph MV for $dir — refresh first")
-      // ONE pinned chain resolution for all five layers (the readers'
-      // chainDirs discipline): a cross-process writer or GC between
-      // independent readChain calls could otherwise pair layers from
-      // different chains in the compacted version
-      val dirs = S.chainDirs(spark, root)
-      if (dirs.size > 1) {
-        S.publishSnapshot(spark, root) { p =>
-          // six independent chain-union rewrites overlapped on the driver
-          // pool (guide §2.6, r16)
-          graft.ops.Par.all(
-            () => S.readChainIn(spark, dirs, "sigs")
-              .repartition(4, $"band", $"sig").sortWithinPartitions($"band", $"sig")
-              .write.mode("overwrite").parquet(s"$p/sigs"),
-            () => S.readChainIn(spark, dirs, "sizes")
-              .repartition(4, $"doc_id").sortWithinPartitions($"doc_id")
-              .write.mode("overwrite").parquet(s"$p/sizes"),
-            () => S.readChainIn(spark, dirs, "pairs")
-              .repartition(4, $"doc_a").sortWithinPartitions($"doc_a", $"doc_b")
-              .write.mode("overwrite").parquet(s"$p/pairs"),
-            // appended batch text must survive compaction: later appends
-            // re-shingle resident candidate PARTNERS from corpus ∪ batchdocs,
-            // and a prior batch's docs are not in the corpus table
-            () => if (S.chainHasLayerIn(spark, dirs, "batchdocs"))
-              S.readChainIn(spark, dirs, "batchdocs")
-                .repartition(4, $"doc_id").sortWithinPartitions($"doc_id")
-                .write.mode("overwrite").parquet(s"$p/batchdocs"),
-            () => S.readChainLatestIn(spark, dirs, "labels")
-              .repartition(4, $"doc_id").sortWithinPartitions($"doc_id")
-              .write.mode("overwrite").parquet(s"$p/labels"),
-            // ONE fresh bloom recomputed over exactly the id set this
-            // version contributes to residentDocIds (sizes ∪ batchdocs,
-            // both unions already in hand) — never a copy: carrying every
-            // historical blob forward would grow probe cost and union fpp
-            // linearly with appends ever made (the compactIvfIndex
-            // rationale), and recompute heals a sidecar-less chain
-            () => graft.ops.IdBloom.write(spark, p, residentDocIds(spark, dirs), "doc_id"))
-        }
-        S.gcChains(spark, root, keepChains = 2)
-        ()
-      }
-      root
-    }
+  private[graft] def compactPairGraphMv(spark: SparkSession, dir: String): String = {
+    val root = pairGraphRoot(dir)
+    PairGraph.requireBuilt(root, "compactPairGraphMv", dir)
+    PairGraph.compact(spark, root)
+    root
+  }
 
   /** Component labels (doc_id, component) of the near-dup pair graph,
     * build-once per (process, dataset): the first consumer pays the
@@ -823,17 +642,8 @@ object TextDedup {
     */
   private[graft] def componentLabels(spark: SparkSession, dir: String): DataFrame = {
     val root = pairGraphRoot(dir)
-    // double-checked on the shared writer monitor (NOT computeIfAbsent:
-    // a same-map put inside the mapping function is an illegal recursive
-    // update, and the bin lock would not exclude a concurrent refresh)
-    if (!pgBuilt.containsKey(root)) pgBuilt.synchronized {
-      if (!pgBuilt.containsKey(root)) {
-        doRefreshPairGraph(spark, dir)
-        pgBuilt.put(root, java.lang.Boolean.TRUE); ()
-      }
-    }
-    // labels are rewrite-shaped (every version carries the full table):
-    // read from the newest committed chain version
+    PairGraph.ensureBuilt(root) { refreshPairGraphMv(spark, dir); () }
+    // labels are rewrite-shaped: read from the newest committed version
     graft.weather.Staging.readChainLatest(spark, root, "labels")
   }
 
@@ -1088,20 +898,24 @@ object TextDedup {
     // convergence action and the final join would recompute the
     // signature aggregation from scratch.
     val sig = simhashSigs(spark, dir).cache()
-    val grp = sig.groupBy($"sig").agg(min($"doc_id").as("rep"), count(lit(1)).as("n"))
-    val repPairs = simhashBandJoin(
-      simhashBands(grp.select($"rep".as("doc_id"), $"sig")))
-      .select($"doc_a", $"doc_b")
-    val ccRep = graft.ops.Graph.connectedComponents(repPairs)
-      .select($"node".as("rep"), $"component")
-    val out = sig.join(grp, Seq("sig"))
-      .join(ccRep, Seq("rep"), "left")
-      .filter($"n" >= 2 || $"component".isNotNull)
-      .select($"doc_id", coalesce($"component", $"rep").as("lbl"))
-      .groupBy($"lbl".as("cluster_root"))
-      .agg(count(lit(1)).as("n_members"), max($"doc_id").as("max_doc"))
-      .filter($"n_members" >= 2)
-      .orderBy($"cluster_root")
+    // the release watcher registers only once `out` exists: if CC throws
+    // first, release the cache here or it lives for the whole session
+    val out = try {
+      val grp = sig.groupBy($"sig").agg(min($"doc_id").as("rep"), count(lit(1)).as("n"))
+      val repPairs = simhashBandJoin(
+        simhashBands(grp.select($"rep".as("doc_id"), $"sig")))
+        .select($"doc_a", $"doc_b")
+      val ccRep = graft.ops.Graph.connectedComponents(repPairs)
+        .select($"node".as("rep"), $"component")
+      sig.join(grp, Seq("sig"))
+        .join(ccRep, Seq("rep"), "left")
+        .filter($"n" >= 2 || $"component".isNotNull)
+        .select($"doc_id", coalesce($"component", $"rep").as("lbl"))
+        .groupBy($"lbl".as("cluster_root"))
+        .agg(count(lit(1)).as("n_members"), max($"doc_id").as("max_doc"))
+        .filter($"n_members" >= 2)
+        .orderBy($"cluster_root")
+    } catch { case t: Throwable => sig.unpersist(false); throw t }
     graft.ops.ScopedCache.untilResultConsumed(sig, out)
   }
 

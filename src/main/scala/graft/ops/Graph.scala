@@ -183,51 +183,35 @@ object Graph {
   def useMaterializedBackbone(path: String): Unit = { mvSource = Some(path) }
   def clearMaterializedBackbone(): Unit = { mvSource = None }
 
-  /** Built-this-process memo for the backbone MV (the C22/E21 pattern
-    * applied to the graph family's one shared fixed cost): the first
-    * kernel to need the backbone pays the refresh, every later g2–g8
-    * run reads the endpoint-clustered artifact — derive once, read
-    * many, the shape a production DAG runs and the round-12 verdict's
-    * single biggest remaining suite-time lever (~5 s of re-derived
-    * projection per kernel, 9 kernels). g0_backbone_mv keeps billing
-    * the refresh every run (the honest build bill), exactly like
-    * emb_ivf_mv vs emb_ivf_read. Writers serialize on this map's
-    * monitor; the dataset-immutability contract is componentLabels'.
+  /** The backbone MV as a chain family: ONE rewrite-shaped layer, the
+    * (u, v, shared) edge list written endpoint-clustered directly in the
+    * version dir. Its build-once memo is the C22/E21 pattern applied to
+    * the graph family's one shared fixed cost: the first kernel to need
+    * the backbone pays the refresh, every later g2–g8 run reads the
+    * artifact — derive once, read many (~5 s of re-derived projection per
+    * kernel, 9 kernels). g0_backbone_mv keeps billing the refresh every
+    * run (the honest build bill), exactly like emb_ivf_mv vs
+    * emb_ivf_read. The dataset-immutability contract is componentLabels'.
     */
-  private val bbBuilt = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  private[graft] def memoBackbone(spark: SparkSession, dir: String): DataFrame = {
-    val root = backboneRoot(dir)
-    // double-checked on the writer monitor, NOT computeIfAbsent (a
-    // same-map put inside the mapping function is an illegal recursive
-    // update; refreshBackboneMv marks its own root)
-    if (!bbBuilt.containsKey(root)) bbBuilt.synchronized {
-      if (!bbBuilt.containsKey(root)) { refreshBackboneMv(spark, dir); () }
-    }
-    graft.weather.Staging.readSnapshot(spark, root)
-  }
+  private[graft] val Backbone = new ChainIndex.Family("graft_backbone_mv", "backbone MV",
+    Seq(ChainIndex.Layer("", ChainIndex.RewriteShaped, clusterBy = Seq("u"), sortBy = Seq("u", "v"))))
 
   private[graft] def backboneEdges(spark: SparkSession, dir: String): DataFrame =
-    mvSource match {
-      // the MV path encodes a hash of the canonical dataset dir, so the
-      // guard is exact: a kernel asked about a DIFFERENT dataset while
-      // the switch is on must derive fresh, never silently read the
-      // materialized dataset's backbone (wrong data, no error)
-      case Some(p) if p == backboneRoot(dir) =>
-        graft.weather.Staging.readSnapshot(spark, p).select(col("u"), col("v"))
-      case _ => memoBackbone(spark, dir).select(col("u"), col("v"))
-    }
+    backboneWeighted(spark, dir).select(col("u"), col("v"))
 
-  /** Weighted twin of [[backboneEdges]]: (u, v, shared), reading the MV
+  /** Weighted twin of [[backboneEdges]]: (u, v, shared), read from the MV
     * (explicit switch or the build-once memo — the MV stores the weight
     * column since round 11).
     */
-  private[graft] def backboneWeighted(spark: SparkSession, dir: String): DataFrame =
-    mvSource match {
-      case Some(p) if p == backboneRoot(dir) =>
-        graft.weather.Staging.readSnapshot(spark, p).select(col("u"), col("v"), col("shared"))
-      case _ => memoBackbone(spark, dir).select(col("u"), col("v"), col("shared"))
-    }
+  private[graft] def backboneWeighted(spark: SparkSession, dir: String): DataFrame = {
+    // the MV path encodes a hash of the canonical dataset dir, so the
+    // switch guard is exact: a kernel asked about a DIFFERENT dataset
+    // while the switch is on builds its own, never silently reads the
+    // materialized dataset's backbone (wrong data, no error)
+    val root = backboneRoot(dir)
+    if (!mvSource.contains(root)) Backbone.ensureBuilt(root) { refreshBackboneMv(spark, dir); () }
+    graft.weather.Staging.readSnapshot(spark, root).select(col("u"), col("v"), col("shared"))
+  }
 
   /** Degree cap for the bipartite projection's self-join. The projection
     * is Σ(customer-degree²): one hub customer connected to d suppliers
@@ -466,36 +450,20 @@ object Graph {
     * deleted by a JVM shutdown hook — they live exactly as long as the
     * session that can read them (useMaterializedBackbone).
     */
-  // path/nonce/cleanup machinery lives in graft.ops.ArtifactRoots (one
-  // copy for every MV family); readers resolve with path(), the refresh
-  // registers before its first write
-  def backboneRoot(dir: String): String =
-    ArtifactRoots.path("graft_backbone_mv", Some(dir))
+  def backboneRoot(dir: String): String = Backbone.root(dir)
 
   /** The refresh body shared by G0 and the G9 pipeline: derive the
     * WEIGHTED backbone fresh (never reading the MV's own previous
-    * output), publish it endpoint-clustered, return the read-back frame.
+    * output), publish it as the next snapshot version, return the
+    * read-back frame. A snapshot publish, not an in-place overwrite:
+    * g2–g8 are CONCURRENT readers of this path, so a refresh racing a
+    * kernel's scan must never yank its files — the reader's resolved
+    * snap dir stays immutable and the previous version is retained.
     */
-  private[graft] def refreshBackboneMv(spark: SparkSession, dir: String): DataFrame =
-    bbBuilt.synchronized {
-      import spark.implicits._
-      val root = ArtifactRoots.register("graft_backbone_mv", Some(dir))
-      // S6v snapshot publish, not an in-place overwrite: g2–g8 are
-      // CONCURRENT readers of this path since the round-13 memoization,
-      // so a refresh racing a kernel's scan must never yank its files —
-      // the reader's resolved snap dir stays immutable, the commit
-      // marker is the swap, and keep=2 retains the previous version for
-      // readers that resolved it (the same protocol as the NSW
-      // adjacency and IVF cells+centroids artifacts)
-      graft.weather.Staging.publishSnapshot(spark, root) { p =>
-        deriveBackboneWeighted(spark, dir)
-          .repartition(4, $"u").sortWithinPartitions($"u", $"v")
-          .write.mode("overwrite").parquet(p)
-      }
-      graft.weather.Staging.gcSnapshots(spark, root, keep = 2)
-      bbBuilt.put(root, java.lang.Boolean.TRUE)
-      graft.weather.Staging.readSnapshot(spark, root)
-    }
+  private[graft] def refreshBackboneMv(spark: SparkSession, dir: String): DataFrame = {
+    val root = Backbone.build(spark, dir) { v => v.write("", deriveBackboneWeighted(spark, dir)) }
+    graft.weather.Staging.readSnapshot(spark, root)
+  }
 
   def backboneMaterialize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

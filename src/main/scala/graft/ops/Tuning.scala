@@ -75,7 +75,7 @@ object Tuning {
     *    an 8-core session would use max(8, 9)=9 partitions while the
     *    32-core one uses 32 slower-in-absolute partitions, driving the
     *    8/32 ratio BELOW 1. The ≈1.0 core-scaling ratios at sf0.1 are a
-    *    property of the data scale (69 MiB of parquet: nothing to
+    *    property of the data scale (17 MB of parquet: nothing to
     *    parallelize past ~9 shuffle tasks), not of the formula — the
     *    large branch below explicitly grows with both bytes and cores,
     *    and SPARK_GRAFT_SHUFFLE_PARTS stays the experiment override.

@@ -273,15 +273,27 @@ object Staging {
     * leaves the table at its previous version with only an orphan data
     * dir to clean up (which re-publishing overwrites).
     */
-  def publishSnapshot(spark: SparkSession, root: String)(write: String => Unit): Long = {
+  def publishSnapshot(spark: SparkSession, root: String)(write: String => Unit): Long =
+    publishVersion(spark, root, delta = false)(write)
+
+  /** The one publish body behind [[publishSnapshot]] and
+    * [[publishSnapshotDelta]]: lock, next version, clear a pre-commit
+    * orphan, write, tag a delta, create the commit marker.
+    */
+  private def publishVersion(spark: SparkSession, root: String, delta: Boolean)(
+      write: String => Unit): Long = {
     import org.apache.hadoop.fs.Path
     val fs = fsOf(spark, root)
-    fs.mkdirs(new Path(root))
+    if (!delta) fs.mkdirs(new Path(root))
     withPublishLock(fs, root, "snapshot publish") {
-      val next = currentSnapshotVersion(spark, root).getOrElse(-1L) + 1
+      val cur = currentSnapshotVersion(spark, root)
+      if (delta && cur.isEmpty)
+        throw new java.io.IOException(s"no committed snapshot under $root to extend with a delta")
+      val next = cur.getOrElse(-1L) + 1
       val data = new Path(snapDir(root, next))
       fs.delete(data, true) // orphan from a pre-commit crash of this version
       write(data.toString)
+      if (delta) fs.create(deltaTag(root, next), false).close()
       fs.create(commitMarker(root, next), false).close()
       next
     }
@@ -293,25 +305,19 @@ object Staging {
     * with old centroids would score against the wrong quantizer).
     */
   def currentSnapshotDir(spark: SparkSession, root: String): String =
-    currentSnapshotVersion(spark, root) match {
-      case Some(v) => snapDir(root, v)
-      case None => throw new java.io.IOException(s"no committed snapshot under $root")
-    }
+    snapDir(root, currentOrThrow(spark, root))
+
+  private def currentOrThrow(spark: SparkSession, root: String): Long =
+    currentSnapshotVersion(spark, root).getOrElse(
+      throw new java.io.IOException(s"no committed snapshot under $root"))
 
   /** Reads the table at its current committed snapshot. */
   def readSnapshot(spark: SparkSession, root: String): DataFrame =
-    currentSnapshotVersion(spark, root) match {
-      case Some(v) => readSnapshotAt(spark, root, v)
-      case None => throw new java.io.IOException(s"no committed snapshot under $root")
-    }
+    readSnapshotAt(spark, root, currentOrThrow(spark, root))
 
   /** Time travel: reads a specific retained version. */
-  def readSnapshotAt(spark: SparkSession, root: String, v: Long): DataFrame = {
-    val fs = fsOf(spark, root)
-    if (!fs.exists(commitMarker(root, v)))
-      throw new java.io.IOException(s"snapshot $v of $root is not committed (or was GC'd)")
-    readLayerDir(spark, snapDir(root, v))
-  }
+  def readSnapshotAt(spark: SparkSession, root: String, v: Long): DataFrame =
+    readLayerDir(spark, snapshotDirAt(spark, root, v))
 
   /** S6 MERGE with snapshot isolation: dedup-merge `incoming` into the
     * current snapshot (freshest file_modified wins per unique key — the
@@ -336,18 +342,22 @@ object Staging {
     * there; this guard turns that misuse into an error.
     */
   def gcSnapshots(spark: SparkSession, root: String, keep: Int = 2): Seq[Long] = {
-    import org.apache.hadoop.fs.Path
     require(keep >= 1, "must retain at least the current snapshot")
     val vs = committedVersions(spark, root)
     require(!vs.exists(v => isDeltaVersion(spark, root, v)),
       s"$root has delta versions — raw-version retention would strand them; use gcChains")
+    dropVersions(spark, root, vs.dropRight(keep))
+  }
+
+  /** Deletes these versions, markers first (new readers can no longer
+    * resolve them), then data; returns them. */
+  private def dropVersions(spark: SparkSession, root: String, vs: Seq[Long]): Seq[Long] = {
     val fs = fsOf(spark, root)
-    val old = vs.dropRight(keep)
-    old.foreach { v =>
+    vs.foreach { v =>
       fs.delete(commitMarker(root, v), false)
-      fs.delete(new Path(snapDir(root, v)), true)
+      fs.delete(new org.apache.hadoop.fs.Path(snapDir(root, v)), true)
     }
-    old
+    vs
   }
 
   // -----------------------------------------------------------------
@@ -384,21 +394,8 @@ object Staging {
     * orphan the next publish of that version overwrites. Requires an
     * existing committed version to extend.
     */
-  def publishSnapshotDelta(spark: SparkSession, root: String)(write: String => Unit): Long = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(spark, root)
-    withPublishLock(fs, root, "snapshot publish") {
-      val cur = currentSnapshotVersion(spark, root).getOrElse(
-        throw new java.io.IOException(s"no committed snapshot under $root to extend with a delta"))
-      val next = cur + 1
-      val data = new Path(snapDir(root, next))
-      fs.delete(data, true) // orphan from a pre-commit crash of this version
-      write(data.toString)
-      fs.create(deltaTag(root, next), false).close()
-      fs.create(commitMarker(root, next), false).close()
-      next
-    }
-  }
+  def publishSnapshotDelta(spark: SparkSession, root: String)(write: String => Unit): Long =
+    publishVersion(spark, root, delta = true)(write)
 
   /** The current chain: the latest committed FULL version and every
     * committed delta after it, oldest first. Throws on an empty table or
@@ -550,7 +547,6 @@ object Staging {
     * chain reads.
     */
   def gcChains(spark: SparkSession, root: String, keepChains: Int = 2): Seq[Long] = {
-    import org.apache.hadoop.fs.Path
     require(keepChains >= 1, "must retain at least the current chain")
     val vs = committedVersions(spark, root)
     val fullIdxs = vs.zipWithIndex.collect {
@@ -558,13 +554,7 @@ object Staging {
     }
     if (fullIdxs.length <= keepChains) return Seq.empty
     val cutoff = fullIdxs(fullIdxs.length - keepChains) // first retained version index
-    val fs = fsOf(spark, root)
-    val doomed = vs.take(cutoff)
-    doomed.foreach { v =>
-      fs.delete(commitMarker(root, v), false)
-      fs.delete(new Path(snapDir(root, v)), true)
-    }
-    doomed
+    dropVersions(spark, root, vs.take(cutoff))
   }
 
   /** V1 schema gate, FAILFAST flavor: any malformed document raises and

@@ -175,7 +175,10 @@ class Round14Spec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val (pairsBefore, labelsBefore) = (pairSet(baseDir), labelSet(baseDir))
       // compaction is a pure rewrite: one full version, identical reads
-      llm.TextDedup.compactPairGraphMv(spark, baseDir)
+      // of every layer by its true shape, the sidecar recomputed
+      Round14Spec.assertCompactionPreservesLayers(spark, root, Round14Spec.PairGraphLayers) {
+        llm.TextDedup.compactPairGraphMv(spark, baseDir)
+      }
       assert(Staging.chainVersions(spark, root).size === 1)
       assert(pairSet(baseDir) === pairsBefore)
       assert(labelSet(baseDir) === labelsBefore)
@@ -224,7 +227,9 @@ class Round14Spec extends SparkSpec {
     val setBefore = S.readChain(spark, root, "cells")
       .select($"vec_id", $"cell").collect().toSet
     val centsBefore = S.readChainLatest(spark, root, "centroids").collect().toSet
-    llm.Embeddings.compactIvfIndex(spark, root)
+    Round14Spec.assertCompactionPreservesLayers(spark, root, Round14Spec.IvfLayers) {
+      llm.Embeddings.compactIvfIndex(spark, root)
+    }
     // one full version; identical rows; the quantizer did not move
     assert(S.chainVersions(spark, root).size === 1)
     assert(S.readChain(spark, root, "cells")
@@ -308,7 +313,9 @@ class Round14Spec extends SparkSpec {
       llm.Embeddings.appendNswIndex(spark, scratch, clones(3000000L).limit(0))
       assert(Staging.currentSnapshotVersion(spark, root) === vBefore)
       // compaction: one full version, identical results, appends continue
-      llm.Embeddings.compactNswIndex(spark, root)
+      Round14Spec.assertCompactionPreservesLayers(spark, root, Round14Spec.NswLayers) {
+        llm.Embeddings.compactNswIndex(spark, root)
+      }
       assert(Staging.chainVersions(spark, root).size === 1)
       val compacted = llm.Embeddings.nswReadTopK(spark, scratch).collect().map(_.toSeq)
       assert(compacted.toSeq === after.map(_.toSeq).toSeq)
@@ -397,5 +404,58 @@ class Round14Spec extends SparkSpec {
       assert(last <= lastBound,
         f"$q%s final pass blown twice: ${(ts :+ last).map(t => f"$t%.2f").mkString(",")}%s (last bound $lastBound%.2f)")
     }
+  }
+}
+
+object Round14Spec {
+  import org.apache.spark.sql.SparkSession
+
+  /** The TRUE read shape of every chain layer of one artifact family and
+    * whether its versions carry an id-bloom sidecar — spelled out here,
+    * independently of the families' layer tables, so a wrong shape in a
+    * table (say, labels declared append-shaped) fails the compaction pins.
+    */
+  final case class TrueLayers(appendShaped: Seq[String], rewriteShaped: Seq[String], bloom: Boolean)
+
+  val IvfLayers = TrueLayers(Seq("cells"), Seq("centroids"), bloom = true)
+  val NswLayers = TrueLayers(Seq("adj", "vecs"), Nil, bloom = false)
+  val PairGraphLayers =
+    TrueLayers(Seq("sigs", "sizes", "pairs", "batchdocs"), Seq("labels"), bloom = true)
+
+  /** Every layer the current chain carries, read by its true shape
+    * (append-shaped: the chain union; rewrite-shaped: the newest
+    * carrier), as a row multiset per layer.
+    */
+  def layerRows(spark: SparkSession, root: String, t: TrueLayers): Map[String, Map[Seq[Any], Int]] =
+    (t.appendShaped ++ t.rewriteShaped).filter(Staging.chainHasLayer(spark, root, _)).map { l =>
+      val df =
+        if (t.appendShaped.contains(l)) Staging.readChain(spark, root, l)
+        else Staging.readChainLatest(spark, root, l)
+      l -> df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (r, rs) => r -> rs.size }
+    }.toMap
+
+  /** Whether the chain's FULL version carries an `idbloom/` sidecar. */
+  def fullVersionHasBloom(spark: SparkSession, root: String): Boolean = {
+    val full = Staging.snapshotDirAt(spark, root, Staging.chainVersions(spark, root).head)
+    new java.io.File(s"$full/idbloom").isDirectory
+  }
+
+  /** Runs `compact` and checks it collapsed the chain into one full
+    * version that reads row-identically, layer by layer and by true
+    * shape, and carries a sidecar exactly when the family has resident
+    * ids.
+    */
+  def assertCompactionPreservesLayers(spark: SparkSession, root: String, t: TrueLayers)(
+      compact: => Unit): Unit = {
+    val before = layerRows(spark, root, t)
+    assert(Staging.chainVersions(spark, root).size > 1, "nothing to compact — the pin is vacuous")
+    compact
+    assert(Staging.chainVersions(spark, root).size == 1, "compaction left more than one version")
+    val after = layerRows(spark, root, t)
+    assert(after.keySet == before.keySet, s"layers ${before.keySet} became ${after.keySet}")
+    for (l <- before.keys)
+      assert(after(l) == before(l), s"layer $l reads differently after compaction")
+    assert(fullVersionHasBloom(spark, root) == t.bloom,
+      s"compacted version idbloom/ present=${!t.bloom}, want ${t.bloom}")
   }
 }

@@ -66,6 +66,11 @@ class Round15Spec extends SparkSpec {
     assert(S.readChainLatest(spark, rootA, "centroids").collect().toSet
       === S.readChainLatest(spark, rootN, "centroids").collect().toSet,
       "compaction moved the frozen quantizer")
+    // every layer, by its true shape, reads as on the never-compacted
+    // twin; the compacted full version recomputed its sidecar
+    val L = Round14Spec.IvfLayers
+    assert(Round14Spec.layerRows(spark, rootA, L) === Round14Spec.layerRows(spark, rootN, L))
+    assert(Round14Spec.fullVersionHasBloom(spark, rootA) === L.bloom)
     // the bound IS the read cost: one FileSourceScan per chain dir in the
     // union read, so the compacted chain plans 2 scans where the
     // never-compacted twin plans 5
@@ -99,6 +104,9 @@ class Round15Spec extends SparkSpec {
       .select($"vec_id").collect().map(_.getLong(0)).toSet
     assert(adj(rootA) === adj(rootN))
     assert(vecIds(rootA) === vecIds(rootN))
+    val L = Round14Spec.NswLayers
+    assert(Round14Spec.layerRows(spark, rootA, L) === Round14Spec.layerRows(spark, rootN, L))
+    assert(Round14Spec.fullVersionHasBloom(spark, rootA) === L.bloom)
     assert(vecIds(rootA).size === 20, "4 clone batches x 5 vectors must all survive compaction")
     // identical query answers through the production read path
     val qA = llm.Embeddings.nswQueryFromIndex(spark, sfDir, rootA).collect().map(_.toSeq).toSeq
@@ -144,6 +152,9 @@ class Round15Spec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(pairSet(dirA) === pairSet(dirN))
       assert(labelSet(dirA) === labelSet(dirN))
+      val L = Round14Spec.PairGraphLayers
+      assert(Round14Spec.layerRows(spark, rootA, L) === Round14Spec.layerRows(spark, rootN, L))
+      assert(Round14Spec.fullVersionHasBloom(spark, rootA) === L.bloom)
     } finally {
       graft.ops.ArtifactRoots.delete(dirA)
       graft.ops.ArtifactRoots.delete(dirN)
@@ -227,6 +238,29 @@ class Round15Spec extends SparkSpec {
     } finally graft.ops.ArtifactRoots.delete(scratch)
   }
 
+  test("simhash clusters: a connected-components failure releases the cached signatures") {
+    val scratch = java.nio.file.Files.createTempDirectory("graft_r15_simhash_fail").toString
+    try {
+      val docs = s"$scratch/documents.parquet"
+      Tables.documents(spark, sfDir).write.parquet(docs)
+      // resolve the schema while the files are intact; then corrupt
+      // every data file, so the first read — inside CC's first action,
+      // after the signature cache is registered — throws
+      Tables.documents(spark, scratch).schema
+      for (f <- new java.io.File(docs).listFiles() if f.getName.endsWith(".parquet"))
+        java.nio.file.Files.write(f.toPath, "not parquet".getBytes("UTF-8"))
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      // non-adaptive execution (the engine's mode below 1 GiB) registers
+      // the signature cache for storage when CC plans it — before the
+      // read that fails
+      val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try intercept[Exception](llm.TextDedup.simhashClusters(spark, scratch))
+      finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      awaitNoLeak(before, "simhash clusters after a CC failure")
+    } finally graft.ops.ArtifactRoots.delete(scratch)
+  }
+
   test("chained-artifact reads: repeated passes over multi-delta indexes stay flat with zero leaked blocks") {
     import org.apache.spark.sql.DataFrame
     // the Round14Spec flatness pin extended to CHAIN-heavy reads (round-14
@@ -253,11 +287,11 @@ class Round15Spec extends SparkSpec {
       val before = spark.sparkContext.getPersistentRDDs.keySet
       // Round-17 robustification (VERDICT r16 item 1, "more passes, not a
       // looser bound"): the driver's r16 run failed this pin with passes
-      // 0.37,0.40,0.42,1.13,1.58 — two slow TAIL passes, yet the committed
-      // graft.ProbeChainFlat reproduction (12 passes, exact block/GC/job
+      // 0.37,0.40,0.42,1.13,1.58 — two slow TAIL passes, yet the 12-pass
+      // reproduction recorded in OPTIMIZATION_r17.md (exact block/GC/job
       // accounting) shows both reads dead flat with ZERO leaked blocks and
       // a CONSTANT per-pass job count, on a box whose same-plan bench
-      // passes vary 5× (OPTIMIZATION_r17.md). A real leak grows storage
+      // passes vary 5×. A real leak grows storage
       // (caught exactly by the `leaked` assert below) and inflates EVERY
       // later pass; a box stall inflates a few. So: 9 passes, and the
       // flatness bound compares the MEDIAN of the last 4 to the median of
