@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
@@ -18,30 +17,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // round-16: shuffle partitions + AQE derived from INPUT SIZE instead
-    // of the core-count constant (graft.ops.Tuning — env-overridable,
-    // production values justified in OPTIMIZATION_r16.md)
-    val spark = graft.ops.Tuning.configure(
-        SparkSession.builder()
-          .master(s"local[$cpus]"),
-        sfDir, cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Opt-in production-DAG mode: materialize the graph backbone ONCE
-    // (the g0 refresh) and point g2–g7 at the parquet MV, so the suite
-    // also shows the plan a production pipeline runs — without the
-    // ~2.5 s/query re-derived projection. Default off: per-query numbers
-    // stay honest (each query pays its own full cost) unless the flag is
-    // set, and the driver's per-round run never sets it.
-    if (sys.env.get("SPARK_GRAFT_BACKBONE_MV").contains("1")) {
-      graft.ops.Graph.backboneMaterialize(spark, sfDir).count()
-      graft.ops.Graph.useMaterializedBackbone(graft.ops.Graph.backboneRoot(sfDir))
-      System.err.println(s"[bench] graph backbone MV enabled at ${graft.ops.Graph.backboneRoot(sfDir)}")
-    }
+    val spark = SparkEntry.session(sfDir, cpus.toInt)
 
     // Optional comma-separated allowlist for local profiling runs.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)

@@ -11,6 +11,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
+  /** The session every main builds: `local[cpus]` (unless `spark-submit`
+    * already chose a master), [[ops.Tuning.configure]]'s settings for the
+    * input under `sfDir`, UTC (the [[Tables.events]] invariant), the native
+    * extensions, no UI, log level WARN.
+    */
+  def session(sfDir: String, cpus: Int): SparkSession = {
+    val b = SparkSession.builder()
+    if (!sys.props.contains("spark.master")) b.master(s"local[$cpus]")
+    val spark = ops.Tuning.configure(b, sfDir, cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     ops.Relational.j1StarJoin(spark, "/root/testdata/sf0.001")

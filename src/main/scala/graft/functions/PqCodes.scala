@@ -28,7 +28,7 @@ case class PqCodeword(cell: Int, cv: Array[Double], halfCn2: Double)
   * paid interpreted higher-order-function machinery per codeword: a
   * `slice` allocation per (row × codeword), a struct allocation per
   * scored cell and a generic-ordering array_max, ~0.75 s per encode
-  * pass at sf0.1 (ProbeAdc, round 11) against ~0.05 s for this loop.
+  * pass at sf0.1 (round 11, SURVEY.md §6.1) against ~0.05 s for this loop.
   * Each training round and each encode saves a pass, and the argmin
   * stays inside whole-stage codegen (generated code calls
   * [[compute]] on the plan-serialized instance).

@@ -309,7 +309,7 @@ object Curation {
     * DISTINCT 8-grams in one pass) + an md5 map; the previous
     * transform-over-`sequence` formulation re-evaluated `split(text, ' ')`
     * per lambda element — O(tokens²) per document (same hazard and fix as
-    * [[TextAnalysis.dupFracCol]], measured in ProbeFunnel round 11).
+    * [[TextAnalysis.dupFracCol]], measured round 11, SURVEY.md §6.1).
     * DISTINCT is safe for every consumer: contamination is a set-
     * membership probe — the probe side is explicitly `.distinct()`ed and
     * the corpus side feeds a left-semi join, so duplicate gram positions

@@ -1193,10 +1193,10 @@ object Embeddings {
     // `adj` job requested cand0 from 2 subtrees, scored0 from 2 and adj0
     // from 3 CONCURRENTLY, so partitions were computed repeatedly before
     // their blocks landed (the driver-observed "Block already exists"
-    // BlockManager warnings; ProbeJobs measured 51 s of task time for a
-    // 2000-vector build). Two jobs total, zero duplicate compute: the
-    // guide §2.4/§5 trade — one extra action buys run-once semantics for
-    // every multi-consumer frame.
+    // BlockManager warnings; 51 s of task time for a 2000-vector build,
+    // OPTIMIZATION_r17.md §emb_nsw_topk). Two jobs total, zero duplicate
+    // compute: the guide §2.4/§5 trade — one extra action buys run-once
+    // semantics for every multi-consumer frame.
     val cand0 = srpCandidates(e).localCheckpoint(false)
     val scored0 = scorePairs(cand0).localCheckpoint(false)
     val adj0 = topOut(scored0).localCheckpoint()
@@ -1308,7 +1308,7 @@ object Embeddings {
   // This is the production split: the graph build amortizes across
   // every query batch until the next NN-descent refresh, and a batch
   // pays only the 4 beam-search equi-joins against the artifact
-  // (ProbeNsw, sf0.1: build+persist 6.4 s ONCE, then 1.4–2.0 s per
+  // (SURVEY.md's E20 entry, sf0.1: build+persist 6.4 s ONCE, then 1.4–2.0 s per
   // query batch from the artifact, vs 7.4–12.6 s per batch when each
   // rebuilds — the build cost crosses over on the second batch).
   /** The NSW index's chain layers: `adj` (the src-clustered edge list —

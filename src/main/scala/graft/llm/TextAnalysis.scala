@@ -676,7 +676,8 @@ object TextAnalysis {
     * re-evaluated `split(text, ' ')` PER LAMBDA INVOCATION — higher-order
     * function bodies are not CSE'd — making this signal O(tokens²) per
     * document: measured 3.8 s → 0.1 s for one sf0.1 corpus pass in a
-    * single task (ProbeFunnel, round 11). Same semantics (same token
+    * single task (round 11, SURVEY.md §6.1; `graft.Diag profile`
+    * re-measures it). Same semantics (same token
     * boundaries, distinct count unchanged), so every oracle using
     * [[dupFracSqlExpr]] is unaffected.
     */

@@ -170,14 +170,13 @@ object Graph {
     * threshold stays exact). Returns the (u < v) edge list, action-
     * scoped-cached for the caller's single consuming action.
     */
-  /** Bench/production indirection for the backbone: when a materialized
-    * path is set (Bench's SPARK_GRAFT_BACKBONE_MV mode, or a production
-    * DAG that ran the g0 refresh), g2–g7 read the endpoint-clustered
-    * parquet MV instead of re-deriving the ~2.5 s co-purchase projection
-    * per query. Default is None — each query pays its own derivation, so
-    * per-query bench accounting stays honest unless the mode is opted
-    * into. The switch is process-wide deliberately: it models the
-    * DAG-level decision "the backbone refresh ran upstream this session".
+  /** Production indirection for the backbone: when a materialized path
+    * is set (a DAG that ran the g0 refresh upstream), g2–g7 read the
+    * endpoint-clustered parquet MV instead of re-deriving the ~2.5 s
+    * co-purchase projection per query. Default is None — each query pays
+    * its own derivation, so per-query bench accounting stays honest. The
+    * switch is process-wide deliberately: it models the DAG-level
+    * decision "the backbone refresh ran upstream this session".
     */
   @volatile private var mvSource: Option[String] = None
   def useMaterializedBackbone(path: String): Unit = { mvSource = Some(path) }
@@ -226,10 +225,9 @@ object Graph {
     * deployment tunes this down (a hub's pairs are the least informative
     * edges: a customer buying from everyone adds +1 to every pair —
     * noise, not signal; Round11Spec quantifies backbone stability under
-    * a binding cap). Env-overridable for probes.
+    * a binding cap; callers pass their own `degCap`).
     */
-  private[graft] val DefaultDegreeCap: Int =
-    sys.env.get("SPARK_GRAFT_BACKBONE_DEGCAP").map(_.toInt).getOrElse(8192)
+  private[graft] val DefaultDegreeCap: Int = 8192
 
   /** Wedge pairs (u < v) of a bipartite (c, s) pair list, degree-capped.
     * Instead of distinct + per-customer self-join (two shuffles of the
@@ -767,9 +765,8 @@ object Graph {
     * 100 TB: each round is one shuffle join on node id; label frames stay
     * node-sized (never edge-sized); localCheckpoint per round truncates
     * the snowballing lineage (the round-4 dupClusters lesson).
-    */
-  /** Round-timing trace for [[connectedComponents]] (env opt-in). Used for
-    * the round-12 A/B that REJECTED pointer-jump doubling: at sf0.1 both
+    *
+    * Pointer-jump doubling was A/B'd and REJECTED (round 12): at sf0.1 both
     * consumers converge in 3 rounds (dup cliques and the co-purchase
     * backbone have tiny diameter), so a second jump per round cannot cut
     * rounds — it only added a checkpoint job per round (isolated A/B:
@@ -779,8 +776,6 @@ object Graph {
     * (>2^20 nodes in a path-ish component), the right move is the
     * two-phase large-star/small-star algorithm, not more jumps here.
     */
-  private lazy val ccVerbose = sys.env.get("SPARK_GRAFT_CC_VERBOSE").contains("1")
-
   def connectedComponents(pairs: DataFrame): DataFrame = {
     import pairs.sparkSession.implicits._
     // round-16 job-count fuse: every round's state is a LAZY local
@@ -808,7 +803,6 @@ object Graph {
     var converged = prevSum.isEmpty
     var rounds = 0
     while (!converged && rounds < 20) {
-      val t0 = if (ccVerbose) System.nanoTime() else 0L
       val neighborMin = edges
         .join(labels.select($"node".as("dst"), $"lbl".as("dst_lbl")), Seq("dst"))
         .groupBy($"src".as("node")).agg(min($"dst_lbl").as("nb_lbl"))
@@ -826,10 +820,6 @@ object Graph {
       graft.ops.Ckpt.free(labels)
       labels = next
       rounds += 1
-      if (ccVerbose) {
-        val t1 = System.nanoTime()
-        println(f"CC round $rounds: round+sum ${(t1 - t0) / 1e9}%.3f converged=$converged")
-      }
     }
     // the edge checkpoint is dead once the loop ends; the final labels
     // frame is what the caller's result reads at action time

@@ -67,16 +67,26 @@ object ScopedCache {
     * later actions complete (the abandonment TTL) or
     * `spark.catalog.clearCache()`.
     */
-  /** Register the release watcher: unpersist `cached` and unregister after
-    * the first completed action whose plan contains `fragment` — or, the
-    * TTL escape hatch, after [[AbandonAfterActions]] completed actions
-    * that DON'T (the scope was abandoned; see the val's scaladoc).
+  /** Register the release watcher: run `releaseFn` and unregister after
+    * the first completed action whose plan contains `watched`'s analyzed
+    * fragment — or, the TTL escape hatch, after [[AbandonAfterActions]]
+    * completed actions that DON'T (the scope was abandoned; see the val's
+    * scaladoc).
+    *
+    * An action counts only if its QueryExecution was created no earlier
+    * than `watched`'s own. The listener bus delivers completions
+    * asynchronously, so an action that ran BEFORE the scope opened — e.g.
+    * the one that materialized a lazy checkpoint the result reads — can
+    * arrive after registration; its plan can match the fragment
+    * (canonicalization ignores alias names), and treating it as the
+    * consumer freed checkpoints the real consumer had yet to read
+    * (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND under a busy bus).
     */
-  private def watchFragment(
-      spark: org.apache.spark.sql.SparkSession,
-      fragment: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      ttlActions: Int = AbandonAfterActions)(
+  private def watchFragment(watched: DataFrame, ttlActions: Int = AbandonAfterActions)(
       releaseFn: () => Unit): Unit = {
+    val spark = watched.sparkSession
+    val fragment = watched.queryExecution.analyzed.canonicalized
+    val openedAt = watched.queryExecution.id
     val released = new AtomicBoolean(false)
     val foreignActions = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener: QueryExecutionListener = new QueryExecutionListener {
@@ -85,7 +95,7 @@ object ScopedCache {
           releaseFn()
           spark.listenerManager.unregister(this)
         }
-      private def maybeRelease(qe: QueryExecution): Unit = {
+      private def maybeRelease(qe: QueryExecution): Unit = if (qe.id >= openedAt) {
         val consumed =
           try qe.analyzed.find(_.canonicalized == fragment).isDefined
           catch { case scala.util.control.NonFatal(_) => false }
@@ -102,16 +112,14 @@ object ScopedCache {
 
   def untilResultConsumed(cached: DataFrame, result: DataFrame): DataFrame = {
     opened.incrementAndGet()
-    watchFragment(cached.sparkSession,
-      result.queryExecution.analyzed.canonicalized)(() => cached.unpersist(false))
+    watchFragment(result)(() => cached.unpersist(false))
     result
   }
 
   def untilConsumed(df: DataFrame): DataFrame = {
     opened.incrementAndGet()
     val cached = df.cache()
-    watchFragment(cached.sparkSession,
-      cached.queryExecution.analyzed.canonicalized)(() => cached.unpersist(false))
+    watchFragment(cached)(() => cached.unpersist(false))
     cached
   }
 
@@ -131,8 +139,7 @@ object ScopedCache {
     // "opened a CACHE scope" to its consumers (Round11Spec pins exact
     // counts per operator); checkpoint scopes have their own counter in
     // [[Ckpt]]
-    watchFragment(result.sparkSession,
-      result.queryExecution.analyzed.canonicalized, ttlActions)(releaseFn)
+    watchFragment(result, ttlActions)(releaseFn)
     result
   }
 }

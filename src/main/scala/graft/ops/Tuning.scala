@@ -10,10 +10,10 @@ package graft.ops
   * parquet) a 32-partition shuffle means every exchange fans tiny rows
   * into 32 tasks and every localCheckpoint materializes 32 near-empty
   * blocks — measured per-query task counts drop 3–8× when partitions are
-  * sized from bytes (ProbeJobs matrix, OPTIMIZATION_r16.md). At 100 TB a
-  * core-count constant is far too LOW: partitions should land in the
-  * 100 MB–1 GB range (guide §2.2), which the same bytes-derived formula
-  * gives when the input is big.
+  * sized from bytes (OPTIMIZATION_r16.md; re-measure with `graft.Diag
+  * profile`). At 100 TB a core-count constant is far too LOW: partitions
+  * should land in the 100 MB–1 GB range (guide §2.2), which the same
+  * bytes-derived formula gives when the input is big.
   *
   * Why AQE off below the threshold: AQE submits one JOB per query stage
   * and re-optimizes the remaining plan at every stage boundary. That is
@@ -25,11 +25,14 @@ package graft.ops
   * threshold) keeps AQE ON with a high partition count and lets
   * coalescing size the reducers — exactly the guide §9 baseline.
   *
-  * Everything is env-overridable so the driver's low-core re-runs and
-  * any future cluster deployment can pin their own values:
+  * These settings are applied on the session builder, so they override
+  * `--conf` values passed to `spark-submit`; the driver's low-core re-runs,
+  * A/B runs and cluster deployments pin them through the environment:
   *   SPARK_GRAFT_SHUFFLE_PARTS — explicit partition count (skips the formula)
   *   SPARK_GRAFT_AQE           — "1"/"0" forces AQE on/off
   *   SPARK_GRAFT_AQE_MIN_BYTES — adaptive threshold (default 1 GiB)
+  * On a non-local path [[inputBytes]] measures 0, which selects the large
+  * branch at 2·cpus partitions — a cluster run pins the first two.
   */
 object Tuning {
 
@@ -101,33 +104,18 @@ object Tuning {
       .config("spark.sql.adaptive.enabled", adaptiveEnabled(bytes).toString)
       // when AQE is on (large inputs) aim reducers at the guide §2.2 band
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "128m")
-      // parallelismFirst stays at Spark's DEFAULT (true): the round-16
-      // value (false) let AQE coalesce a ~0.5 GB window shuffle into a
-      // handful of 128m partitions and starve a 32-core box — measured on
-      // the ≥-threshold probe dataset (ProbeLargeBranch, 0.9 GiB, two
-      // windows): ev_session 56/41 s with false vs 20.9 s with true,
-      // sql_tpch_q18 26.1/18.0 vs 14.8, q21 13.0/10.7 vs 8.9
-      // (OPTIMIZATION_r17.md §large-branch). With true, coalescing still
-      // merges tiny partitions but never below the session parallelism —
-      // the §2.2 target only binds when partitions ≫ cores, which is the
-      // regime where 128m-sized reducers matter anyway.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      // preferSortMergeJoin stays at Spark's default: the r17 A/B
-      // (OPTIMIZATION_r17.md §joins) showed allowing shuffled-hash was
-      // within noise on this suite, and SMJ's graceful spill is the safer
-      // production default.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      // Broadcast threshold stays at Spark's 10 MB default. A 64 MB
-      // small-branch value first measured 1.13× faster on the join-heavy
-      // subset — then the committed plan dumps showed the plans are
-      // IDENTICAL at both thresholds (every broadcastable side already
-      // broadcasts at 10 MB at these sizes), so the "win" was pure
-      // box-drift between sequential runs and was reverted
-      // (OPTIMIZATION_r17.md §joins; the reason every accepted change in
-      // r17 needs plan evidence, not just a timing delta).
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST_THRESHOLD", "10485760"))
+      // The three values below are Spark's defaults, kept explicit: each
+      // was A/B'd against an alternative and kept (OPTIMIZATION_r17.md).
+      // parallelismFirst = true: false let AQE coalesce a ~0.5 GB window
+      // shuffle into a handful of 128m partitions and starve a 32-core box
+      // on the 0.9 GiB input `graft.Diag replicate` synthesizes (ev_session
+      // 56/41 s with false vs 20.9 s with true; §large-branch).
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+      // SMJ preferred: shuffled-hash was within noise, SMJ spills
+      // gracefully (§joins).
+      .config("spark.sql.join.preferSortMergeJoin", "true")
+      // 10 MB broadcast threshold: at 64 MB the plan dumps were identical,
+      // so a measured 1.13× "win" was box drift and was reverted (§joins).
+      .config("spark.sql.autoBroadcastJoinThreshold", "10485760")
   }
 }

@@ -20,17 +20,29 @@ object Pipeline {
 
   case class Paths(rawRoot: String, stagingRoot: String, martsRoot: String)
 
-  /** Reads existing staging if present (first run: empty frame with the
-    * staging schema, built from an empty doc set).
+  /** Reads existing staging. Only a missing table, or one without data
+    * files, counts as the first run (an empty frame with the staging
+    * schema); every other read failure — corrupt or truncated part files,
+    * a column lost to schema drift — propagates, because the caller
+    * overwrites staging with this frame merged with the new files, and an
+    * unreadable table read as empty would drop every earlier day.
     */
-  private def existingStaging(spark: SparkSession, path: String, like: DataFrame): DataFrame =
-    try {
-      val df = spark.read.parquet(path)
-      // partition column comes back — align to the staging column set
-      df.select(like.columns.map(col).toIndexedSeq: _*)
-    } catch {
-      case _: Exception => like.limit(0)
+  private def existingStaging(spark: SparkSession, path: String, like: DataFrame): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def hasDataFile: Boolean = {
+      val files = fs.listFiles(root, true)
+      var found = false
+      while (!found && files.hasNext) {
+        val n = files.next().getPath.getName
+        found = !n.startsWith("_") && !n.startsWith(".")
+      }
+      found
     }
+    if (!fs.exists(root) || !hasDataFile) like.limit(0)
+    // partition column comes back — align to the staging column set
+    else spark.read.parquet(path).select(like.columns.map(col).toIndexedSeq: _*)
+  }
 
   /** Stable logical file identity = what the reference's S3 filename
     * encodes (weather_raw_{city}_{country}_{date}.json,

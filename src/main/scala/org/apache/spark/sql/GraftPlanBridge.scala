@@ -24,3 +24,10 @@ object GraftColumnBridge {
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 }
+
+/** Same-package bridge for the listener bus's drain (private[spark]): a
+  * profiler reads its counters only after every posted event is delivered.
+  */
+object GraftListenerBridge {
+  def drain(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.weather.{Pipeline, WeatherGen}
 
@@ -42,5 +43,32 @@ class PipelineSpec extends SparkSpec {
     // dim rebuilt, key still unique
     val dim = spark.read.parquet(s"${paths.martsRoot}/dim_location")
     assert(graft.weather.Marts.keyIsUniqueAndNotNull(dim, "location_key"))
+  }
+
+  test("an unreadable staging table fails the run and is left untouched") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_pipe_corrupt_").toString
+    val paths = Pipeline.Paths(s"$base/raw", s"$base/staging", s"$base/marts")
+    val now = to_timestamp(lit("2025-03-27 00:00:00"))
+    val all = WeatherGen.docs(spark)
+    Pipeline.runDaily(spark, all.filter(
+      substring($"weather.dateGenerated", 1, 10) =!= "2025-03-28"), paths, now)
+
+    val root = java.nio.file.Paths.get(paths.stagingRoot)
+    def snapshot(): Map[String, Seq[Byte]] = {
+      val files = Files.walk(root)
+      try files.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+      finally files.close()
+    }
+    val parts = snapshot().keys.filter(_.split('/').last.startsWith("part-")).toSeq
+    assert(parts.nonEmpty)
+    parts.foreach(p => Files.write(root.resolve(p), "not a parquet file".getBytes("UTF-8")))
+    val corrupted = snapshot()
+
+    // staging can't be read: the run must fail instead of treating it as
+    // empty and overwriting it with only the new day
+    intercept[Exception](Pipeline.runDaily(spark, all, paths, now))
+    assert(snapshot() == corrupted, "staging files changed")
   }
 }

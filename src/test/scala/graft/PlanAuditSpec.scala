@@ -142,4 +142,33 @@ class PlanAuditSpec extends SparkSpec {
     while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
     assert(leaked.isEmpty, s"queries left persistent RDDs behind: $leaked")
   }
+
+  test("checkpoint release: a completion the bus delivers late is not the scope's consumer") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // hold the shared listener queue at the first job end, so the SQL
+    // completion of the action that materializes `x` arrives only after
+    // the release scope below has opened — the order a busy bus produces
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val blocker = new org.apache.spark.scheduler.SparkListener {
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (armed.compareAndSet(true, false)) gate.await(60, java.util.concurrent.TimeUnit.SECONDS): Unit
+    }
+    sc.addSparkListener(blocker)
+    try {
+      val x = spark.range(100).select($"id".as("lbl")).localCheckpoint(false)
+      armed.set(true)
+      assert(x.agg(org.apache.spark.sql.functions.sum($"lbl")).head().getLong(0) === 4950L)
+      val result = graft.ops.Ckpt.freeOnConsumed(x.select($"lbl".as("v")), Seq(x))
+      gate.countDown()
+      org.apache.spark.sql.GraftListenerBridge.drain(sc)
+      assert(result.collect().map(_.getLong(0)).sum === 4950L)
+      org.apache.spark.sql.GraftListenerBridge.drain(sc)
+      val rddId = x.queryExecution.analyzed.collectFirst {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }.get
+      assert(!sc.getPersistentRDDs.contains(rddId), "consumed checkpoint not released")
+    } finally { gate.countDown(); sc.removeSparkListener(blocker) }
+  }
 }

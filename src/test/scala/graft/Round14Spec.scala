@@ -8,8 +8,8 @@ import graft.weather.Staging
   * refresh + batch-sized append versions), concurrent-reader isolation
   * for the two MV refreshes that round 13 left as in-place overwrites
   * (backbone, pair-graph), and long-session flatness as a TEST (the
-  * ProbeFlat measurement wired into the suite so the Ckpt release
-  * discipline can't silently rot).
+  * repeated-pass measurement `graft.Diag profile` also reports, wired
+  * into the suite so the Ckpt release discipline can't silently rot).
   */
 class Round14Spec extends SparkSpec {
 
@@ -352,7 +352,7 @@ class Round14Spec extends SparkSpec {
   }
 
   test("long-session flatness: 5 passes of checkpoint-heavy queries stay flat, zero leaked blocks") {
-    // the ProbeFlat measurement as a suite pin (round-13 verdict item):
+    // the repeated-pass leak measurement as a suite pin (round-13 verdict item):
     // the r12 leak made consecutive passes of the SAME query slow
     // monotonically (emb_rproj_topk 1.75 -> 6.41 -> 10.09 s at sf0.1,
     // ratio 5.8x) because localCheckpoint blocks survive clearCache. A
