@@ -23,8 +23,19 @@ class TopKAggregator(k: Int) extends Aggregator[Scored, Seq[Scored], Seq[Scored]
   private def best(xs: Seq[Scored]): Seq[Scored] =
     xs.sortBy(s => (-s.sim, s.cid)).take(k)
 
+  /** `a` ranks strictly before `b` in `best`'s order (the same Double
+    * comparison, so NaN and ±0.0 rank as they do under the sort).
+    */
+  private def before(a: Scored, b: Scored): Boolean = {
+    val c = java.lang.Double.compare(-a.sim, -b.sim)
+    c < 0 || (c == 0 && a.cid < b.cid)
+  }
+
   override def zero: Seq[Scored] = Seq.empty
-  override def reduce(buf: Seq[Scored], a: Scored): Seq[Scored] = best(buf :+ a)
+  // the buffer is sorted: a row that cannot enter a full buffer leaves it
+  // untouched, with no sort (most rows, once k good ones are held)
+  override def reduce(buf: Seq[Scored], a: Scored): Seq[Scored] =
+    if (buf.length >= k && !before(a, buf.last)) buf else best(buf :+ a)
   override def merge(b1: Seq[Scored], b2: Seq[Scored]): Seq[Scored] = best(b1 ++ b2)
   override def finish(reduction: Seq[Scored]): Seq[Scored] = reduction
   override def bufferEncoder: Encoder[Seq[Scored]] = ExpressionEncoder[Seq[Scored]]()

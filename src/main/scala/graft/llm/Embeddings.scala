@@ -1140,11 +1140,13 @@ object Embeddings {
     *
     * The NN-descent pass scores only the NEW candidate pairs
     * (`non` anti-join the seed candidates): the seed pairs were already
-    * scored for `adj0`, and cosine is deterministic per pair, so
-    * re-scoring them produced byte-identical rows at one corpus-join's
-    * extra cost — the union of the memoized seed scores with the fresh
-    * scores feeds the final top-out over the IDENTICAL scored set
-    * (cand0 ∪ non = cand0 ∪ (non \ cand0), both sides distinct).
+    * scored for `adj0`, and cosine is deterministic per pair. The final
+    * top-out ranks adj0's own scored edges plus the fresh ones: a
+    * vector's top-5 over all its scored pairs (cand0 ∪ non = cand0 ∪
+    * (non \ cand0), both sides distinct) is its top-5 over its seed
+    * top-5 and its fresh pairs, since the order is total — the same rows
+    * as re-ranking every seed score, from 5 edges per vector instead of
+    * every seed candidate.
     */
   /** Exact-cosine scoring of candidate pairs against corpus `e` — the
     * oracle-certified expression (round to 6dp), shared by the build's
@@ -1160,57 +1162,71 @@ object Embeddings {
       .select($"va", $"vb", $"sim")
   }
 
-  /** Directed 5-NN out-edges from scored pairs: symmetrize, keep each
-    * src's top-5 by (sim desc, dst asc) — the oracle-certified tie
-    * order, via the bounded TopKAggregator (never a full sort).
+  /** Both directions of each scored (va, vb, sim) pair as (src, dst,
+    * sim), from ONE scan of `scored` (a two-element explode per pair): a
+    * union of two projections would plan `scored` twice, and a lazy
+    * scoring subtree (the NN-descent candidates) would be joined and
+    * scored once per direction.
     */
-  private def nswTopOut(scored: DataFrame): DataFrame = {
+  private def nswDirected(scored: DataFrame): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._
-    val topk = udaf(new graft.functions.TopKAggregator(5),
-      org.apache.spark.sql.Encoders.product[graft.functions.Scored])
     scored
-      .select($"va".as("src"), $"vb".as("dst"), $"sim")
-      .unionByName(scored.select($"vb".as("src"), $"va".as("dst"), $"sim"))
-      .groupBy($"src").agg(topk($"dst", $"sim").as("top"))
-      .select($"src", explode($"top").as("s"))
-      .select($"src", $"s.cid".as("dst"))
+      .select(explode(array(
+        struct($"va".as("src"), $"vb".as("dst"), $"sim"),
+        struct($"vb".as("src"), $"va".as("dst"), $"sim"))).as("d"))
+      .select($"d.src".as("src"), $"d.dst".as("dst"), $"d.sim".as("sim"))
+  }
+
+  /** Directed 5-NN out-edges: each src's 5 best (src, dst, sim) edges by
+    * (sim desc, dst asc) — the oracle-certified tie order, NaN last as in
+    * [[graft.functions.TopKAggregator]]. Every vector is a group, so
+    * the rank-≤-5 filter is planned as a per-partition group limit ahead
+    * of the exchange (codegen'd sorts; the typed top-k aggregate falls
+    * back to sort-based aggregation past 128 groups per task).
+    */
+  private def nswTop5(directed: DataFrame): DataFrame = {
+    val spark = directed.sparkSession
+    import spark.implicits._
+    val rank = row_number().over(
+      Window.partitionBy($"src").orderBy(isnan($"sim"), $"sim".desc, $"dst"))
+    directed.withColumn("rk", rank).filter($"rk" <= 5).drop("rk")
   }
 
   private[graft] def nswAdjacency(e: DataFrame): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    def scorePairs(cand: DataFrame): DataFrame = nswScorePairs(e, cand)
-    def topOut(scored: DataFrame): DataFrame = nswTopOut(scored)
-    // cand0 feeds the seed scoring + the anti-join, scored0 feeds adj0's
-    // top-out + the final top-out (the memoized seed scores), adj0 feeds
-    // three consumers (both sides of the NN-descent self-join + the
-    // final union) — each must run once, not per consumer. Round-17 form
-    // (fixing the round-16 all-lazy regression): cand0/scored0 stay LAZY
-    // leaves, but adj0 is EAGER — its one checkpoint job walks the
-    // single-consumer chain cand0 → scored0 → adj0 and persists all
-    // three exactly once. Under the round-16 all-lazy form the final
-    // `adj` job requested cand0 from 2 subtrees, scored0 from 2 and adj0
-    // from 3 CONCURRENTLY, so partitions were computed repeatedly before
-    // their blocks landed (the driver-observed "Block already exists"
-    // BlockManager warnings; 51 s of task time for a 2000-vector build,
-    // OPTIMIZATION_r17.md §emb_nsw_topk). Two jobs total, zero duplicate
-    // compute: the guide §2.4/§5 trade — one extra action buys run-once
-    // semantics for every multi-consumer frame.
-    val cand0 = srpCandidates(e).localCheckpoint(false)
-    val scored0 = scorePairs(cand0).localCheckpoint(false)
-    val adj0 = topOut(scored0).localCheckpoint()
-    val non = adj0.as("a").join(adj0.as("b"),
-        $"a.dst" === $"b.src" && $"a.src" =!= $"b.dst")
-      .select(least($"a.src", $"b.dst").as("va"),
-        greatest($"a.src", $"b.dst").as("vb"))
-      .distinct()
-    val fresh = non.join(cand0, Seq("va", "vb"), "left_anti")
-    val adj = topOut(scored0.unionByName(scorePairs(fresh)))
-      .unionByName(adj0).distinct()
-      .localCheckpoint()
-    graft.ops.Ckpt.free(cand0, scored0, adj0)
-    adj
+    // cand0 feeds the seed scoring + the anti-join, adj0 feeds three
+    // consumers (both sides of the NN-descent self-join + the final
+    // top-out) — each must run once, not per consumer. cand0 stays a LAZY
+    // leaf, adj0 is EAGER: its one checkpoint job walks the chain cand0 →
+    // scores → adj0 and persists cand0 on the way. (Under the round-16
+    // all-lazy form the final job requested the shared frames from
+    // several subtrees CONCURRENTLY, so partitions were computed
+    // repeatedly before their blocks landed: 51 s of task time for a
+    // 2000-vector build, OPTIMIZATION_r17.md §emb_nsw_topk.)
+    // A one-file corpus checkpoints as ONE partition, and the banded
+    // self-join streams that side: spread it so candidate generation
+    // runs on every core.
+    // both are freed on every exit: a failed build must not strand
+    // corpus-sized blocks in a retrying driver
+    val ckpts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try {
+      val cand0 = srpCandidates(e.repartition($"vec_id")).localCheckpoint(false)
+      ckpts += cand0
+      val adj0 = nswTop5(nswDirected(nswScorePairs(e, cand0))).localCheckpoint()
+      ckpts += adj0
+      val non = adj0.as("a").join(adj0.as("b"),
+          $"a.dst" === $"b.src" && $"a.src" =!= $"b.dst")
+        .select(least($"a.src", $"b.dst").as("va"),
+          greatest($"a.src", $"b.dst").as("vb"))
+        .distinct()
+      val fresh = non.join(cand0, Seq("va", "vb"), "left_anti")
+      nswTop5(adj0.unionByName(nswDirected(nswScorePairs(e, fresh))))
+        .select("src", "dst")
+        .unionByName(adj0.select("src", "dst")).distinct()
+        .localCheckpoint()
+    } finally graft.ops.Ckpt.free(ckpts.toSeq: _*)
   }
 
   def nswTopK(spark: SparkSession, dir: String): DataFrame = {
@@ -1499,7 +1515,7 @@ object Embeddings {
         // batch-internal 5-NN edges: the build's exact seed-graph recipe
         // (SRP candidates → certified scoring → bounded top-out) over the
         // batch alone
-        val bbEdges = nswTopOut(nswScorePairs(b, srpCandidates(b)))
+        val bbEdges = nswTop5(nswDirected(nswScorePairs(b, srpCandidates(b)))).select("src", "dst")
         val delta = found
           .unionByName(found.select($"dst".as("src"), $"src".as("dst")))
           .unionByName(bbEdges)

@@ -313,18 +313,30 @@ object TextDedup {
     * permutation non-monotone in h, so the 12 mins are genuinely
     * independent aggregates.)
     */
-  private def minhashBandSigs(sh: DataFrame): DataFrame = {
+  private def minhashBandSigs(sh: DataFrame): DataFrame = bandSigs(minhashPerDoc(sh))
+
+  /** Per document, in ONE groupBy(doc_id): the shingle-set size `n` and
+    * the 12 permutation minima `m0`..`m11`. A consumer that selects only
+    * the minima gets the count pruned from the aggregate.
+    */
+  private def minhashPerDoc(sh: DataFrame): DataFrame = {
     val spark = sh.sparkSession
     import spark.implicits._
     val minCols = (0 until 12).map(sd =>
       min(expr(s"((${2 * sd + 3}) * h + ${5 * sd + 7}) % 1000000007")).as(s"m$sd"))
     sh.withColumn("h", expr("CAST(conv(substr(md5(s), 1, 8), 16, 10) AS BIGINT) % 1000000007"))
       .groupBy($"doc_id")
-      .agg(minCols.head, minCols.tail: _*)
-      .select($"doc_id",
-        posexplode(array((0 until 6).map(b =>
-          concat_ws("|", col(s"m${2 * b}"), col(s"m${2 * b + 1}"))): _*)).as(Seq("band", "sig")))
+      .agg(count(lit(1)).as("n"), minCols: _*)
   }
+
+  /** (doc_id, band, sig, `carry`...) from [[minhashPerDoc]]'s minima, 6
+    * bands of 2; `carry` names per-doc columns kept on every band row.
+    */
+  private def bandSigs(perDoc: DataFrame, carry: String*): DataFrame =
+    perDoc.select(col("doc_id") +:
+      posexplode(array((0 until 6).map(b =>
+        concat_ws("|", col(s"m${2 * b}"), col(s"m${2 * b + 1}"))): _*)).as(Seq("band", "sig")) +:
+      carry.map(col): _*)
 
   /** The L3 pair derivation WITHOUT the presentation sort — the refresh
     * body of the pair-graph MV (which re-clusters on doc_a itself) and
@@ -354,20 +366,37 @@ object TextDedup {
                             szA: DataFrame, szB: DataFrame): DataFrame = {
     val spark = cand.sparkSession
     import spark.implicits._
-    val inter = cand
-      .join(shA.as("x"), $"x.doc_id" === $"da")
-      .join(shB.as("y"), $"y.doc_id" === $"db" && $"y.s" === $"x.s")
-      .groupBy($"da", $"db").agg(count(lit(1)).as("i"))
-    inter
+    intersections(cand, Seq($"da", $"db"), shA, shB)
       .join(szA.as("sa"), $"sa.doc_id" === $"da")
       .join(szB.as("sb"), $"sb.doc_id" === $"db")
-      .filter($"i" * 2 >= $"sa.n" + $"sb.n" - $"i")
+      .select($"da", $"db", $"i", $"sa.n".as("na"), $"sb.n".as("nb"))
+      .transform(jaccardPairs)
+  }
+
+  /** (`keys`, i): per candidate, the number of shingles its da side (in
+    * `shA`) shares with its db side (in `shB`).
+    */
+  private def intersections(cand: DataFrame, keys: Seq[Column],
+                            shA: DataFrame, shB: DataFrame): DataFrame = {
+    val spark = cand.sparkSession
+    import spark.implicits._
+    cand
+      .join(shA.as("x"), $"x.doc_id" === $"da")
+      .join(shB.as("y"), $"y.doc_id" === $"db" && $"y.s" === $"x.s")
+      .groupBy(keys: _*).agg(count(lit(1)).as("i"))
+  }
+
+  /** The Jaccard ≥ 0.5 test and output shape over (da, db, i, na, nb). */
+  private def jaccardPairs(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.filter($"i" * 2 >= $"na" + $"nb" - $"i")
       .select(
         least($"da", $"db").as("doc_a"), greatest($"da", $"db").as("doc_b"),
         $"i".as("n_common"),
-        when($"da" < $"db", $"sa.n").otherwise($"sb.n").as("n_a"),
-        when($"da" < $"db", $"sb.n").otherwise($"sa.n").as("n_b"),
-        ($"i".cast("double") / ($"sa.n" + $"sb.n" - $"i")).as("jaccard"))
+        when($"da" < $"db", $"na").otherwise($"nb").as("n_a"),
+        when($"da" < $"db", $"nb").otherwise($"na").as("n_b"),
+        ($"i".cast("double") / ($"na" + $"nb" - $"i")).as("jaccard"))
   }
 
   def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
@@ -446,43 +475,56 @@ object TextDedup {
   private[graft] def refreshPairGraphMv(spark: SparkSession, dir: String): String =
     PairGraph.build(spark, dir) { v =>
       import spark.implicits._
-      // plain cache + explicit release (not ScopedCache): the shingle
-      // frame is consumed by THREE write actions here, and the scoped
-      // form would release it after the first
-      val sh = shingles(Tables.documents(spark, dir)).cache()
+      // The corpus is shingled once, on every core: a one-file corpus
+      // scans as one task, so the doc_id exchange the per-doc aggregation
+      // needs anyway moves ahead of the shingle explode. The shingle frame
+      // is cached for the verify join's two sides; being doc_id-partitioned,
+      // the aggregation and the join's first side read it with no further
+      // exchange.
+      val sh = shingles(Tables.documents(spark, dir).select($"doc_id", $"text")
+        .repartition($"doc_id")).cache()
       try {
-        // sig deliberately NOT cached despite three consumers: the
-        // candidate self-join's two sides share one ReusedExchange when
-        // the plan stays lazy, and an A/B showed caching it doubles the
-        // refresh (4.4 s → 8.8 s at sf0.1) by materializing the frame and
-        // severing that reuse
-        val sig = minhashBandSigs(sh)
-        val szs = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-        // The four top-level chains overlap on the driver pool (guide
-        // §2.6): sigs ∥ sizes ∥ bloom ∥ the pair chain. Inside the pair
-        // chain the verified pair set is materialized ONCE as an eager
-        // checkpoint (CC's iteration plans against a LogicalRDD leaf,
-        // never the shingle pipeline), and the pairs write and the
-        // CC→labels chain consume it in PARALLEL — the append path's
-        // shape. The checkpoint is freed on every exit.
-        graft.ops.Par.all(
-          () => v.write("sigs", sig),
-          () => v.write("sizes", szs),
-          // a fresh refresh starts a new chain, so its resident ids are
-          // exactly the shingled ones (no batchdocs layer yet)
-          () => v.bloom(szs),
-          () => {
-            val cand = sig.as("a").join(sig.as("b"),
-                $"a.band" === $"b.band" && $"a.sig" === $"b.sig" && $"a.doc_id" < $"b.doc_id")
-              .select($"a.doc_id".as("da"), $"b.doc_id".as("db")).distinct()
-            val vp = verifiedPairs(cand, sh, sh, szs, szs).localCheckpoint()
-            try {
-              graft.ops.Par.all(
-                () => v.write("pairs", vp),
-                () => v.write("labels", graft.ops.Graph.connectedComponents(vp.select($"doc_a", $"doc_b"))
-                  .select($"node".as("doc_id"), $"component")))
-            } finally graft.ops.Ckpt.free(vp)
-          })
+        // set sizes and the 12 minima in ONE groupBy, materialized by ONE
+        // job (lazy checkpoint + count) that also fills the shingle cache:
+        // sigs, sizes, the bloom and the candidates all read its blocks, and
+        // the verify's broadcast builds no longer each shingle the corpus
+        val perDoc = minhashPerDoc(sh).localCheckpoint(false)
+        try {
+          val nDocs = perDoc.count()
+          val szs = perDoc.select($"doc_id", $"n")
+          // sig stays a lazy projection of the checkpoint: the candidate
+          // self-join's two sides then share one ReusedExchange (caching
+          // the shingle-derived sig frame instead doubled the refresh,
+          // 4.4 s → 8.8 s at sf0.1, by severing that reuse). Its band rows
+          // carry the set size, so candidates arrive with both sizes and
+          // the verify needs no size join (two broadcast jobs fewer).
+          val sig = bandSigs(perDoc, "n")
+          val cand = sig.as("a").join(sig.as("b"),
+              $"a.band" === $"b.band" && $"a.sig" === $"b.sig" && $"a.doc_id" < $"b.doc_id")
+            .select($"a.doc_id".as("da"), $"b.doc_id".as("db"), $"a.n".as("na"), $"b.n".as("nb"))
+            .distinct()
+          // The verified pair set is the critical path (it feeds CC, the
+          // refresh's longest chain), so it is materialized next, alone on
+          // the cores, as an eager checkpoint: CC's iteration plans against
+          // a LogicalRDD leaf, never the shingle pipeline.
+          // Then CC→labels, the pairs write and the three per-doc layers
+          // run in parallel on the driver pool (guide §2.6): CC's rounds
+          // are driver-bound, and the writes fill the idle cores.
+          val vp = intersections(cand, Seq($"da", $"db", $"na", $"nb"), sh, sh)
+            .transform(jaccardPairs).localCheckpoint()
+          try {
+            graft.ops.Par.all(
+              () => v.write("labels", graft.ops.Graph.connectedComponents(vp.select($"doc_a", $"doc_b"))
+                .select($"node".as("doc_id"), $"component")),
+              () => v.write("pairs", vp),
+              () => v.write("sigs", sig.drop("n")),
+              () => v.write("sizes", szs),
+              // a fresh refresh starts a new chain, so its resident ids are
+              // exactly the shingled ones (no batchdocs layer yet); the
+              // count sizes the bloom
+              () => v.bloom(szs, Some(nDocs)))
+          } finally graft.ops.Ckpt.free(vp)
+        } finally graft.ops.Ckpt.free(perDoc)
       } finally { sh.unpersist(false); () }
     }
 

@@ -90,9 +90,10 @@ object ChainIndex {
   final class Version private[ChainIndex] (spark: SparkSession, fam: Family, dir: String) {
     def write(layer: String, df: DataFrame): Unit = fam.layer(layer).write(df, dir)
 
-    def bloom(ids: DataFrame): Unit = {
+    /** `knownCount`: the number of ids, when the caller already holds it. */
+    def bloom(ids: DataFrame, knownCount: Option[Long] = None): Unit = {
       val c = fam.resident.get.col
-      IdBloom.write(spark, dir, ids.select(col(c)), c)
+      IdBloom.write(spark, dir, ids.select(col(c)), c, knownCount)
     }
   }
 

@@ -69,11 +69,16 @@ object IdBloom {
   /** Build a bloom over `ids(idCol)` and write it as this version's
     * sidecar blob. Called INSIDE the publish callback, so the sidecar
     * commits atomically with the version's data layers. `ids` is the
-    * version's own contribution — batch-sized for deltas; the count +
-    * bloom aggregation is two passes over an already-materialized frame.
+    * version's own contribution — batch-sized for deltas. The bloom is
+    * sized from the id count: a caller that already holds it passes
+    * `knownCount` and the write is ONE job (the bloom aggregation);
+    * otherwise a `count` job runs first, and both jobs evaluate `ids` (a
+    * frame that is not materialized — an append's per-doc groupBy, a
+    * compaction's chain read — is computed twice; ROADMAP direction 4).
     */
-  def write(spark: SparkSession, versionDir: String, ids: DataFrame, idCol: String): Unit = {
-    val n = math.max(ids.count(), 64L)
+  def write(spark: SparkSession, versionDir: String, ids: DataFrame, idCol: String,
+            knownCount: Option[Long] = None): Unit = {
+    val n = math.max(knownCount.getOrElse(ids.count()), 64L)
     val bf = ids.stat.bloomFilter(idCol, n, Fpp)
     val p = new Path(s"$versionDir/$Dir/b0.bin")
     val out = fsOf(spark, p).create(p, true)

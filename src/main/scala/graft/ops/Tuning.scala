@@ -31,21 +31,36 @@ package graft.ops
   *   SPARK_GRAFT_SHUFFLE_PARTS — explicit partition count (skips the formula)
   *   SPARK_GRAFT_AQE           — "1"/"0" forces AQE on/off
   *   SPARK_GRAFT_AQE_MIN_BYTES — adaptive threshold (default 1 GiB)
-  * On a non-local path [[inputBytes]] measures 0, which selects the large
-  * branch at 2·cpus partitions — a cluster run pins the first two.
+  * [[inputBytes]] measures any Hadoop filesystem the classpath can reach;
+  * where it cannot (no connector, no access) it measures 0, which selects
+  * the large branch at 2·cpus partitions — such a run pins the first two.
   */
 object Tuning {
 
-  /** Total bytes under `dir` (one level of nesting is enough for the
-    * driver layout: per-table single parquet files). 0 when unreadable —
-    * callers fall back to the conservative (cluster-shaped) defaults.
+  /** Total bytes of every file under `dir`, on any Hadoop filesystem
+    * (`file://`, `hdfs://`, `s3a://` with its connector on the classpath;
+    * a path without a scheme is local), configured by core-site.xml plus
+    * any `spark.hadoop.*` confs given to spark-submit. On the local
+    * filesystem the checksum (`.crc`) files count too, as they always have
+    * here, so a local dataset keeps the partition count it had. 0 when
+    * unreadable — callers fall back to the conservative (cluster-shaped)
+    * defaults.
     */
-  def inputBytes(dir: String): Long = {
-    def sizeOf(f: java.io.File): Long =
-      if (f.isFile) f.length()
-      else Option(f.listFiles()).map(_.map(sizeOf).sum).getOrElse(0L)
-    try sizeOf(new java.io.File(dir)) catch { case _: Throwable => 0L }
-  }
+  def inputBytes(dir: String): Long =
+    try {
+      // the session does not exist yet: take the `spark.hadoop.*` settings
+      // (credentials, endpoints, nameservices) from the `spark.*` system
+      // properties, where spark-submit puts every `--conf`
+      val conf = new org.apache.hadoop.conf.Configuration()
+      new org.apache.spark.SparkConf().getAllWithPrefix("spark.hadoop.")
+        .foreach { case (k, v) => conf.set(k, v) }
+      val p = new org.apache.hadoop.fs.Path(dir)
+      val fs = p.getFileSystem(conf) match {
+        case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+        case f => f
+      }
+      fs.getContentSummary(p).getLength
+    } catch { case _: Throwable => 0L }
 
   private def envLong(k: String, dflt: Long): Long =
     sys.env.get(k).flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(dflt)

@@ -32,8 +32,10 @@ object Marts {
 
   /** W1 shared ranking (identical in all 4 facts, fact_*.sql:17-21):
     * freshest dateGenerated per (city, parameter, reading_datetime).
-    * Computed ONCE and branched four ways (BASELINE.md) — one shuffle
-    * instead of four.
+    * Defined once and branched four ways, but the frame is LAZY: nothing
+    * here materializes it, so every fact write and every fact count in
+    * `Pipeline.buildMarts` re-runs the window shuffle (4 writes + 4
+    * counts). Computing it once is ROADMAP direction 1.
     */
   def ranked(stg: DataFrame): DataFrame =
     stg.withColumn("row_num",

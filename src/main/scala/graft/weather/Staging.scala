@@ -104,8 +104,10 @@ object Staging {
     * and keep the freshest `file_modified` per key (the W1 shape again).
     * This reproduces dbt's incremental merge semantics without a table
     * format; with Delta/Iceberg it would lower to a MERGE. One shuffle on
-    * the unique key; at 100 TB pair it with S7's date clustering so the
-    * merge only touches affected date partitions.
+    * the unique key over existing ∪ incoming: every run rewrites the WHOLE
+    * staging table, so the cost grows with the history, not the batch.
+    * Touching only the affected date partitions is not built (ROADMAP
+    * direction 2).
     */
   def mergeStaging(existing: DataFrame, incoming: DataFrame): DataFrame = {
     val w = Window

@@ -19,6 +19,82 @@ class PairGraphMvSpec extends SparkSpec {
     assert(fromMv.nonEmpty, "pair graph is empty at this SF — pins are vacuous")
   }
 
+  test("pair-graph refresh: sigs, sizes, pairs and labels equal a derivation written here") {
+    import spark.implicits._
+    val root = llm.TextDedup.refreshPairGraphMv(spark, sfDir)
+    def layer(name: String) = weather.Staging.readChain(spark, root, name)
+    // distinct word 3-grams of every document with at least 3 tokens
+    val tok = Tables.documents(spark, sfDir).select($"doc_id", split($"text", " ").as("t"))
+      .filter(size($"t") >= 3)
+    val sh = tok.select($"doc_id", explode(array_distinct(transform(
+      sequence(lit(1), size($"t") - 2), i =>
+        concat_ws(" ", element_at($"t", i), element_at($"t", i + 1), element_at($"t", i + 2))))).as("s"))
+    // 12 minima of (a·h + b) mod p over each doc's shingle hashes h
+    val p = 1000000007L
+    val hashed = sh.select($"doc_id", $"s",
+      (conv(substring(md5($"s"), 1, 8), 16, 10).cast("bigint") % p).as("h"))
+    val mins = hashed.groupBy($"doc_id").agg(count(lit(1)).as("n"),
+      (0 until 12).map(i => min(($"h" * (2 * i + 3) + (5 * i + 7)) % p).as(s"m$i")): _*)
+    val minRows = mins.collect()
+    val wantSizes = minRows.map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n"))).toSet
+    val wantSigs = minRows.flatMap(r => (0 until 6).map(b =>
+      (r.getAs[Long]("doc_id"), b, s"${r.getAs[Long](s"m${2 * b}")}|${r.getAs[Long](s"m${2 * b + 1}")}"))).toSet
+    assert(layer("sizes").as[(Long, Long)].collect().toSet === wantSizes)
+    assert(layer("sigs").select($"doc_id", $"band", $"sig").as[(Long, Int, String)].collect().toSet ===
+      wantSigs)
+    // candidates share a band signature; exact Jaccard >= 0.5 on the driver
+    val sets = sh.as[(Long, String)].collect().groupBy(_._1).map { case (d, xs) => d -> xs.map(_._2).toSet }
+    val cands = wantSigs.groupBy { case (_, b, sg) => (b, sg) }.values
+      .flatMap(g => for (x <- g.map(_._1); y <- g.map(_._1) if x < y) yield (x, y)).toSet
+    val wantPairs = cands.flatMap { case (a, b) =>
+      val i = (sets(a) & sets(b)).size.toLong
+      val (na, nb) = (sets(a).size.toLong, sets(b).size.toLong)
+      if (2 * i >= na + nb - i) Some((a, b, i, na, nb, i.toDouble / (na + nb - i))) else None
+    }
+    assert(wantPairs.nonEmpty, "no near-dup pairs at this SF — the pin is vacuous")
+    assert(layer("pairs").as[(Long, Long, Long, Long, Long, Double)].collect().toSet === wantPairs)
+    // labels: min doc_id reachable over the pairs, by union-find
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = { val px = parent.getOrElseUpdate(x, x); if (px == x) x else find(px) }
+    for ((a, b, _, _, _, _) <- wantPairs) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val wantLabels = parent.keys.map(x => (x, find(x))).toSet
+    assert(layer("labels").select($"doc_id", $"component").as[(Long, Long)].collect().toSet === wantLabels)
+  }
+
+  test("pair-graph refresh: a failure mid-publish commits nothing and leaves no persisted RDDs") {
+    val scratch = java.nio.file.Files.createTempDirectory("graft_pg_refresh_fail").toString
+    val key = "spark.sql.sources.commitProtocolClass"
+    val protocol = spark.conf.getOption(key)
+    try {
+      Tables.documents(spark, sfDir).write.parquet(s"$scratch/documents.parquet")
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      // the `pairs` layer write fails at job set-up: by then the per-doc
+      // checkpoint, the shingle cache and the verified-pair checkpoint
+      // exist, and the other layer writes run alongside
+      spark.conf.set(key, classOf[FailPairsLayerCommitProtocol].getName)
+      val err = try intercept[Exception](llm.TextDedup.refreshPairGraphMv(spark, scratch))
+        finally protocol match {
+          case Some(c) => spark.conf.set(key, c)
+          case None => spark.conf.unset(key)
+        }
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains(FailPairsLayerCommitProtocol.Message)),
+        s"refresh failed for another reason: $err")
+      val root = llm.TextDedup.pairGraphRoot(scratch)
+      assert(weather.Staging.currentSnapshotVersion(spark, root) === None, "a failed refresh committed")
+      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+      def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+      assert(leaked.isEmpty, s"failed refresh left persisted RDDs: $leaked")
+      // and a retry publishes
+      llm.TextDedup.refreshPairGraphMv(spark, scratch)
+      assert(weather.Staging.currentSnapshotVersion(spark, root) === Some(0L))
+    } finally graft.ops.ArtifactRoots.delete(scratch)
+  }
+
   test("pair-graph MV: consumers are memoized reads; refresh re-publishes") {
     // first consumer (above test or this call) built the artifact
     llm.TextDedup.componentLabels(spark, sfDir).count()
@@ -134,4 +210,18 @@ class PairGraphMvSpec extends SparkSpec {
     while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
     assert(leaked.isEmpty, s"abandoned scope still pins RDDs: $leaked")
   }
+}
+
+/** Fails the set-up of every write into a `pairs` layer directory. */
+class FailPairsLayerCommitProtocol(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
+    extends org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol(
+      jobId, path, dynamicPartitionOverwrite) {
+  override def setupJob(jobContext: org.apache.hadoop.mapreduce.JobContext): Unit = {
+    if (path.endsWith("/pairs")) throw new java.io.IOException(s"${FailPairsLayerCommitProtocol.Message}: $path")
+    super.setupJob(jobContext)
+  }
+}
+
+object FailPairsLayerCommitProtocol {
+  val Message = "injected pairs-layer write failure"
 }

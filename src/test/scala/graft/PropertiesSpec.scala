@@ -16,6 +16,35 @@ class PropertiesSpec extends SparkSpec {
   private val pathGen: Gen[List[String]] =
     Gen.listOfN(8, Gen.oneOf("f1", "f2", "f3", "f4", "f5"))
 
+  test("property: TopKAggregator reduce/merge equal a sort-based top-k in any merge order") {
+    import graft.functions.{Scored, TopKAggregator}
+    // few distinct sims (ties everywhere, ±0.0 included) and a small cid
+    // range (repeated (sim, cid) rows too)
+    val rowsGen: Gen[List[Scored]] = Gen.choose(0, 40).flatMap(n => Gen.listOfN(n, for {
+      cid <- Gen.choose(0L, 15L)
+      sim <- Gen.oneOf(0.5, 0.25, 0.0, -0.0, -0.25, 1.0)
+    } yield Scored(cid, sim)))
+    for (seed <- 1L to 300L; k <- Seq(1, 3, 5)) {
+      val rows = sample(rowsGen, seed)
+      val want = rows.sortBy(s => (-s.sim, s.cid)).take(k)
+      val agg = new TopKAggregator(k)
+      // split into partitions at random cut points, reduce each in its
+      // own row order, then merge the partials in a random order and tree
+      val rnd = new scala.util.Random(seed)
+      val cuts = (0 to rows.size).filter(_ => rnd.nextInt(4) == 0).sorted
+      val parts = (0 +: cuts :+ rows.size).sliding(2).collect { case Seq(a, b) => rows.slice(a, b) }.toList
+      var partials = rnd.shuffle(parts.map(_.foldLeft(agg.zero)(agg.reduce)))
+      while (partials.size > 1) {
+        val i = rnd.nextInt(partials.size - 1)
+        val merged = if (rnd.nextBoolean()) agg.merge(partials(i), partials(i + 1))
+          else agg.merge(partials(i + 1), partials(i))
+        partials = partials.patch(i, Seq(merged), 2)
+      }
+      val got = agg.finish(partials.headOption.getOrElse(agg.zero))
+      assert(got.toList === want, s"seed=$seed k=$k rows=$rows")
+    }
+  }
+
   test("property: S5 incremental anti-join = set difference, any multiset input") {
     import spark.implicits._
     for (seed <- 1L to 5L) {
