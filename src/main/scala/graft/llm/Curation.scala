@@ -912,7 +912,7 @@ object Curation {
   def nearDedupMv(spark: SparkSession, dir: String): DataFrame = {
     val root = TextDedup.refreshPairGraphMv(spark, dir)
     nearDedupReport(qualityFrame(spark, dir),
-      graft.weather.Staging.readChainLatest(spark, root, "labels"))
+      TextDedup.PairGraph.read(spark, graft.weather.Staging.chainDirs(spark, root), "labels").get)
   }
 
   /** C23 pair-graph compaction as a REGISTERED, oracle-checked query —
@@ -946,7 +946,7 @@ object Curation {
     require(graft.weather.Staging.chainVersions(spark, root).size == 1,
       "cur_neardedup_compact: auto-compaction did not collapse the chain")
     nearDedupReport(qualityFrame(spark, dir),
-      graft.weather.Staging.readChainLatest(spark, root, "labels"))
+      TextDedup.PairGraph.read(spark, graft.weather.Staging.chainDirs(spark, root), "labels").get)
   }
 
   lazy val nearDedupCompactSql: String = nearDedupBestSql

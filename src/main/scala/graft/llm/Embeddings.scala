@@ -459,7 +459,7 @@ object Embeddings {
     import spark.implicits._
     Ivf.append(spark, root, batch.select($"vec_id", $"v", $"nrm"), "appendIvfIndex",
         compactAfterDeltas, idempotent) { (b, dirs, v) =>
-      val cents = graft.weather.Staging.readChainLatestIn(spark, dirs, "centroids")
+      val cents = Ivf.read(spark, dirs, "centroids").get
       graft.ops.Par.all(
         () => v.write("cells", assignCells(b, cents).select($"vec_id", $"v", $"nrm", $"cell")),
         () => v.bloom(b))
@@ -493,18 +493,18 @@ object Embeddings {
     // pin the CHAIN once (Staging.chainDirs — ONE marker-set listing),
     // then derive BOTH layers from the pinned dirs: centroids from the
     // chain's newest carrier, cells as the union of the full base +
-    // every committed append delta. Two independent readChain calls
+    // every committed append delta. Two independent chain resolutions
     // could straddle a concurrent rebuild's publish and pair the new
     // quantizer with the old chain's assignments (wrong cells probed,
     // no error) — the pin makes that impossible by construction.
     val dirs = graft.weather.Staging.chainDirs(spark, root)
-    val cents = graft.weather.Staging.readChainLatestIn(spark, dirs, "centroids")
+    val cents = Ivf.read(spark, dirs, "centroids").get
     val probes = probeCells(q, cents, nprobe = 3)
       .as[(Long, Seq[Float], Double, Int)].collect().toSeq.sortBy(r => (r._1, r._4))
     val probedCells = probes.map(_._4).distinct.sorted
     val probesDf = broadcast(
       spark.createDataset(probes).toDF("qid", "qv", "qn", "cell"))
-    val cells = graft.weather.Staging.readChainIn(spark, dirs, "cells")
+    val cells = Ivf.read(spark, dirs, "cells").get
       .filter($"cell".isin(probedCells: _*))
     val wTop = Window.partitionBy($"qid").orderBy($"sim".desc, $"vec_id".asc)
     probesDf.join(cells.filter($"vec_id" >= 5), Seq("cell"))
@@ -1380,18 +1380,18 @@ object Embeddings {
     */
   private def corpusWithVecs(spark: SparkSession, dirs: Seq[String], e0: DataFrame,
                              pred: DataFrame => DataFrame): (DataFrame, DataFrame) = {
-    val S = graft.weather.Staging
-    if (S.chainHasLayerIn(spark, dirs, "vecs")) {
-      val u = pred(e0).unionByName(S.readChainIn(spark, dirs, "vecs")).localCheckpoint()
-      graft.ops.Ckpt.free(e0)
-      (u, u)
-    } else (e0, pred(e0))
+    Nsw.read(spark, dirs, "vecs") match {
+      case Some(vecs) =>
+        val u = pred(e0).unionByName(vecs).localCheckpoint()
+        graft.ops.Ckpt.free(e0)
+        (u, u)
+      case None => (e0, pred(e0))
+    }
   }
 
   private[graft] def nswQueryFromIndex(spark: SparkSession, dir: String, root: String,
                                        pred: DataFrame => DataFrame = identity): DataFrame = {
     graft.GraftExtensions.ensure(spark)
-    val S = graft.weather.Staging
     val (e0, q) = nswFrames(spark, dir)
     // checkpoint registry freed on every exit (the appendNswIndex
     // discipline): a chain-read or beam failure must not strand the
@@ -1401,10 +1401,10 @@ object Embeddings {
     val ckpts = scala.collection.mutable.ArrayBuffer[DataFrame](e0)
     try {
       // ONE chain pin for both layers (the ivfQueryFromIndex discipline)
-      val dirs = S.chainDirs(spark, root)
+      val dirs = graft.weather.Staging.chainDirs(spark, root)
       val (eCk, e) = corpusWithVecs(spark, dirs, e0, pred)
       ckpts += eCk
-      val adj = S.readChainIn(spark, dirs, "adj").localCheckpoint()
+      val adj = Nsw.read(spark, dirs, "adj").get.localCheckpoint()
       ckpts += adj
       nswBeamSearch(e, q, adj)
     } finally graft.ops.Ckpt.free(ckpts.toSeq: _*)
@@ -1479,7 +1479,6 @@ object Embeddings {
                                     compactAfterDeltas: Int = 0): Unit = {
     graft.GraftExtensions.ensure(spark)
     import spark.implicits._
-    val S = graft.weather.Staging
     val root = nswRoot(dir, tag)
     Nsw.requireBuilt(root, "appendNswIndex", dir)
     Nsw.append(spark, root, batch.select($"vec_id", $"v", $"nrm"), "appendNswIndex",
@@ -1503,7 +1502,7 @@ object Embeddings {
         require(dup == 0,
           s"appendNswIndex: batch re-ingests vec_ids already resident in $root — " +
             "vec_ids must be disjoint (CDC ingest contract)")
-        val adj = S.readChainIn(spark, dirs, "adj").localCheckpoint()
+        val adj = Nsw.read(spark, dirs, "adj").get.localCheckpoint()
         ckpts += adj
         // neighbor search: batch vectors as the query set, final top-5 of
         // the width-8 beam (the insert's M, matching the build's degree)

@@ -533,7 +533,7 @@ object TextDedup {
     * certifies; layer-level reader for consumers and specs.
     */
   private[graft] def pairGraphPairs(spark: SparkSession, dir: String): DataFrame =
-    graft.weather.Staging.readChain(spark, pairGraphRoot(dir), "pairs")
+    PairGraph.read(spark, graft.weather.Staging.chainDirs(spark, pairGraphRoot(dir)), "pairs").get
 
   /** Incremental batch ingest into a pair-graph MV BUILT in this process
     * — the per-day path of the 100 TB daily-crawl shape (the full refresh
@@ -577,13 +577,12 @@ object TextDedup {
   private def pairGraphDelta(spark: SparkSession, dir: String)(
       batch: DataFrame, dirs: Seq[String], v: ChainIndex.Version): Unit = {
     import spark.implicits._
-    val S = graft.weather.Staging
     val bsh = shingles(batch).cache()
     try {
       val bsig = minhashBandSigs(bsh)
       val bszs = bsh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-      val esig = S.readChainIn(spark, dirs, "sigs")
-      val eszs = S.readChainIn(spark, dirs, "sizes")
+      val esig = PairGraph.read(spark, dirs, "sigs").get
+      val eszs = PairGraph.read(spark, dirs, "sizes").get
       // asymmetric probe: batch → resident index (da = batch, db = resident)
       val candBE = bsig.as("a").join(esig.as("b"),
           $"a.band" === $"b.band" && $"a.sig" === $"b.sig")
@@ -599,9 +598,7 @@ object TextDedup {
       // the verify intersection empty, the component merge lost)
       val corpus = Tables.documents(spark, dir).select($"doc_id", $"text")
       val residentDocs =
-        if (S.chainHasLayerIn(spark, dirs, "batchdocs"))
-          corpus.unionByName(S.readChainIn(spark, dirs, "batchdocs"))
-        else corpus
+        PairGraph.read(spark, dirs, "batchdocs").fold(corpus)(corpus.unionByName(_))
       val partners = candBE.select($"db".as("doc_id")).distinct()
       val esh = shingles(
         residentDocs.join(partners, Seq("doc_id"), "left_semi"))
@@ -621,7 +618,7 @@ object TextDedup {
         // docs + pairs) to (touched roots + batch docs); root self-loops
         // (a pair internal to one old component) add no connectivity and
         // are dropped before the loop.
-        val oldLbl = S.readChainLatestIn(spark, dirs, "labels")
+        val oldLbl = PairGraph.read(spark, dirs, "labels").get
         // six INDEPENDENT write chains (labels' CC reads the newPairs
         // checkpoint, not the written pairs file) — overlapped on the
         // driver pool, wall = max(layer) not Σ(layer) (guide §2.6)
@@ -686,7 +683,7 @@ object TextDedup {
     val root = pairGraphRoot(dir)
     PairGraph.ensureBuilt(root) { refreshPairGraphMv(spark, dir); () }
     // labels are rewrite-shaped: read from the newest committed version
-    graft.weather.Staging.readChainLatest(spark, root, "labels")
+    PairGraph.read(spark, graft.weather.Staging.chainDirs(spark, root), "labels").get
   }
 
   val minhashLshSql: String =

@@ -11,7 +11,8 @@ import graft.weather.Staging
   * write. A family declares its LAYER TABLE (name, read shape, on-disk
   * clustering, optional) and, when its appends are dup-guarded by id, the
   * layers whose ids are resident; this module owns the sequence around
-  * the family's derivation:
+  * the family's derivation, and [[Family.read]] is how every reader
+  * resolves a layer across a pinned chain:
   *
   *  - [[Family.build]]: publish a FULL version through
   *    [[Staging.publishSnapshot]] (the family's writes run inside the
@@ -52,7 +53,7 @@ object ChainIndex {
     * each file by `sortBy` (default: `clusterBy`); one file when neither
     * is set. An `optional` layer is absent from some versions (it first
     * lands with an append). The empty name is the version dir itself —
-    * a single-layer artifact read with [[Staging.readSnapshot]].
+    * a single-layer artifact.
     */
   final case class Layer(name: String, shape: Shape,
                          clusterBy: Seq[String] = Nil, sortBy: Seq[String] = Nil,
@@ -103,7 +104,22 @@ object ChainIndex {
   final class Family(prefix: String, val name: String, val layers: Seq[Layer],
                      val resident: Option[ResidentIds] = None) {
 
-    private[ChainIndex] val layer: Map[String, Layer] = layers.map(l => l.name -> l).toMap
+    private[ChainIndex] def layer(n: String): Layer =
+      layers.find(_.name == n).getOrElse(
+        throw new IllegalArgumentException(s"$name declares no layer '$n'"))
+
+    /** Layer `name` of a pinned chain (`dirs`, one [[Staging.chainDirs]]
+      * resolution), read by its declared shape: an append-shaped layer is
+      * the union over every dir that carries it, a rewrite-shaped one
+      * comes from the newest carrier. None only for an optional layer no
+      * dir carries yet; a missing required layer or a name the family
+      * does not declare throws.
+      */
+    def read(spark: SparkSession, dirs: Seq[String], name: String): Option[DataFrame] = {
+      val l = layer(name)
+      if (l.optional && !Staging.chainHasLayerIn(spark, dirs, name)) None
+      else Some(l.read(spark, dirs))
+    }
 
     /** Root for (dataset, tag); no side effects — for readers. */
     def root(dir: String, tag: String = ""): String = ArtifactRoots.path(prefix + tag, Some(dir))
@@ -191,9 +207,7 @@ object ChainIndex {
       }
 
     private def residentIds(spark: SparkSession, dirs: Seq[String], r: ResidentIds): DataFrame =
-      r.layers.filter(l => !layer(l).optional || Staging.chainHasLayerIn(spark, dirs, l))
-        .map(l => Staging.readChainIn(spark, dirs, l).select(col(r.col)))
-        .reduce(_ unionByName _)
+      r.layers.flatMap(read(spark, dirs, _)).map(_.select(col(r.col))).reduce(_ unionByName _)
 
     /** Collapse the chain (full version + its deltas) into ONE full
       * version: every layer read by its shape from ONE pinned chain
@@ -207,8 +221,7 @@ object ChainIndex {
       val dirs = Staging.chainDirs(spark, root)
       if (dirs.size > 1) publishFull(spark, root) { v =>
         val layerWrites = layers.map { l => () =>
-          if (!l.optional || Staging.chainHasLayerIn(spark, dirs, l.name))
-            v.write(l.name, l.read(spark, dirs))
+          read(spark, dirs, l.name).foreach(v.write(l.name, _))
         }
         val sidecar = resident.map(r => () => v.bloom(residentIds(spark, dirs, r)))
         Par.all(layerWrites ++ sidecar: _*)

@@ -60,12 +60,6 @@ object Ckpt {
   def free(dfs: DataFrame*): Unit =
     dfs.foreach(df => rdds(df).foreach(_.unpersist(blocking = false)))
 
-  /** Free every checkpoint under `ckpts` after the first completed
-    * action that consumed `result` (or the ScopedCache abandonment TTL).
-    * For frames `result`'s own lazy plan still reads — the final loop
-    * state a top-k/orderBy result is derived from, the read-back MV a
-    * multi-kernel summary aggregates at action time.
-    */
   /** Abandonment TTL for CHECKPOINT scopes, deliberately much larger
     * than the cache flavor's 64: releasing an abandoned CACHE early
     * costs a benign recompute, but releasing an abandoned CHECKPOINT
@@ -80,6 +74,12 @@ object Ckpt {
     */
   private[graft] val AbandonAfterActions = 4096
 
+  /** Free every checkpoint under `ckpts` after the first completed
+    * action that consumed `result` (or the ScopedCache abandonment TTL).
+    * For frames `result`'s own lazy plan still reads — the final loop
+    * state a top-k/orderBy result is derived from, the read-back MV a
+    * multi-kernel summary aggregates at action time.
+    */
   def freeOnConsumed(result: DataFrame, ckpts: Seq[DataFrame]): DataFrame = {
     opened.incrementAndGet()
     val frames = ckpts.toIndexedSeq

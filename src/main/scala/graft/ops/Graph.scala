@@ -137,51 +137,6 @@ object Graph {
       |LIMIT 25""".stripMargin
   }
 
-  /** G2 triangle counting + local clustering coefficient over the supplier
-    * co-purchase graph — the other classic distributed graph kernel
-    * (community density; G1 covers value propagation, dupClusters covers
-    * components).
-    *
-    * Graph build: the raw co-purchase projection (suppliers sharing a
-    * customer) is COMPLETE at every test SF, so the operator first
-    * extracts the top-decile backbone: edges whose shared-customer count
-    * reaches the value at descending rank ⌊m/10⌋. The threshold comes
-    * from the DISTINCT-VALUE count table (≤ max−min+1 rows — tiny), not
-    * a global sort of edges: cum(s) = #edges with shared ≥ s, and
-    * t = max{s : cum(s) ≥ ⌊m/10⌋} — exact integer logic, identical in
-    * both engines regardless of tie placement.
-    *
-    * Triangle enumeration uses the (u < v) orientation: e1=(a,b) ⋈
-    * e2=(b,c) ⋈ e3=(a,c) emits each triangle exactly once, and the join
-    * fan-out is bounded by forward-degree (the node-iterator bound; a
-    * total-degree orientation would tighten it to O(m^1.5) on skewed
-    * graphs). Clustering coefficient = 2·tri/(deg·(deg−1)) — one IEEE
-    * division of exact int64s.
-    *
-    * 100 TB: the projection is the costly step — it squares customer
-    * degree, so hub customers get a df-cap before the self-join (the L2
-    * inverted-index discipline; not needed at these SFs and noted here);
-    * everything after runs on the edge list, shuffling on endpoint keys.
-    */
-  /** Top-decile co-purchase backbone shared by G2 (triangles) and G3
-    * (k-core): suppliers as nodes, an edge where the shared-customer
-    * count reaches the value at descending rank ⌊m/10⌋ (see the G2
-    * scaladoc for why the raw projection is complete and how the
-    * threshold stays exact). Returns the (u < v) edge list, action-
-    * scoped-cached for the caller's single consuming action.
-    */
-  /** Production indirection for the backbone: when a materialized path
-    * is set (a DAG that ran the g0 refresh upstream), g2–g7 read the
-    * endpoint-clustered parquet MV instead of re-deriving the ~2.5 s
-    * co-purchase projection per query. Default is None — each query pays
-    * its own derivation, so per-query bench accounting stays honest. The
-    * switch is process-wide deliberately: it models the DAG-level
-    * decision "the backbone refresh ran upstream this session".
-    */
-  @volatile private var mvSource: Option[String] = None
-  def useMaterializedBackbone(path: String): Unit = { mvSource = Some(path) }
-  def clearMaterializedBackbone(): Unit = { mvSource = None }
-
   /** The backbone MV as a chain family: ONE rewrite-shaped layer, the
     * (u, v, shared) edge list written endpoint-clustered directly in the
     * version dir. Its build-once memo is the C22/E21 pattern applied to
@@ -195,21 +150,28 @@ object Graph {
   private[graft] val Backbone = new ChainIndex.Family("graft_backbone_mv", "backbone MV",
     Seq(ChainIndex.Layer("", ChainIndex.RewriteShaped, clusterBy = Seq("u"), sortBy = Seq("u", "v"))))
 
+  /** Top-decile co-purchase backbone shared by G2 (triangles) and G3
+    * (k-core): suppliers as nodes, an edge where the shared-customer
+    * count reaches the value at descending rank ⌊m/10⌋ (see the G2
+    * scaladoc for why the raw projection is complete and how the
+    * threshold stays exact). Returns the (u < v) edge list, read from
+    * the backbone MV.
+    */
   private[graft] def backboneEdges(spark: SparkSession, dir: String): DataFrame =
     backboneWeighted(spark, dir).select(col("u"), col("v"))
 
   /** Weighted twin of [[backboneEdges]]: (u, v, shared), read from the MV
-    * (explicit switch or the build-once memo — the MV stores the weight
-    * column since round 11).
+    * through its build-once memo (the MV stores the weight column since
+    * round 11).
     */
   private[graft] def backboneWeighted(spark: SparkSession, dir: String): DataFrame = {
-    // the MV path encodes a hash of the canonical dataset dir, so the
-    // switch guard is exact: a kernel asked about a DIFFERENT dataset
-    // while the switch is on builds its own, never silently reads the
-    // materialized dataset's backbone (wrong data, no error)
+    // the root encodes a hash of the canonical dataset dir and a process
+    // nonce, so a kernel asked about a DIFFERENT dataset builds and reads
+    // its own backbone, never this one's (wrong data, no error)
     val root = backboneRoot(dir)
-    if (!mvSource.contains(root)) Backbone.ensureBuilt(root) { refreshBackboneMv(spark, dir); () }
-    graft.weather.Staging.readSnapshot(spark, root).select(col("u"), col("v"), col("shared"))
+    Backbone.ensureBuilt(root) { refreshBackboneMv(spark, dir); () }
+    Backbone.read(spark, graft.weather.Staging.chainDirs(spark, root), "").get
+      .select(col("u"), col("v"), col("shared"))
   }
 
   /** Degree cap for the bipartite projection's self-join. The projection
@@ -397,6 +359,32 @@ object Graph {
       |thr AS (SELECT MAX(sv) AS t FROM cum CROSS JOIN m WHERE cume >= m // 10),
       |edges AS (SELECT u, v, shared FROM w CROSS JOIN thr WHERE shared >= t)""".stripMargin
 
+  /** G2 triangle counting + local clustering coefficient over the supplier
+    * co-purchase graph — the other classic distributed graph kernel
+    * (community density; G1 covers value propagation, dupClusters covers
+    * components).
+    *
+    * Graph build: the raw co-purchase projection (suppliers sharing a
+    * customer) is COMPLETE at every test SF, so the operator first
+    * extracts the top-decile backbone: edges whose shared-customer count
+    * reaches the value at descending rank ⌊m/10⌋. The threshold comes
+    * from the DISTINCT-VALUE count table (≤ max−min+1 rows — tiny), not
+    * a global sort of edges: cum(s) = #edges with shared ≥ s, and
+    * t = max{s : cum(s) ≥ ⌊m/10⌋} — exact integer logic, identical in
+    * both engines regardless of tie placement.
+    *
+    * Triangle enumeration uses the (u < v) orientation: e1=(a,b) ⋈
+    * e2=(b,c) ⋈ e3=(a,c) emits each triangle exactly once, and the join
+    * fan-out is bounded by forward-degree (the node-iterator bound; a
+    * total-degree orientation would tighten it to O(m^1.5) on skewed
+    * graphs). Clustering coefficient = 2·tri/(deg·(deg−1)) — one IEEE
+    * division of exact int64s.
+    *
+    * 100 TB: the projection is the costly step — it squares customer
+    * degree, so hub customers get a df-cap before the self-join (the L2
+    * inverted-index discipline; not needed at these SFs and noted here);
+    * everything after runs on the edge list, shuffling on endpoint keys.
+    */
   def triangles(spark: SparkSession, dir: String): DataFrame =
     trianglesFrom(backboneEdges(spark, dir))
 
@@ -430,9 +418,8 @@ object Graph {
     * concrete. The query derives the backbone, publishes it (overwrite =
     * the refresh), reads it BACK from disk, and reports edge/node stats
     * from the read-back copy — so the oracle compare certifies the
-    * round-tripped artifact, not the in-memory frame. Kernels keep
-    * deriving their own backbone in this suite (honest per-query
-    * accounting); a production DAG points them at this path.
+    * round-tripped artifact, not the in-memory frame. The g2–g8 kernels
+    * read this path through the build-once memo ([[backboneWeighted]]).
     * Clustering = repartition(u) + sortWithinPartitions (row-group
     * locality and min/max skipping on u). It is NOT bucketBy: plain
     * parquet carries no bucket spec, so joins against it still plan a
@@ -446,7 +433,7 @@ object Graph {
     * process's reader; the nonce also closes the predictable-/tmp-path
     * hijack surface on shared machines. Artifacts are tracked and
     * deleted by a JVM shutdown hook — they live exactly as long as the
-    * session that can read them (useMaterializedBackbone).
+    * session that can read them.
     */
   def backboneRoot(dir: String): String = Backbone.root(dir)
 
@@ -460,7 +447,7 @@ object Graph {
     */
   private[graft] def refreshBackboneMv(spark: SparkSession, dir: String): DataFrame = {
     val root = Backbone.build(spark, dir) { v => v.write("", deriveBackboneWeighted(spark, dir)) }
-    graft.weather.Staging.readSnapshot(spark, root)
+    Backbone.read(spark, graft.weather.Staging.chainDirs(spark, root), "").get
   }
 
   def backboneMaterialize(spark: SparkSession, dir: String): DataFrame = {

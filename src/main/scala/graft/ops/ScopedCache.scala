@@ -46,27 +46,6 @@ object ScopedCache {
     */
   private[graft] val AbandonAfterActions = 64
 
-  /** Cache `cached` until the first completed action whose plan contains
-    * RESULT's analyzed fragment (not `cached`'s own). For multi-action
-    * operators — iterative training collects followed by a final query
-    * over the same relation — where [[untilConsumed]] would release on
-    * the FIRST training collect and leave every later phase rescanning
-    * the source. The cache is materialized by the training actions,
-    * reused across all of them plus the final query, and released by the
-    * caller's single consuming action on the returned result; the same
-    * no-blocks-left-behind contract the cache-hygiene audit pins.
-    *
-    * Constraint (by canonicalized-plan matching, same as untilConsumed):
-    * Spark's CacheManager keys on the canonical plan, so two LIVE
-    * operator instances caching the SAME plan share one entry — consuming
-    * the first result unpersists it for both. Hold at most one
-    * constructed instance per cached plan and execute it before
-    * constructing the next (Verify, Bench and the audits all construct →
-    * execute per query, which satisfies this); a constructed-but-never-
-    * consumed result keeps its blocks only until [[AbandonAfterActions]]
-    * later actions complete (the abandonment TTL) or
-    * `spark.catalog.clearCache()`.
-    */
   /** Register the release watcher: run `releaseFn` and unregister after
     * the first completed action whose plan contains `watched`'s analyzed
     * fragment — or, the TTL escape hatch, after [[AbandonAfterActions]]
@@ -110,6 +89,27 @@ object ScopedCache {
     spark.listenerManager.register(listener)
   }
 
+  /** Cache `cached` until the first completed action whose plan contains
+    * RESULT's analyzed fragment (not `cached`'s own). For multi-action
+    * operators — iterative training collects followed by a final query
+    * over the same relation — where [[untilConsumed]] would release on
+    * the FIRST training collect and leave every later phase rescanning
+    * the source. The cache is materialized by the training actions,
+    * reused across all of them plus the final query, and released by the
+    * caller's single consuming action on the returned result; the same
+    * no-blocks-left-behind contract the cache-hygiene audit pins.
+    *
+    * Constraint (by canonicalized-plan matching, same as untilConsumed):
+    * Spark's CacheManager keys on the canonical plan, so two LIVE
+    * operator instances caching the SAME plan share one entry — consuming
+    * the first result unpersists it for both. Hold at most one
+    * constructed instance per cached plan and execute it before
+    * constructing the next (Verify, Bench and the audits all construct →
+    * execute per query, which satisfies this); a constructed-but-never-
+    * consumed result keeps its blocks only until [[AbandonAfterActions]]
+    * later actions complete (the abandonment TTL) or
+    * `spark.catalog.clearCache()`.
+    */
   def untilResultConsumed(cached: DataFrame, result: DataFrame): DataFrame = {
     opened.incrementAndGet()
     watchFragment(result)(() => cached.unpersist(false))

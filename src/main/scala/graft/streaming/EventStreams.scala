@@ -185,14 +185,6 @@ object EventStreams {
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
   }
 
-  /** File-source stream over a directory of parquet event files → console
-    * or any sink; the deployment shape for continuous ingest.
-    */
-  def fromParquetDir(spark: SparkSession, path: String): DataFrame =
-    spark.readStream
-      .schema(graft.Tables.events(spark, "/root/testdata/sf0.001").schema)
-      .parquet(path)
-
   /** Append-mode writer for a windowed aggregate (finalized windows only —
     * the watermark closes them).
     */
@@ -295,7 +287,7 @@ object EventStreams {
         if (!feed.isEmpty) {
         val cols = Seq("k", "status", "cents").map(col)
         val base = graft.weather.Staging.currentSnapshotVersion(s, root) match {
-          case Some(_) => graft.weather.Staging.readSnapshot(s, root).select(cols: _*)
+          case Some(_) => graft.weather.Staging.readChainLatest(s, root, "").select(cols: _*)
           case None =>
             s.createDataFrame(s.sparkContext.emptyRDD[Row],
               org.apache.spark.sql.types.StructType(Seq(

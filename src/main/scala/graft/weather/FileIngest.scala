@@ -33,15 +33,9 @@ object FileIngest {
 
   def fileIngest(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // S3 sink: write the 9 synthetic docs (3 cities × 3 runs) hive-style.
-    val docs = WeatherGen.docs(spark)
-      .withColumn("run_date", substring($"weather.dateGenerated", 1, 10))
-      .drop("file_path") // the REAL path comes back via _metadata below
-    docs
-      .repartition($"country", $"city", $"run_date")
-      .write.mode("overwrite")
-      .partitionBy("country", "city", "run_date")
-      .json(rawRoot)
+    // S3 sink: write the 9 synthetic docs (3 cities × 3 runs) hive-style;
+    // the REAL path comes back via _metadata below
+    Staging.writeRawByRun(WeatherGen.docs(spark).drop("file_path"), rawRoot)
 
     // S4 stage scan: schema-on-read + REAL file metadata + partition cols.
     val raw = spark.read.schema(payloadSchema).json(rawRoot)

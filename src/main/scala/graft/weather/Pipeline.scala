@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * (SURVEY.md §3: both Airflow DAGs + the dbt ref() graph collapse to
   * function composition — no XCom, no Celery, no warehouse round-trips).
   *
-  * extract (fetch → validate → S3 JSON)   → writeRaw(docs)
+  * extract (fetch → validate → S3 JSON)   → writeRawByRun(docs)
   * stg_weather_raw (scan+incremental+flatten+merge) → stageIncremental
   * dims (full rebuild) + facts (append)   → buildMarts
   *
@@ -74,9 +74,9 @@ object Pipeline {
     val freshDocs = Staging.incrementalNew(
       withFileKey(raw), existing.select("file_key").distinct(), key = "file_key")
     val stgNew = withFileKey(Staging.flatten(freshDocs.drop("dateGenerated", "file_key")))
-    // counts are of LOGICAL files (the reference's S3 object granularity;
-    // writeRaw packs one physical file per (country, city) dir) and MUST be
-    // taken before the overwrite below invalidates `existing`'s input files
+    // counts are of LOGICAL files (country/city/run date — the reference's
+    // S3 object granularity) and MUST be taken before the overwrite below
+    // invalidates `existing`'s input files
     val filesSeen = withFileKey(raw).select("file_key").distinct().count()
     val filesNew = freshDocs.select("file_key").distinct().count()
     // S6: unique-key merge, freshest file_modified wins

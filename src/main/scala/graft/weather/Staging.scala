@@ -78,14 +78,10 @@ object Staging {
       .sortWithinPartitions("reading_datetime")
       .write.mode("overwrite").partitionBy("reading_date").parquet(path)
 
-  /** S3 raw sink: hive-style country/city layout = the reference's S3 key
-    * scheme (meteomatics_get_data.py:116).
-    */
-  def writeRaw(docs: DataFrame, path: String): Unit =
-    docs.write.mode("overwrite").partitionBy("country", "city").json(path)
-
-  /** S3 raw sink at the reference's OBJECT granularity: one file per
-    * (location, run date) — meteomatics_get_data.py:108 names each upload
+  /** S3 raw sink: hive-style country/city/run_date layout (the reference's
+    * S3 key scheme, meteomatics_get_data.py:116) at the reference's OBJECT
+    * granularity: one file per (location, run date) —
+    * meteomatics_get_data.py:108 names each upload
     * weather_raw_{city}_{country}_{date}.json. The repartition gives each
     * (country, city, run) exactly one part file, which keeps file_path a
     * valid unique-key component downstream (SURVEY §1.2 note).
@@ -119,6 +115,28 @@ object Staging {
       .drop("__rn")
   }
 
+  /** THE cross-process writer-exclusion seam — every publish variant
+    * (rename-swap, snapshot, delta) takes its lock through this one hook,
+    * and the acquire/release PRIMITIVE is the pluggable
+    * [[CommitLockProvider]] strategy ([[CommitLock.provider]]): the
+    * default is HDFS/local-FS atomic create-if-absent; the S3A
+    * check-then-act hazard and its conditional-PUT upgrade are documented
+    * on the trait and pinned executable by StagingSpec's race tests.
+    * Release is best-effort in the caller's finally; a writer that dies
+    * between acquire and release leaves the lock behind DELIBERATELY —
+    * see [[breakPublishLock]] for the recovery contract.
+    */
+  private def withPublishLock[A](fs: org.apache.hadoop.fs.FileSystem,
+                                 path: String, what: String)(body: => A): A = {
+    val lock = new org.apache.hadoop.fs.Path(path + "__lock")
+    val provider = CommitLock.provider
+    if (!provider.tryAcquire(fs, lock))
+      throw new java.io.IOException(
+        s"another $what to $path is in progress ($lock exists); " +
+          "if its writer is dead, call breakPublishLock first")
+    try body finally provider.release(fs, lock)
+  }
+
   /** S6 crash-safe publish: two-phase write-temp + FS rename swap — the
     * durability shape of the reference's transactional MERGE
     * (stg_weather_raw.sql:3-7) without a table format. The new snapshot is
@@ -142,28 +160,6 @@ object Staging {
     * before calling [[breakPublishLock]] (same recover-then-retry contract
     * the reference has with one dbt run at a time per target).
     */
-  /** THE cross-process writer-exclusion seam — every publish variant
-    * (rename-swap, snapshot, delta) takes its lock through this one hook,
-    * and the acquire/release PRIMITIVE is the pluggable
-    * [[CommitLockProvider]] strategy ([[CommitLock.provider]]): the
-    * default is HDFS/local-FS atomic create-if-absent; the S3A
-    * check-then-act hazard and its conditional-PUT upgrade are documented
-    * on the trait and pinned executable by StagingSpec's race tests.
-    * Release is best-effort in the caller's finally; a writer that dies
-    * between acquire and release leaves the lock behind DELIBERATELY —
-    * see [[breakPublishLock]] for the recovery contract.
-    */
-  private def withPublishLock[A](fs: org.apache.hadoop.fs.FileSystem,
-                                 path: String, what: String)(body: => A): A = {
-    val lock = new org.apache.hadoop.fs.Path(path + "__lock")
-    val provider = CommitLock.provider
-    if (!provider.tryAcquire(fs, lock))
-      throw new java.io.IOException(
-        s"another $what to $path is in progress ($lock exists); " +
-          "if its writer is dead, call breakPublishLock first")
-    try body finally provider.release(fs, lock)
-  }
-
   def publishAtomic(spark: SparkSession, path: String)(write: String => Unit): Unit = {
     import org.apache.hadoop.fs.Path
     val target = new Path(path)
@@ -241,7 +237,7 @@ object Staging {
   // retained version). Writers serialize on the same __lock contract as
   // publishAtomic. A writer crash before the marker leaves an orphan
   // snap dir that the next publish of that version deletes and rewrites;
-  // the commit point itself is one atomic create. GC (gcSnapshots)
+  // the commit point itself is one atomic create. GC ([[gcChains]])
   // deletes beyond-retention MARKERS first — new readers can no longer
   // resolve them — then the data dirs; like Delta/Iceberg VACUUM,
   // retention must exceed the longest reader (the documented contract,
@@ -301,67 +297,6 @@ object Staging {
     }
   }
 
-  /** Data dir of the current committed snapshot — for MV families whose
-    * snapshot holds MULTIPLE datasets as subdirs (the IVF cells +
-    * centroids pair must swap atomically: a reader pairing new cells
-    * with old centroids would score against the wrong quantizer).
-    */
-  def currentSnapshotDir(spark: SparkSession, root: String): String =
-    snapDir(root, currentOrThrow(spark, root))
-
-  private def currentOrThrow(spark: SparkSession, root: String): Long =
-    currentSnapshotVersion(spark, root).getOrElse(
-      throw new java.io.IOException(s"no committed snapshot under $root"))
-
-  /** Reads the table at its current committed snapshot. */
-  def readSnapshot(spark: SparkSession, root: String): DataFrame =
-    readSnapshotAt(spark, root, currentOrThrow(spark, root))
-
-  /** Time travel: reads a specific retained version. */
-  def readSnapshotAt(spark: SparkSession, root: String, v: Long): DataFrame =
-    readLayerDir(spark, snapshotDirAt(spark, root, v))
-
-  /** S6 MERGE with snapshot isolation: dedup-merge `incoming` into the
-    * current snapshot (freshest file_modified wins per unique key — the
-    * [[mergeStaging]] semantics) and publish the result as the next
-    * version. Readers of the current version are untouched until the
-    * commit marker lands.
-    */
-  def upsertSnapshot(spark: SparkSession, root: String, incoming: DataFrame): Long = {
-    val merged = currentSnapshotVersion(spark, root) match {
-      case Some(v) => mergeStaging(readSnapshotAt(spark, root, v), incoming)
-      case None => incoming
-    }
-    publishSnapshot(spark, root)(p => merged.write.mode("overwrite").parquet(p))
-  }
-
-  /** Deletes all but the latest `keep` snapshots (markers first, then
-    * data) and returns the GC'd versions. Retention must exceed the
-    * longest-running reader — the VACUUM contract. FULL-version tables
-    * only: on a table with delta versions, raw-version retention could
-    * retire a delta's base full version while keeping the delta (whose
-    * rows would silently vanish from chain reads) — use [[gcChains]]
-    * there; this guard turns that misuse into an error.
-    */
-  def gcSnapshots(spark: SparkSession, root: String, keep: Int = 2): Seq[Long] = {
-    require(keep >= 1, "must retain at least the current snapshot")
-    val vs = committedVersions(spark, root)
-    require(!vs.exists(v => isDeltaVersion(spark, root, v)),
-      s"$root has delta versions — raw-version retention would strand them; use gcChains")
-    dropVersions(spark, root, vs.dropRight(keep))
-  }
-
-  /** Deletes these versions, markers first (new readers can no longer
-    * resolve them), then data; returns them. */
-  private def dropVersions(spark: SparkSession, root: String, vs: Seq[Long]): Seq[Long] = {
-    val fs = fsOf(spark, root)
-    vs.foreach { v =>
-      fs.delete(commitMarker(root, v), false)
-      fs.delete(new org.apache.hadoop.fs.Path(snapDir(root, v)), true)
-    }
-    vs
-  }
-
   // -----------------------------------------------------------------
   // S6v delta chains — the append story for snapshot-versioned MVs,
   // closing the round-13 carve-out ("appends mutate the current
@@ -413,9 +348,8 @@ object Staging {
     vs.drop(lastFull)
   }
 
-  /** Validated data dir of a specific committed version (for layer-level
-    * readers and tests; [[readSnapshotAt]] reads the dir as one dataset,
-    * which multi-layer roots can't).
+  /** Validated data dir of a specific committed version: time travel is
+    * a parquet read of this dir (or of one of its layer subdirs).
     */
   def snapshotDirAt(spark: SparkSession, root: String, v: Long): String = {
     if (!fsOf(spark, root).exists(commitMarker(root, v)))
@@ -423,19 +357,15 @@ object Staging {
     snapDir(root, v)
   }
 
-  /** True when at least one chain dir carries `layer` — for layers that
-    * only appear once the first append lands (a fresh full refresh has
-    * no batch archive yet).
-    */
-  def chainHasLayer(spark: SparkSession, root: String, layer: String): Boolean =
-    chainHasLayerIn(spark, chainDirs(spark, root), layer)
-
   // Pinned chain resolution: a reader that needs MULTIPLE layers of the
   // same chain (IVF centroids + cells, NSW adj + vecs) must resolve the
   // committed marker set ONCE and derive every layer from it — two
-  // separate readChain calls can straddle a concurrent publish and pair
+  // separate chain resolutions can straddle a concurrent publish and pair
   // one chain's quantizer with another chain's assignments (wrong data,
-  // no error). `chainDirs` is the pin; the *In readers consume it.
+  // no error). `chainDirs` is the pin; the *In readers consume it, and a
+  // family's layer table decides which of them reads each layer
+  // ([[graft.ops.ChainIndex.Family.read]]). The layer name "" is the
+  // version dir itself (a single-layer table).
   //
   // Reader-vs-GC contract, stated completely: [[requirePinnedLive]]
   // catches a GC that lands between the pin and layer RESOLUTION (loud
@@ -467,76 +397,58 @@ object Staging {
           s"pinned chain dir $d was GC'd after the pin — retention must exceed the longest reader")
     }
 
-  private def layerDirsIn(spark: SparkSession, dirs: Seq[String], layer: String): Seq[String] = {
+  /** The pinned dirs' `layer` dirs that exist, oldest first. */
+  private def carriersIn(spark: SparkSession, dirs: Seq[String], layer: String): Seq[String] = {
     require(dirs.nonEmpty, "empty pinned chain")
     val fs = fsOf(spark, dirs.head)
     requirePinnedLive(fs, dirs)
-    val ds = dirs.map(d => s"$d/$layer")
+    dirs.map(d => if (layer.isEmpty) d else s"$d/$layer")
       .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
+  }
+
+  private def layerDirsIn(spark: SparkSession, dirs: Seq[String], layer: String): Seq[String] = {
+    val ds = carriersIn(spark, dirs, layer)
     if (ds.isEmpty)
       throw new java.io.IOException(s"no committed chain version carries layer $layer")
     ds
   }
 
-  /** [[chainHasLayer]] against a pinned dir list. */
-  def chainHasLayerIn(spark: SparkSession, dirs: Seq[String], layer: String): Boolean = {
-    require(dirs.nonEmpty, "empty pinned chain")
-    val fs = fsOf(spark, dirs.head)
-    requirePinnedLive(fs, dirs)
-    dirs.exists(d => fs.exists(new org.apache.hadoop.fs.Path(s"$d/$layer")))
-  }
-
-  /** Per-(root, layer) schema cache for chain/snapshot reads (round-16):
-    * a schema-less `spark.read.parquet(dir)` pays footer-inference work —
-    * including a Spark job — on EVERY call, and chain readers re-read
-    * layers many times per query (guard + body + compaction + query
-    * read). Every version of one root's layer is written by the same
-    * writer with one schema (the S6v protocol), so the first inference
-    * is authoritative for the root's lifetime in this process; only
-    * metadata is cached, never data. Keyed by (chain root, layer): the
-    * snap_ component is stripped so all versions share the entry, and
-    * roots are nonce-unique per process (ArtifactRoots), so a new build
-    * of the same dataset reuses the same schema by construction.
+  /** True when at least one pinned dir carries `layer` — for layers that
+    * only appear once the first append lands (a fresh full refresh has
+    * no batch archive yet).
     */
-  private val layerSchemas =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private[graft] def chainHasLayerIn(spark: SparkSession, dirs: Seq[String], layer: String): Boolean =
+    carriersIn(spark, dirs, layer).nonEmpty
 
-  private def snapRootOf(dir: String): String = {
+  /** One layer dir, its schema memoized per (chain root, layer): every
+    * version of one root's layer is written by the same writer with one
+    * schema (the S6v protocol), so the snap_ component is stripped and
+    * all versions share the entry; roots are nonce-unique per process
+    * (ArtifactRoots).
+    */
+  private def readLayerDir(spark: SparkSession, dir: String): DataFrame = {
     val i = dir.lastIndexOf("/snap_")
-    if (i > 0) dir.take(i) + dir.drop(i).replaceAll("^/snap_[0-9]+", "")
-    else dir
+    val key = if (i > 0) dir.take(i) + dir.drop(i).replaceAll("^/snap_[0-9]+", "") else dir
+    graft.Tables.parquetSchemaMemo(spark, dir, key)
   }
 
-  private[graft] def readLayerDir(spark: SparkSession, dir: String): DataFrame = {
-    val key = snapRootOf(dir)
-    val cached = layerSchemas.get(key)
-    if (cached != null) spark.read.schema(cached).parquet(dir)
-    else {
-      val df = spark.read.parquet(dir)
-      layerSchemas.put(key, df.schema)
-      df
-    }
-  }
-
-  /** [[readChain]] against a pinned dir list. */
-  def readChainIn(spark: SparkSession, dirs: Seq[String], layer: String): DataFrame =
-    layerDirsIn(spark, dirs, layer).map(readLayerDir(spark, _)).reduce(_ unionByName _)
-
-  /** [[readChainLatest]] against a pinned dir list. */
-  def readChainLatestIn(spark: SparkSession, dirs: Seq[String], layer: String): DataFrame =
-    readLayerDir(spark, layerDirsIn(spark, dirs, layer).last)
-
-  /** Append-shaped layer read: the union of `layer` across every chain
+  /** Append-shaped layer read: the union of `layer` across every pinned
     * dir that carries it (the full base + each delta batch). Dirs are
     * read separately and unioned by name — hive-partitioned layers keep
     * per-scan partition pruning, and no common basePath is required.
     */
-  def readChain(spark: SparkSession, root: String, layer: String): DataFrame =
-    readChainIn(spark, chainDirs(spark, root), layer)
+  private[graft] def readChainIn(spark: SparkSession, dirs: Seq[String], layer: String): DataFrame =
+    layerDirsIn(spark, dirs, layer).map(readLayerDir(spark, _)).reduce(_ unionByName _)
 
-  /** Rewrite-shaped layer read: `layer` from the NEWEST chain dir that
+  /** Rewrite-shaped layer read: `layer` from the NEWEST pinned dir that
     * carries it (every mutation rewrites such layers in full — CC
     * labels, centroid tables).
+    */
+  private[graft] def readChainLatestIn(spark: SparkSession, dirs: Seq[String], layer: String): DataFrame =
+    readLayerDir(spark, layerDirsIn(spark, dirs, layer).last)
+
+  /** [[readChainLatestIn]] on the current chain of `root`; `layer` ""
+    * reads the newest version of a single-layer table.
     */
   def readChainLatest(spark: SparkSession, root: String, layer: String): DataFrame =
     readChainLatestIn(spark, chainDirs(spark, root), layer)
@@ -546,7 +458,8 @@ object Staging {
     * markers first, then data. Counting retention in chains is what
     * keeps every retained read correct: dropping one old delta under
     * raw-version retention would silently lose that batch's rows from
-    * chain reads.
+    * chain reads. On a table with no deltas every version is its own
+    * chain, so this keeps exactly the newest `keepChains` versions.
     */
   def gcChains(spark: SparkSession, root: String, keepChains: Int = 2): Seq[Long] = {
     require(keepChains >= 1, "must retain at least the current chain")
@@ -556,7 +469,13 @@ object Staging {
     }
     if (fullIdxs.length <= keepChains) return Seq.empty
     val cutoff = fullIdxs(fullIdxs.length - keepChains) // first retained version index
-    dropVersions(spark, root, vs.take(cutoff))
+    val fs = fsOf(spark, root)
+    val dropped = vs.take(cutoff)
+    dropped.foreach { v =>
+      fs.delete(commitMarker(root, v), false) // new readers can no longer resolve it
+      fs.delete(new org.apache.hadoop.fs.Path(snapDir(root, v)), true)
+    }
+    dropped
   }
 
   /** V1 schema gate, FAILFAST flavor: any malformed document raises and

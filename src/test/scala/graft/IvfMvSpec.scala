@@ -23,7 +23,7 @@ class IvfMvSpec extends SparkSpec {
   test("probed cells scan is partition-pruned to the probe list") {
     import spark.implicits._
     val root = Embeddings.buildIvfIndex(spark, sfDir, "spec_prune", identity)
-    val snap = graft.weather.Staging.currentSnapshotDir(spark, root)
+    val snap = graft.weather.Staging.chainDirs(spark, root).last
     val all = spark.read.parquet(s"$snap/cells")
     val allCells = all.select($"cell").distinct().as[Int].collect().sorted.toSeq
     assert(allCells.size > 3, s"degenerate index: cells=$allCells")
@@ -51,7 +51,7 @@ class IvfMvSpec extends SparkSpec {
     import spark.implicits._
     val root = Embeddings.buildIvfIndex(spark, sfDir, "spec_append",
       _.filter($"vec_id" % 10 =!= 7))
-    val snap = graft.weather.Staging.currentSnapshotDir(spark, root)
+    val snap = graft.weather.Staging.chainDirs(spark, root).last
     val residentBefore = spark.read.parquet(s"$snap/cells")
       .select($"vec_id", $"cell").collect().toSet
     val centsBefore = spark.read.parquet(s"$snap/centroids").collect().toSet
@@ -68,7 +68,8 @@ class IvfMvSpec extends SparkSpec {
     assert(spark.read.parquet(s"$snap/cells").select($"vec_id", $"cell")
       .collect().toSet == residentBefore, "append mutated a committed version's cells")
     assert(spark.read.parquet(s"$snap/centroids").collect().toSet == centsBefore)
-    val afterSet = graft.weather.Staging.readChain(spark, root, "cells")
+    def cells = Embeddings.Ivf.read(spark, graft.weather.Staging.chainDirs(spark, root), "cells").get
+    val afterSet = cells
       .select($"vec_id", $"cell").collect().toSet
     assert(residentBefore.subsetOf(afterSet))
     assert(afterSet.size == residentBefore.size + nBatch)
@@ -83,8 +84,7 @@ class IvfMvSpec extends SparkSpec {
     // chain union — every FileSourceScan under the union carries the
     // partition filter (reading all cells of either dir would defeat the
     // layout at scale)
-    val pruned = graft.weather.Staging.readChain(spark, root, "cells")
-      .filter($"cell".isin(0, 1))
+    val pruned = cells.filter($"cell".isin(0, 1))
     val scans = pruned.queryExecution.executedPlan.collect {
       case f: FileSourceScanExec => f
     }
@@ -97,8 +97,7 @@ class IvfMvSpec extends SparkSpec {
     val vBefore = graft.weather.Staging.currentSnapshotVersion(spark, root)
     Embeddings.appendIvfIndex(spark, root, batch.limit(0))
     assert(graft.weather.Staging.currentSnapshotVersion(spark, root) === vBefore)
-    assert(graft.weather.Staging.readChain(spark, root, "cells")
-      .select($"vec_id", $"cell").collect().toSet == afterSet)
+    assert(cells.select($"vec_id", $"cell").collect().toSet == afterSet)
   }
 
   test("registered append query retrieves across resident and appended vectors") {

@@ -22,7 +22,8 @@ class PairGraphMvSpec extends SparkSpec {
   test("pair-graph refresh: sigs, sizes, pairs and labels equal a derivation written here") {
     import spark.implicits._
     val root = llm.TextDedup.refreshPairGraphMv(spark, sfDir)
-    def layer(name: String) = weather.Staging.readChain(spark, root, name)
+    def layer(name: String) =
+      llm.TextDedup.PairGraph.read(spark, weather.Staging.chainDirs(spark, root), name).get
     // distinct word 3-grams of every document with at least 3 tokens
     val tok = Tables.documents(spark, sfDir).select($"doc_id", split($"text", " ").as("t"))
       .filter(size($"t") >= 3)

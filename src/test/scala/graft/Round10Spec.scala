@@ -93,27 +93,22 @@ class Round10Spec extends SparkSpec {
     val baseTri = Graph.triangles(spark, sfDir).collect().toSeq
     val baseLpa = Graph.labelProp(spark, sfDir).collect().toSeq
     Graph.backboneMaterialize(spark, sfDir).count()
-    Graph.useMaterializedBackbone(root)
-    try {
-      assert(Graph.triangles(spark, sfDir).collect().toSeq === baseTri)
-      assert(Graph.labelProp(spark, sfDir).collect().toSeq === baseLpa)
-      // the MV-mode plan scans the parquet artifact and never touches the
-      // base tables the derivation needs
-      val plan = Graph.triangles(spark, sfDir).queryExecution.executedPlan.toString
-      assert(plan.contains("graft_backbone_mv_"), plan.take(1500))
-      assert(!plan.contains("lineitem"), "MV-mode plan still derives from base tables")
-      // dataset guard: with the switch on for THIS dataset, a kernel
-      // asked about ANOTHER dataset must never read THIS dataset's
-      // backbone (silent wrong data). Since round 13 the default path
-      // memoized-builds the OTHER dataset's own MV — also correct — so
-      // the pin is root-exact, not substring
-      val other = Graph.triangles(spark, "/root/testdata/sf0.01")
-        .queryExecution.executedPlan.toString
-      assert(!other.contains(root),
-        "different-dataset call read the materialized backbone")
-      assert(other.contains(Graph.backboneRoot("/root/testdata/sf0.01")),
-        "different-dataset call does not read its own backbone MV")
-    } finally Graph.clearMaterializedBackbone()
+    assert(Graph.triangles(spark, sfDir).collect().toSeq === baseTri)
+    assert(Graph.labelProp(spark, sfDir).collect().toSeq === baseLpa)
+    // the MV-mode plan scans the parquet artifact and never touches the
+    // base tables the derivation needs
+    val plan = Graph.triangles(spark, sfDir).queryExecution.executedPlan.toString
+    assert(plan.contains("graft_backbone_mv_"), plan.take(1500))
+    assert(!plan.contains("lineitem"), "MV-mode plan still derives from base tables")
+    // dataset guard: a kernel asked about ANOTHER dataset must never
+    // read THIS dataset's backbone (silent wrong data); it memoized-
+    // builds its own MV, so the pin is root-exact, not substring
+    val other = Graph.triangles(spark, "/root/testdata/sf0.01")
+      .queryExecution.executedPlan.toString
+    assert(!other.contains(root),
+      "different-dataset call read the materialized backbone")
+    assert(other.contains(Graph.backboneRoot("/root/testdata/sf0.01")),
+      "different-dataset call does not read its own backbone MV")
   }
 
   test("E6 PQ: one shared vector cache spans training/encode/re-rank — no parquet rescan, no blocks left") {

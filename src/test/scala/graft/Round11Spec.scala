@@ -18,16 +18,13 @@ class Round11Spec extends SparkSpec {
     import spark.implicits._
     val fresh = Graph.sssp(spark, sfDir).collect().toSeq
     Graph.backboneMaterialize(spark, sfDir).count()
-    Graph.useMaterializedBackbone(Graph.backboneRoot(sfDir))
-    try {
-      assert(Graph.sssp(spark, sfDir).collect().toSeq === fresh)
-      // the weighted read in MV mode scans the artifact, never the base
-      // tables — the (u, v, shared) columns come from parquet
-      val plan = Graph.backboneWeighted(spark, sfDir)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("graft_backbone_mv_"), plan.take(800))
-      assert(!plan.contains("lineitem"), plan.take(800))
-    } finally Graph.clearMaterializedBackbone()
+    assert(Graph.sssp(spark, sfDir).collect().toSeq === fresh)
+    // the weighted read scans the artifact, never the base
+    // tables — the (u, v, shared) columns come from parquet
+    val plan = Graph.backboneWeighted(spark, sfDir)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("graft_backbone_mv_"), plan.take(800))
+    assert(!plan.contains("lineitem"), plan.take(800))
   }
 
   test("G9 pipeline: backbone derived once, kernels run off the artifact, stages agree with standalone kernels") {

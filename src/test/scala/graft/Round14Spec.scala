@@ -4,109 +4,14 @@ import org.apache.spark.sql.functions._
 
 import graft.weather.Staging
 
-/** Round-14 pins: the S6v delta-chain protocol (atomic multi-layer
-  * refresh + batch-sized append versions), concurrent-reader isolation
-  * for the two MV refreshes that round 13 left as in-place overwrites
-  * (backbone, pair-graph), and long-session flatness as a TEST (the
-  * repeated-pass measurement `graft.Diag profile` also reports, wired
-  * into the suite so the Ckpt release discipline can't silently rot).
+/** Round-14 pins: the MV families on the S6v delta-chain protocol
+  * (pair-graph concurrent-reader isolation across appends, compaction
+  * of all three chained families, NSW insert) and long-session flatness
+  * as a TEST (the repeated-pass measurement `graft.Diag profile` also
+  * reports, wired into the suite so the Ckpt release discipline can't
+  * silently rot). The store's own pins live in StagingSpec.
   */
 class Round14Spec extends SparkSpec {
-
-  test("delta chains: full + deltas union, rewrite layers read latest, crash commits nothing") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_chain_").toString + "/mv"
-    // full v0: append-shaped layer `rows`, rewrite-shaped layer `state`
-    assert(Staging.publishSnapshot(spark, root) { p =>
-      spark.range(10).select($"id", lit(0L).as("src")).write.parquet(s"$p/rows")
-      Seq((0L, 10L)).toDF("v", "n").write.parquet(s"$p/state")
-    } === 0L)
-    // delta v1 extends the chain with a batch
-    assert(Staging.publishSnapshotDelta(spark, root) { p =>
-      spark.range(10, 15).select($"id", lit(1L).as("src")).write.parquet(s"$p/rows")
-      Seq((1L, 15L)).toDF("v", "n").write.parquet(s"$p/state")
-    } === 1L)
-    assert(Staging.chainVersions(spark, root) === Seq(0L, 1L))
-    assert(Staging.readChain(spark, root, "rows").count() === 15)
-    assert(Staging.readChainLatest(spark, root, "state").head().getLong(1) === 15L)
-    // a failed delta (crash before the marker) commits NOTHING ...
-    intercept[RuntimeException] {
-      Staging.publishSnapshotDelta(spark, root) { p =>
-        spark.range(15, 18).select($"id", lit(2L).as("src")).write.parquet(s"$p/rows")
-        throw new RuntimeException("writer died mid-append")
-      }
-    }
-    assert(Staging.currentSnapshotVersion(spark, root) === Some(1L))
-    assert(Staging.readChain(spark, root, "rows").count() === 15,
-      "uncommitted delta rows leaked into the chain read")
-    // ... and the retry reuses the version slot (orphan dir overwritten)
-    assert(Staging.publishSnapshotDelta(spark, root) { p =>
-      spark.range(15, 18).select($"id", lit(2L).as("src")).write.parquet(s"$p/rows")
-    } === 2L)
-    assert(Staging.readChain(spark, root, "rows").count() === 18)
-    // raw-version GC on a chained table is a guarded misuse: it could
-    // retire a delta's base while keeping the delta
-    intercept[IllegalArgumentException](Staging.gcSnapshots(spark, root, keep = 1))
-    // v2 carries no `state`: the rewrite-shaped read falls back to the
-    // newest chain dir that HAS the layer
-    assert(Staging.readChainLatest(spark, root, "state").head().getLong(1) === 15L)
-    assert(Staging.chainHasLayer(spark, root, "rows"))
-    assert(!Staging.chainHasLayer(spark, root, "absent"))
-    // a new FULL version starts a new chain: chain reads see only it
-    Staging.publishSnapshot(spark, root) { p =>
-      spark.range(100).select($"id", lit(3L).as("src")).write.parquet(s"$p/rows")
-    }
-    assert(Staging.chainVersions(spark, root) === Seq(3L))
-    assert(Staging.readChain(spark, root, "rows").count() === 100)
-    // chain-aware GC: 2 chains retained -> nothing deleted; a third
-    // chain retires the FIRST chain wholesale (full + its deltas —
-    // dropping a delta alone would silently lose appended rows)
-    assert(Staging.gcChains(spark, root, keepChains = 2) === Seq.empty)
-    Staging.publishSnapshot(spark, root) { p =>
-      spark.range(7).select($"id", lit(4L).as("src")).write.parquet(s"$p/rows")
-    }
-    assert(Staging.gcChains(spark, root, keepChains = 2) === Seq(0L, 1L, 2L))
-    assert(Staging.readChain(spark, root, "rows").count() === 7)
-    // time travel inside the retained previous chain still works
-    assert(spark.read.parquet(s"${Staging.snapshotDirAt(spark, root, 3L)}/rows").count() === 100)
-    // a delta can never be the first version of a table
-    val empty = java.nio.file.Files.createTempDirectory("graft_chain_").toString + "/e"
-    intercept[java.io.IOException] {
-      Staging.publishSnapshotDelta(spark, empty)(_ => ())
-    }
-  }
-
-  test("backbone MV: a concurrent reader across refreshes observes only complete committed versions") {
-    import spark.implicits._
-    // first refresh establishes the expected (deterministic) content
-    val first = graft.ops.Graph.backboneMaterialize(spark, sfDir).head()
-    val (nEdges, sumShared) = (first.getLong(0), first.getLong(4))
-    val root = graft.ops.Graph.backboneRoot(sfDir)
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val reads = new java.util.concurrent.atomic.AtomicLong(0)
-    val reader = new Thread(() => {
-      while (!stop.get()) {
-        try {
-          val r = Staging.readSnapshot(spark, root)
-            .agg(count(lit(1)), sum($"shared")).head()
-          if (r.getLong(0) != nEdges || r.getLong(1) != sumShared)
-            errs.add(s"inconsistent backbone read: n=${r.getLong(0)} sum=${r.getLong(1)}")
-          reads.incrementAndGet()
-        } catch {
-          case e: Throwable => errs.add(s"backbone read failed: ${e.getMessage}")
-        }
-      }
-    }, "backbone-reader")
-    reader.start()
-    try {
-      // the exact round-13 hazard: g0 refreshes while a kernel-shaped
-      // reader scans the artifact (the refresh used to yank its files)
-      for (_ <- 1 to 2) graft.ops.Graph.backboneMaterialize(spark, sfDir).count()
-    } finally { stop.set(true); reader.join() }
-    assert(errs.isEmpty, errs.toArray.mkString("\n"))
-    assert(reads.get() > 0, "reader never got a scan in — test proves nothing")
-  }
 
   test("pair-graph MV: a concurrent labels reader across appends observes only committed versions") {
     import spark.implicits._
@@ -224,7 +129,8 @@ class Round14Spec extends SparkSpec {
       .withColumn("nrm", sqrt(call_function("graft_dot", $"v", $"v")))
     llm.Embeddings.appendIvfIndex(spark, root, batch(6))
     assert(S.chainVersions(spark, root).size === 2)
-    val setBefore = S.readChain(spark, root, "cells")
+    def cells = llm.Embeddings.Ivf.read(spark, S.chainDirs(spark, root), "cells").get
+    val setBefore = cells
       .select($"vec_id", $"cell").collect().toSet
     val centsBefore = S.readChainLatest(spark, root, "centroids").collect().toSet
     Round14Spec.assertCompactionPreservesLayers(spark, root, Round14Spec.IvfLayers) {
@@ -232,11 +138,11 @@ class Round14Spec extends SparkSpec {
     }
     // one full version; identical rows; the quantizer did not move
     assert(S.chainVersions(spark, root).size === 1)
-    assert(S.readChain(spark, root, "cells")
+    assert(cells
       .select($"vec_id", $"cell").collect().toSet === setBefore)
     assert(S.readChainLatest(spark, root, "centroids").collect().toSet === centsBefore)
     // the compacted layer still prunes at the directory level
-    val pruned = S.readChain(spark, root, "cells").filter($"cell".isin(0, 1))
+    val pruned = cells.filter($"cell".isin(0, 1))
     val scan = pruned.queryExecution.executedPlan.collectFirst {
       case f: FileSourceScanExec => f
     }.get
@@ -246,7 +152,7 @@ class Round14Spec extends SparkSpec {
     // frozen quantizer (routing identical to a from-scratch assignment)
     llm.Embeddings.appendIvfIndex(spark, root, batch(7))
     assert(S.chainVersions(spark, root).size === 2)
-    val finalSet = S.readChain(spark, root, "cells")
+    val finalSet = cells
       .select($"vec_id", $"cell").collect().toSet
     val expected = llm.Embeddings.assignCells(
         batch(7), S.readChainLatest(spark, root, "centroids"))
@@ -265,11 +171,13 @@ class Round14Spec extends SparkSpec {
     // first append: 1 delta, not past the threshold — no compaction
     llm.Embeddings.appendIvfIndex(spark, root, batch(6), compactAfterDeltas = 1)
     assert(S.chainVersions(spark, root).size === 2)
-    val mid = S.readChain(spark, root, "cells").select($"vec_id", $"cell").collect().toSet
+    def cells = llm.Embeddings.Ivf.read(spark, S.chainDirs(spark, root), "cells").get
+      .select($"vec_id", $"cell").collect().toSet
+    val mid = cells
     // second append: 2 deltas > 1 — auto-compacts to one full version
     llm.Embeddings.appendIvfIndex(spark, root, batch(7), compactAfterDeltas = 1)
     assert(S.chainVersions(spark, root).size === 1)
-    val fin = S.readChain(spark, root, "cells").select($"vec_id", $"cell").collect().toSet
+    val fin = cells
     assert(mid.subsetOf(fin) && fin.size > mid.size, "auto-compaction lost or froze rows")
   }
 
@@ -290,7 +198,7 @@ class Round14Spec extends SparkSpec {
         .withColumn("nrm", sqrt(call_function("graft_dot", $"v", $"v")))
       val root = llm.Embeddings.buildNswIndex(spark, scratch)
       val before = llm.Embeddings.nswReadTopK(spark, scratch).collect().map(_.toSeq)
-      val baseSnap = Staging.currentSnapshotDir(spark, root)
+      val baseSnap = Staging.chainDirs(spark, root).last
       val baseBytes = spark.read.parquet(s"$baseSnap/adj").count()
       llm.Embeddings.appendNswIndex(spark, scratch, clones(1000000L))
       assert(Staging.chainVersions(spark, root).size === 2)
@@ -426,13 +334,15 @@ object Round14Spec {
     * (append-shaped: the chain union; rewrite-shaped: the newest
     * carrier), as a row multiset per layer.
     */
-  def layerRows(spark: SparkSession, root: String, t: TrueLayers): Map[String, Map[Seq[Any], Int]] =
-    (t.appendShaped ++ t.rewriteShaped).filter(Staging.chainHasLayer(spark, root, _)).map { l =>
+  def layerRows(spark: SparkSession, root: String, t: TrueLayers): Map[String, Map[Seq[Any], Int]] = {
+    val dirs = Staging.chainDirs(spark, root)
+    (t.appendShaped ++ t.rewriteShaped).filter(Staging.chainHasLayerIn(spark, dirs, _)).map { l =>
       val df =
-        if (t.appendShaped.contains(l)) Staging.readChain(spark, root, l)
-        else Staging.readChainLatest(spark, root, l)
+        if (t.appendShaped.contains(l)) Staging.readChainIn(spark, dirs, l)
+        else Staging.readChainLatestIn(spark, dirs, l)
       l -> df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (r, rs) => r -> rs.size }
     }.toMap
+  }
 
   /** Whether the chain's FULL version carries an `idbloom/` sidecar. */
   def fullVersionHasBloom(spark: SparkSession, root: String): Boolean = {

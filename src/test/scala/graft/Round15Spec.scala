@@ -60,7 +60,7 @@ class Round15Spec extends SparkSpec {
     assert(S.chainVersions(spark, rootA).size === 2)
     assert(S.chainVersions(spark, rootN).size === 5)
     // read-equivalence with the never-compacted twin, both layers
-    def cells(root: String) = S.readChain(spark, root, "cells")
+    def cells(root: String) = llm.Embeddings.Ivf.read(spark, S.chainDirs(spark, root), "cells").get
       .select($"vec_id", $"cell").collect().toSet
     assert(cells(rootA) === cells(rootN))
     assert(S.readChainLatest(spark, rootA, "centroids").collect().toSet
@@ -74,7 +74,7 @@ class Round15Spec extends SparkSpec {
     // the bound IS the read cost: one FileSourceScan per chain dir in the
     // union read, so the compacted chain plans 2 scans where the
     // never-compacted twin plans 5
-    def scans(root: String) = S.readChain(spark, root, "cells")
+    def scans(root: String) = llm.Embeddings.Ivf.read(spark, S.chainDirs(spark, root), "cells").get
       .queryExecution.executedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
       }.size
@@ -98,9 +98,9 @@ class Round15Spec extends SparkSpec {
     assert(S.chainVersions(spark, rootA).size === 2)
     assert(S.chainVersions(spark, rootN).size === 5)
     // identical index content: edge set and appended-vector archive
-    def adj(root: String) = S.readChain(spark, root, "adj")
+    def adj(root: String) = llm.Embeddings.Nsw.read(spark, S.chainDirs(spark, root), "adj").get
       .select($"src", $"dst").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    def vecIds(root: String) = S.readChain(spark, root, "vecs")
+    def vecIds(root: String) = llm.Embeddings.Nsw.read(spark, S.chainDirs(spark, root), "vecs").get
       .select($"vec_id").collect().map(_.getLong(0)).toSet
     assert(adj(rootA) === adj(rootN))
     assert(vecIds(rootA) === vecIds(rootN))
@@ -231,7 +231,7 @@ class Round15Spec extends SparkSpec {
       assert(Staging.chainVersions(spark, root).size === 2)
       // the retried batch landed exactly once (no phantom rows from the
       // failed attempt): every batch doc has one sizes row
-      val szs = Staging.readChain(spark, root, "sizes")
+      val szs = llm.TextDedup.PairGraph.read(spark, Staging.chainDirs(spark, root), "sizes").get
         .groupBy($"doc_id").agg(count(lit(1)).as("k"))
         .filter($"k" > 1).count()
       assert(szs === 0, "retry landed duplicate sizes rows")

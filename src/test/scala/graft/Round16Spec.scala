@@ -194,12 +194,13 @@ class Round16Spec extends SparkSpec {
       for (m <- Seq(12, 13))
         llm.Embeddings.appendIvfIndex(spark, rootB,
           vecs(m).withColumn("nrm", llm.Embeddings.norm($"v")))
-      val cellsS = S.readChain(spark, rootS, "cells")
+      def cells(root: String) = llm.Embeddings.Ivf.read(spark, S.chainDirs(spark, root), "cells").get
+      val cellsS = cells(rootS)
       assert(cellsS.groupBy($"vec_id").agg(count(lit(1)).as("k"))
         .filter($"k" > 1).count() === 0,
         "concurrent ingest landed a vec_id twice")
       assert(cellsS.select($"vec_id", $"cell").collect().toSet ===
-        S.readChain(spark, rootB, "cells").select($"vec_id", $"cell").collect().toSet,
+        cells(rootB).select($"vec_id", $"cell").collect().toSet,
         "concurrent streamed index diverged from the sequential batch twin")
     } finally { qA.stop(); qB.stop() }
   }

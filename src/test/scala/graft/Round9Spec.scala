@@ -191,7 +191,8 @@ class Round9Spec extends SparkSpec {
   test("G0 backbone MV: read-back artifact equals a fresh derivation") {
     import spark.implicits._
     val stats = ops.Graph.backboneMaterialize(spark, sfDir).head()
-    val mv = graft.weather.Staging.readSnapshot(spark, ops.Graph.backboneRoot(sfDir))
+    val mv = ops.Graph.Backbone.read(spark,
+      graft.weather.Staging.chainDirs(spark, ops.Graph.backboneRoot(sfDir)), "").get
     val derived = ops.Graph.backboneEdges(spark, sfDir)
     // equal count + one-directional exceptAll proves multiset equality
     // with a single consumption of the scoped-cached derivation (the

@@ -6,9 +6,20 @@ import org.apache.spark.sql.functions._
 import graft.weather.{Staging, WeatherGen, WeatherSchema}
 
 /** File-based ingest path: U1 flatten inversion, S5 incremental, S6 merge,
-  * S3/S4 roundtrip with real file metadata, V1 schema gates.
+  * S3/S4 roundtrip with real file metadata, V1 schema gates — and the
+  * versioned-artifact store behind it: rename-swap and snapshot publish,
+  * the commit lock, delta-chain resolution, chain GC, time travel and
+  * the family layer reader.
   */
 class StagingSpec extends SparkSpec {
+
+  /** Append-shaped read of `layer` across the current chain of `root`. */
+  private def chainUnion(root: String, layer: String) =
+    Staging.readChainIn(spark, Staging.chainDirs(spark, root), layer)
+
+  /** Time travel: committed version `v` of a single-layer table. */
+  private def readAt(root: String, v: Long) =
+    spark.read.parquet(Staging.snapshotDirAt(spark, root, v))
 
   test("U1 flatten exactly inverts the doc nesting (counts + values)") {
     import spark.implicits._
@@ -60,12 +71,13 @@ class StagingSpec extends SparkSpec {
   test("S3+S4 roundtrip: partitioned JSON write, read back with real _metadata paths") {
     val root = Files.createTempDirectory("graft_rt_").toString
     val docs = WeatherGen.docs(spark)
-    Staging.writeRaw(docs.drop("file_path"), root)
+    Staging.writeRawByRun(docs.drop("file_path"), root)
     val back = Staging.readRawJson(spark, root)
     assert(back.count() === WeatherGen.nCities.toLong * WeatherGen.nRuns)
     val paths = back.select("file_path").collect().map(_.getString(0))
     assert(paths.forall(_.contains("country=")), "hive layout carries country")
     assert(paths.forall(_.contains("city=")), "hive layout carries city")
+    assert(paths.forall(_.contains("run_date=")), "hive layout carries the run date")
     assert(back.filter(col("file_modified").isNull).count() === 0)
   }
 
@@ -191,7 +203,7 @@ class StagingSpec extends SparkSpec {
       while (!stop.get()) {
         Staging.currentSnapshotVersion(spark, root).foreach { v =>
           try {
-            val r = Staging.readSnapshotAt(spark, root, v)
+            val r = readAt(root, v)
               .agg(count(lit(1)), min($"ver"), max($"ver")).head()
             val (n, lo, hi) = (r.getLong(0), r.getLong(1), r.getLong(2))
             if (lo != hi || n != 100L * (lo + 1))
@@ -216,13 +228,14 @@ class StagingSpec extends SparkSpec {
     assert(errs.isEmpty, errs.toArray.mkString("\n"))
     assert(reads.get() > 0, "reader never got a snapshot in — test proves nothing")
     // time travel: every committed version remains readable at its state
-    assert(Staging.readSnapshotAt(spark, root, 2).count() === 300)
-    assert(Staging.readSnapshot(spark, root).count() === 500)
-    // GC retains the newest `keep`; older versions stop resolving
-    assert(Staging.gcSnapshots(spark, root, keep = 2) === Seq(0L, 1L, 2L))
+    assert(readAt(root, 2).count() === 300)
+    assert(Staging.readChainLatest(spark, root, "").count() === 500)
+    // GC retains the newest `keep` chains — on a delta-free table every
+    // version is its own chain; older versions stop resolving
+    assert(Staging.gcChains(spark, root, keepChains = 2) === Seq(0L, 1L, 2L))
     assert(Staging.currentSnapshotVersion(spark, root) === Some(4L))
-    assert(Staging.readSnapshotAt(spark, root, 3).count() === 400)
-    intercept[java.io.IOException](Staging.readSnapshotAt(spark, root, 2))
+    assert(readAt(root, 3).count() === 400)
+    intercept[java.io.IOException](readAt(root, 2))
   }
 
   test("S6 snapshot upsert: merge semantics with the previous version still readable") {
@@ -232,18 +245,27 @@ class StagingSpec extends SparkSpec {
         .withColumn("reading_datetime", to_timestamp($"reading_datetime"))
         .withColumn("file_modified", to_timestamp($"file_modified"))
     val root = Files.createTempDirectory("graft_snap_").toString + "/stg"
-    val v0 = Staging.upsertSnapshot(spark, root, batch(Seq(
+    // S6 MERGE with snapshot isolation: dedup-merge the batch into the
+    // current version and publish the result as the next one
+    def upsert(incoming: org.apache.spark.sql.DataFrame): Long = {
+      val merged = Staging.currentSnapshotVersion(spark, root) match {
+        case Some(v) => Staging.mergeStaging(readAt(root, v), incoming)
+        case None => incoming
+      }
+      Staging.publishSnapshot(spark, root)(p => merged.write.mode("overwrite").parquet(p))
+    }
+    val v0 = upsert(batch(Seq(
       ("f1", "t_2m:C", "2025-03-25 00:00:00", "2025-03-25 02:00:00", "1.0"),
       ("f1", "t_2m:C", "2025-03-25 01:00:00", "2025-03-25 02:00:00", "2.0"))))
-    val v1 = Staging.upsertSnapshot(spark, root, batch(Seq(
+    val v1 = upsert(batch(Seq(
       ("f1", "t_2m:C", "2025-03-25 00:00:00", "2025-03-26 02:00:00", "9.9"))))
     assert((v0, v1) === ((0L, 1L)))
-    val cur = Staging.readSnapshot(spark, root)
+    val cur = Staging.readChainLatest(spark, root, "")
     assert(cur.count() === 2)
     assert(cur.filter($"reading_datetime" === "2025-03-25 00:00:00")
       .select("reading_value").head.getString(0) === "9.9")
     // the pre-merge version is still exactly what it was (isolation)
-    val prev = Staging.readSnapshotAt(spark, root, 0)
+    val prev = readAt(root, 0)
     assert(prev.filter($"reading_datetime" === "2025-03-25 00:00:00")
       .select("reading_value").head.getString(0) === "1.0")
   }
@@ -275,7 +297,7 @@ class StagingSpec extends SparkSpec {
     assert(Staging.publishSnapshotDelta(spark, root) { p =>
       spark.range(2).write.parquet(s"$p/rows")
     } === 1L)
-    assert(Staging.readChain(spark, root, "rows").count() === 5)
+    assert(chainUnion(root, "rows").count() === 5)
     // same contract for the rename-swap publish (path-shaped, not root-shaped)
     val tbl = Files.createTempDirectory("graft_lock_").toString + "/tbl"
     Staging.publishAtomic(spark, tbl)(p => spark.range(4).write.parquet(p))
@@ -287,6 +309,128 @@ class StagingSpec extends SparkSpec {
     assert(Staging.breakPublishLock(spark, tbl))
     Staging.publishAtomic(spark, tbl)(p => spark.range(9).write.parquet(p))
     assert(spark.read.parquet(tbl).count() === 9)
+  }
+
+  test("delta chains: full + deltas union, rewrite layers read latest, crash commits nothing") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_chain_").toString + "/mv"
+    // full v0: append-shaped layer `rows`, rewrite-shaped layer `state`
+    assert(Staging.publishSnapshot(spark, root) { p =>
+      spark.range(10).select($"id", lit(0L).as("src")).write.parquet(s"$p/rows")
+      Seq((0L, 10L)).toDF("v", "n").write.parquet(s"$p/state")
+    } === 0L)
+    // delta v1 extends the chain with a batch
+    assert(Staging.publishSnapshotDelta(spark, root) { p =>
+      spark.range(10, 15).select($"id", lit(1L).as("src")).write.parquet(s"$p/rows")
+      Seq((1L, 15L)).toDF("v", "n").write.parquet(s"$p/state")
+    } === 1L)
+    assert(Staging.chainVersions(spark, root) === Seq(0L, 1L))
+    assert(chainUnion(root, "rows").count() === 15)
+    assert(Staging.readChainLatest(spark, root, "state").head().getLong(1) === 15L)
+    // a failed delta (crash before the marker) commits NOTHING ...
+    intercept[RuntimeException] {
+      Staging.publishSnapshotDelta(spark, root) { p =>
+        spark.range(15, 18).select($"id", lit(2L).as("src")).write.parquet(s"$p/rows")
+        throw new RuntimeException("writer died mid-append")
+      }
+    }
+    assert(Staging.currentSnapshotVersion(spark, root) === Some(1L))
+    assert(chainUnion(root, "rows").count() === 15,
+      "uncommitted delta rows leaked into the chain read")
+    // ... and the retry reuses the version slot (orphan dir overwritten)
+    assert(Staging.publishSnapshotDelta(spark, root) { p =>
+      spark.range(15, 18).select($"id", lit(2L).as("src")).write.parquet(s"$p/rows")
+    } === 2L)
+    assert(chainUnion(root, "rows").count() === 18)
+    // v2 carries no `state`: the rewrite-shaped read falls back to the
+    // newest chain dir that HAS the layer
+    assert(Staging.readChainLatest(spark, root, "state").head().getLong(1) === 15L)
+    assert(Staging.chainHasLayerIn(spark, Staging.chainDirs(spark, root), "rows"))
+    assert(!Staging.chainHasLayerIn(spark, Staging.chainDirs(spark, root), "absent"))
+    // a new FULL version starts a new chain: chain reads see only it
+    Staging.publishSnapshot(spark, root) { p =>
+      spark.range(100).select($"id", lit(3L).as("src")).write.parquet(s"$p/rows")
+    }
+    assert(Staging.chainVersions(spark, root) === Seq(3L))
+    assert(chainUnion(root, "rows").count() === 100)
+    // chain-aware GC: 2 chains retained -> nothing deleted; a third
+    // chain retires the FIRST chain wholesale (full + its deltas —
+    // dropping a delta alone would silently lose appended rows)
+    assert(Staging.gcChains(spark, root, keepChains = 2) === Seq.empty)
+    Staging.publishSnapshot(spark, root) { p =>
+      spark.range(7).select($"id", lit(4L).as("src")).write.parquet(s"$p/rows")
+    }
+    assert(Staging.gcChains(spark, root, keepChains = 2) === Seq(0L, 1L, 2L))
+    assert(chainUnion(root, "rows").count() === 7)
+    // time travel inside the retained previous chain still works
+    assert(spark.read.parquet(s"${Staging.snapshotDirAt(spark, root, 3L)}/rows").count() === 100)
+    // a delta can never be the first version of a table
+    val empty = Files.createTempDirectory("graft_chain_").toString + "/e"
+    intercept[java.io.IOException] {
+      Staging.publishSnapshotDelta(spark, empty)(_ => ())
+    }
+  }
+
+  test("backbone MV: a concurrent reader across refreshes observes only complete committed versions") {
+    import spark.implicits._
+    // first refresh establishes the expected (deterministic) content
+    val first = graft.ops.Graph.backboneMaterialize(spark, sfDir).head()
+    val (nEdges, sumShared) = (first.getLong(0), first.getLong(4))
+    val root = graft.ops.Graph.backboneRoot(sfDir)
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reads = new java.util.concurrent.atomic.AtomicLong(0)
+    val reader = new Thread(() => {
+      while (!stop.get()) {
+        try {
+          val r = Staging.readChainLatest(spark, root, "")
+            .agg(count(lit(1)), sum($"shared")).head()
+          if (r.getLong(0) != nEdges || r.getLong(1) != sumShared)
+            errs.add(s"inconsistent backbone read: n=${r.getLong(0)} sum=${r.getLong(1)}")
+          reads.incrementAndGet()
+        } catch {
+          case e: Throwable => errs.add(s"backbone read failed: ${e.getMessage}")
+        }
+      }
+    }, "backbone-reader")
+    reader.start()
+    try {
+      // the exact round-13 hazard: g0 refreshes while a kernel-shaped
+      // reader scans the artifact (the refresh used to yank its files)
+      for (_ <- 1 to 2) graft.ops.Graph.backboneMaterialize(spark, sfDir).count()
+    } finally { stop.set(true); reader.join() }
+    assert(errs.isEmpty, errs.toArray.mkString("\n"))
+    assert(reads.get() > 0, "reader never got a scan in — test proves nothing")
+  }
+
+  test("family read: each layer by its declared shape and optionality; an undeclared layer fails loudly") {
+    import spark.implicits._
+    import graft.ops.ChainIndex
+    val fam = new ChainIndex.Family("graft_spec_fam_", "spec family", Seq(
+      ChainIndex.Layer("rows", ChainIndex.AppendShaped),
+      ChainIndex.Layer("state", ChainIndex.RewriteShaped),
+      ChainIndex.Layer("archive", ChainIndex.AppendShaped, optional = true),
+      ChainIndex.Layer("meta", ChainIndex.RewriteShaped)))
+    val root = Files.createTempDirectory("graft_fam_").toString + "/mv"
+    Staging.publishSnapshot(spark, root) { p =>
+      spark.range(10).write.parquet(s"$p/rows")
+      Seq((0L, 10L)).toDF("v", "n").write.parquet(s"$p/state")
+    }
+    Staging.publishSnapshotDelta(spark, root) { p =>
+      spark.range(10, 15).write.parquet(s"$p/rows")
+      Seq((1L, 15L)).toDF("v", "n").write.parquet(s"$p/state")
+    }
+    val dirs = Staging.chainDirs(spark, root)
+    assert(fam.read(spark, dirs, "rows").get.count() === 15, "append-shaped: the chain union")
+    assert(fam.read(spark, dirs, "state").get.as[(Long, Long)].collect().toSeq === Seq((1L, 15L)),
+      "rewrite-shaped: the newest carrier only")
+    // an optional layer no version carries yet reads as absent ...
+    assert(fam.read(spark, dirs, "archive").isEmpty)
+    // ... a required one that is missing is a loud error, not an empty read
+    intercept[java.io.IOException](fam.read(spark, dirs, "meta"))
+    // a name the family never declared names the family and the layer
+    val e = intercept[IllegalArgumentException](fam.read(spark, dirs, "cells"))
+    assert(e.getMessage.contains("spec family") && e.getMessage.contains("'cells'"), e.getMessage)
   }
 
   test("V1 Dataset[EnrichedDoc] parse-as-validation accepts the generated docs") {
@@ -348,7 +492,7 @@ class StagingSpec extends SparkSpec {
       s"loser must fail loudly on the lock, got $err")
     // exactly ONE committed version, its data complete, lock released
     assert(Staging.currentSnapshotVersion(spark, root) === Some(0L))
-    val n = Staging.readSnapshot(spark, root).count()
+    val n = Staging.readChainLatest(spark, root, "").count()
     assert(n === 10L || n === 20L, s"committed snapshot is a complete write, got $n rows")
     assert(!Staging.breakPublishLock(spark, root), "winner must release the lock in its finally")
   }
@@ -418,7 +562,7 @@ class StagingSpec extends SparkSpec {
       assert(Staging.publishSnapshot(spark, root) { p =>
         spark.range(7).write.parquet(p)
       } === 0L)
-      assert(Staging.readSnapshot(spark, root).count() === 7)
+      assert(Staging.readChainLatest(spark, root, "").count() === 7)
       assert(!fs.exists(new org.apache.hadoop.fs.Path(root + "__lock")),
         "provider release must run in the publish finally")
     } finally graft.weather.CommitLock.provider = prev

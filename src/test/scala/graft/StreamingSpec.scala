@@ -381,7 +381,7 @@ class StreamingSpec extends SparkSpec {
     val q = EventStreams.cdcApplySink(
       input.toDF.toDF("k", "seq", "op", "c_status", "c_cents"), root, ckpt).start()
     def snapshot(): Map[Long, (String, Long)] =
-      graft.weather.Staging.readSnapshot(spark, root).collect()
+      graft.weather.Staging.readChainLatest(spark, root, "").collect()
         .map(r => r.getAs[Long]("k") ->
           (r.getAs[String]("status"), r.getAs[Long]("cents"))).toMap
     try {
@@ -402,7 +402,7 @@ class StreamingSpec extends SparkSpec {
       assert(snapshot() === Map(1L -> ("A2", 101L), 4L -> ("D", 400L),
         5L -> ("E", 500L)))
       // the prior version is immutable: a reader holding v0 still sees it
-      val travel = graft.weather.Staging.readSnapshotAt(spark, root, v0)
+      val travel = spark.read.parquet(graft.weather.Staging.snapshotDirAt(spark, root, v0))
         .collect().map(r => r.getAs[Long]("k")).toSet
       assert(travel === Set(1L, 2L, 3L, 4L))
       assert(graft.weather.Staging.currentSnapshotVersion(spark, root).get === v0 + 1)
@@ -531,10 +531,10 @@ class StreamingSpec extends SparkSpec {
       // streamed index ≡ batch-appended index, both layers — and no
       // vec_id landed twice (the within-batch dedup is binding: without
       // it the duplicated rows above land duplicate cells rows)
-      def cells(root: String) = S.readChain(spark, root, "cells")
-        .select($"vec_id", $"cell").collect().toSet
+      def cellRows(root: String) = llm.Embeddings.Ivf.read(spark, S.chainDirs(spark, root), "cells").get
+      def cells(root: String) = cellRows(root).select($"vec_id", $"cell").collect().toSet
       assert(cells(rootS) === cells(rootB))
-      assert(S.readChain(spark, rootS, "cells")
+      assert(cellRows(rootS)
         .groupBy($"vec_id").agg(count(lit(1)).as("k"))
         .filter($"k" > 1).count() === 0,
         "within-batch duplicate ids landed duplicate cells rows")
