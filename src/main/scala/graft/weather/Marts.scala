@@ -33,9 +33,10 @@ object Marts {
   /** W1 shared ranking (identical in all 4 facts, fact_*.sql:17-21):
     * freshest dateGenerated per (city, parameter, reading_datetime).
     * Defined once and branched four ways, but the frame is LAZY: nothing
-    * here materializes it, so every fact write and every fact count in
-    * `Pipeline.buildMarts` re-runs the window shuffle (4 writes + 4
-    * counts). Computing it once is ROADMAP direction 1.
+    * here materializes it, so each of the 4 fact writes in
+    * `Pipeline.buildMarts` runs the window shuffle (the writes run
+    * concurrently and count their rows by observation, with no count
+    * action). Computing it once is still open.
     */
   def ranked(stg: DataFrame): DataFrame =
     stg.withColumn("row_num",
