@@ -873,9 +873,9 @@ object Curation {
   // near-dup pair are their own singleton cluster and survive. Composes
   // L3 candidates × G4 components × T2 quality — the exact-hash C2
   // winner generalized to fuzzy families.
-  // 100 TB: candidates stay banded (no all-pairs), components are the
-  // O(log n)-round pointer jump, and the winner pick is one ranking
-  // window over cluster-sized groups.
+  // 100 TB: candidates stay banded (no all-pairs), components are one
+  // union-find pass (rounds only on a cross-partition frontier), and the
+  // winner pick is one ranking window over cluster-sized groups.
   def nearDedupBest(spark: SparkSession, dir: String): DataFrame =
     nearDedupReport(qualityFrame(spark, dir),
       TextDedup.componentLabels(spark, dir))

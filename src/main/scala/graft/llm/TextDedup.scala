@@ -425,9 +425,9 @@ object TextDedup {
   // cost stays bench-visible through cur_neardedup_mv, which REFRESHES
   // unconditionally before reading (the emb_ivf_mv convention).
   //
-  // 100 TB: the refresh is the one corpus-sized job (banded LSH + O(log n)
-  // CC rounds); each consumer then pays a labels-sized (pair-graph-sized,
-  // ≪ corpus) scan + one join. A daily-crawl deployment APPENDS instead
+  // 100 TB: the refresh is the one corpus-sized job (banded LSH + one
+  // union-find CC pass); each consumer then pays a labels-sized
+  // (pair-graph-sized, ≪ corpus) scan + one join. A daily-crawl deployment APPENDS instead
   // of refreshing: route the new batch through the L8 asymmetric probe
   // (incrDedup's incoming-probes-existing band join) to get batch×corpus
   // pairs, union them into /pairs, and re-run CC seeded from the stored
@@ -505,11 +505,12 @@ object TextDedup {
             .distinct()
           // The verified pair set is the critical path (it feeds CC, the
           // refresh's longest chain), so it is materialized next, alone on
-          // the cores, as an eager checkpoint: CC's iteration plans against
-          // a LogicalRDD leaf, never the shingle pipeline.
-          // Then CC→labels, the pairs write and the three per-doc layers
-          // run in parallel on the driver pool (guide §2.6): CC's rounds
-          // are driver-bound, and the writes fill the idle cores.
+          // the cores, as an eager checkpoint: CC plans against a
+          // LogicalRDD leaf, never the shingle pipeline.
+          // Then CC→labels (its pair checkpoint, then one union-find
+          // pass inside the labels write), the pairs write and the three
+          // per-doc layers run in parallel on the driver pool (guide §2.6).
+          // The writes fill the cores the CC's single task leaves idle.
           val vp = intersections(cand, Seq($"da", $"db", $"na", $"nb"), sh, sh)
             .transform(jaccardPairs).localCheckpoint()
           try {
@@ -548,7 +549,7 @@ object TextDedup {
     *    reuses its cached shingles), with resident set sizes read from
     *    the stored /sizes — no corpus-wide recompute;
     *  - relabeling runs CC over the ROOT graph of the batch's new pairs,
-    *    so the iteration state is merge-frontier-sized. Labels stay
+    *    so its union-find pass is merge-frontier-sized. Labels stay
     *    exactly "min doc_id reachable" — identical to a full rebuild
     *    (PairGraphMvSpec pins append == rebuild on a split corpus).
     * The batch frame must carry (doc_id, text) with doc_ids disjoint from
@@ -607,14 +608,14 @@ object TextDedup {
         .localCheckpoint() // consumed by the pairs write AND the relabel CC
       try {
         // relabel input (round-17, guide §2.3 shuffle-fewer-bytes applied
-        // to the CC iteration): run CC over the ROOT graph only — each new
+        // to the CC input): run CC over the ROOT graph only — each new
         // pair mapped to its endpoints' old component roots (self, when
         // unlabeled) — then re-point members with ONE join. Equivalence:
         // a member's only connectivity is through its root, so root-level
         // reachability IS full reachability; an old root is its
         // component's min doc_id, so min-over-roots = min doc of the
         // merged component, and an unmerged root's label is itself (the
-        // left-join coalesce). Iteration state shrinks from (all labeled
+        // left-join coalesce). CC's input shrinks from (all labeled
         // docs + pairs) to (touched roots + batch docs); root self-loops
         // (a pair internal to one old component) add no connectivity and
         // are dropped before the loop.
@@ -895,8 +896,8 @@ object TextDedup {
   private[graft] def simhashPairs(spark: SparkSession, dir: String): DataFrame =
     simhashBandJoin(simhashBands(simhashSigs(spark, dir)))
 
-  /** L4f fused simhash→clusters: signatures feed the shared min-label/
-    * pointer-jumping core (graft.ops.Graph.connectedComponents) through a
+  /** L4f fused simhash→clusters: signatures feed the shared union-find
+    * CC core (graft.ops.Graph.connectedComponents) through a
     * signature-compressed star graph — no global sort, no materialized
     * pairwise listing, and no quadratic-in-dup-density edge volume (see
     * the in-body comment). Output is the same cluster report shape as
@@ -919,7 +920,7 @@ object TextDedup {
     // hamming ≤ 3, the exact pairwise condition — and the certifying
     // oracle still derives them from the full pairwise listing.
     // Round-17 (guide §2.3 "shuffle fewer bytes" applied to the CC
-    // iteration state): run CC over the REP graph only and attach members
+    // input): run CC over the REP graph only and attach members
     // by ONE join afterwards, instead of feeding CC the rep pairs ∪ one
     // star edge per member. Equivalence: a member's only edge is the star
     // to its rep, so rep-level reachability IS full-graph reachability,
@@ -928,13 +929,12 @@ object TextDedup {
     // identical to CC over the full edge set. Node-set bookkeeping: the
     // old CC emitted exactly the docs appearing in ≥1 edge = members of
     // size-≥2 sig groups (via stars) ∪ reps with a rep pair; the filter
-    // below reproduces that set. Iteration state shrinks from (docs) to
+    // below reproduces that set. CC's input shrinks from (docs) to
     // (distinct signatures) — at dup-heavy corpora the whole point of the
-    // signature compression — and each CC round's join moves rep rows
-    // only. sig is cached through BOTH its consumers (grp feeds CC's
-    // input jobs; the member join runs in the final action) via
-    // untilResultConsumed — untilConsumed would release after CC's first
-    // convergence action and the final join would recompute the
+    // signature compression. sig is cached through BOTH its consumers
+    // (grp feeds CC's pair-checkpoint job; the member join runs in the
+    // final action) via untilResultConsumed — untilConsumed would release
+    // after that checkpoint job and the final join would recompute the
     // signature aggregation from scratch.
     val sig = simhashSigs(spark, dir).cache()
     // the release watcher registers only once `out` exists: if CC throws

@@ -86,15 +86,21 @@ object ChainIndex {
 
   /** One version being written: the family's derivation hands each layer
     * frame to [[write]] (the table supplies the layout) and its own id
-    * contribution to [[bloom]].
+    * contribution to [[bloom]]. An append's version carries its guarded
+    * batch and that batch's row count, which the append protocol already
+    * took.
     */
-  final class Version private[ChainIndex] (spark: SparkSession, fam: Family, dir: String) {
+  final class Version private[ChainIndex] (spark: SparkSession, fam: Family, dir: String,
+                                           batch: Option[(DataFrame, Long)] = None) {
     def write(layer: String, df: DataFrame): Unit = fam.layer(layer).write(df, dir)
 
-    /** `knownCount`: the number of ids, when the caller already holds it. */
+    /** `knownCount`: the number of ids, when the caller already holds it.
+      * For the append's own batch frame it defaults to the batch count,
+      * so the sidecar is one job. */
     def bloom(ids: DataFrame, knownCount: Option[Long] = None): Unit = {
       val c = fam.resident.get.col
-      IdBloom.write(spark, dir, ids.select(col(c)), c, knownCount)
+      val n = knownCount.orElse(batch.collect { case (b, rows) if b eq ids => rows })
+      IdBloom.write(spark, dir, ids.select(col(c)), c, n)
     }
   }
 
@@ -169,10 +175,12 @@ object ChainIndex {
         // answers whether it is empty
         val b0 = batch.localCheckpoint(false)
         ckpts += b0
-        b0.count() > 0 && {
+        val n0 = b0.count()
+        n0 > 0 && {
           val dirs = Staging.chainDirs(spark, root)
-          guarded(spark, root, dirs, b0, caller, idempotent, ckpts).foreach { b =>
-            Staging.publishSnapshotDelta(spark, root)(p => delta(b, dirs, new Version(spark, this, p)))
+          guarded(spark, root, dirs, b0, n0, caller, idempotent, ckpts).foreach { case (b, n) =>
+            Staging.publishSnapshotDelta(spark, root)(p =>
+              delta(b, dirs, new Version(spark, this, p, Some((b, n)))))
           }
           true
         }
@@ -182,27 +190,29 @@ object ChainIndex {
         compact(spark, root)
     }
 
-    /** The batch rows to publish, or None when nothing is left. */
+    /** The batch rows to publish with their count (`b0` holds `n0`), or
+      * None when nothing is left. */
     private def guarded(spark: SparkSession, root: String, dirs: Seq[String], b0: DataFrame,
-                        caller: String, idempotent: Boolean,
-                        ckpts: scala.collection.mutable.ArrayBuffer[DataFrame]): Option[DataFrame] =
+                        n0: Long, caller: String, idempotent: Boolean,
+                        ckpts: scala.collection.mutable.ArrayBuffer[DataFrame]): Option[(DataFrame, Long)] =
       resident match {
-        case None => Some(b0)
+        case None => Some((b0, n0))
         case Some(r) =>
           def exact = residentIds(spark, dirs, r)
           if (idempotent) {
             val fresh = IdBloom.filterFresh(spark, dirs, b0, r.col, exact)
-            if (fresh eq b0) Some(b0)
+            if (fresh eq b0) Some((b0, n0))
             else {
               val c = fresh.localCheckpoint(false)
               ckpts += c
-              if (c.count() > 0) Some(c) else None
+              val n = c.count()
+              if (n > 0) Some((c, n)) else None
             }
           } else {
             require(!IdBloom.overlaps(spark, dirs, b0, r.col, exact),
               s"$caller: batch re-ingests ${r.col}s already resident in $root — " +
                 s"${r.col}s must be disjoint (CDC ingest contract)")
-            Some(b0)
+            Some((b0, n0))
           }
       }
 

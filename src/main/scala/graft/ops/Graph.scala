@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.Tables
 
@@ -737,33 +738,128 @@ object Graph {
       |ORDER BY d0.node""".stripMargin
   }
 
-  /** Connected components over an undirected pair list `(u, v)` (numeric
-    * node ids): min-label propagation with pointer jumping, the Pregel/
-    * GraphX CC algorithm expressed relationally. Extracted from
-    * [[graft.llm.Curation.dupClusters]] so the dup-cluster resolver and
-    * the graph query family share ONE iteration core. The driver loop
-    * coordinates rounds and checks a converged label SUM (monotone: min-
-    * propagation only ever decreases a label, so sum(lbl) strictly
-    * decreases until fixpoint) — no data is collected. Pointer jumping
-    * (adopt the label OF my label) halves path lengths each round:
-    * O(log n) rounds, not O(diameter).
-    *
-    * Returns (node, component) where component = min node id reachable.
-    * 100 TB: each round is one shuffle join on node id; label frames stay
-    * node-sized (never edge-sized); localCheckpoint per round truncates
-    * the snowballing lineage (the round-4 dupClusters lesson).
-    *
-    * Pointer-jump doubling was A/B'd and REJECTED (round 12): at sf0.1 both
-    * consumers converge in 3 rounds (dup cliques and the co-purchase
-    * backbone have tiny diameter), so a second jump per round cannot cut
-    * rounds — it only added a checkpoint job per round (isolated A/B:
-    * g4_concomp 7.4 s single-jump vs 10.3 s doubled; the trace shows the
-    * loop is ~1.5 s of g4's total, dominated by the backbone derivation,
-    * not by iteration count). At a diameter where doubling would bind
-    * (>2^20 nodes in a path-ish component), the right move is the
-    * two-phase large-star/small-star algorithm, not more jumps here.
+  /** Edges one union-find task takes, which sets the pass's partition
+    * count P = ⌈edges / EdgesPerTask⌉. A task holds ≤ 2 nodes per edge in
+    * a `LongMap` of parents (about 50 B a node: a key and a value slot at
+    * load ≤ ½ plus the boxed parent), so 2^19 edges is ≤ 50 MiB and about
+    * a second of CPU. Every graph the suite, pipebench and sf0.1 build is
+    * far below it and runs as ONE task (P = 1).
     */
-  def connectedComponents(pairs: DataFrame): DataFrame = {
+  private[ops] val EdgesPerTask = 1L << 19
+
+  /** Connected components over an undirected pair list `(u, v)` (int or
+    * long node ids): (node, component = min node id reachable) for every
+    * node in a pair. Shared by G4 `concomp`, `llm_simhash_clusters` and the
+    * near-dup pair graph's refresh and append relabel (C3/C12/C18 read its
+    * labels layer).
+    *
+    * One executor pass, not label-propagation rounds:
+    *  1. the pairs are checkpointed once; their count rides that job as an
+    *     observation and sets P ([[EdgesPerTask]]);
+    *  2. one `mapPartitions` union-find over the hash-partitioned pairs
+    *     emits (node, local root = min node of its local component);
+    *  3. at P = 1 that pass IS the answer: the frontier is empty by
+    *     construction. At P > 1 a node that several partitions saw links
+    *     their local roots; min-label rounds run over that root–root
+    *     frontier graph only, and each node maps through one join.
+    * Correctness at P > 1: two local components of one component share a
+    * node, so their roots are joined in the frontier graph, and the
+    * component's min node is the local root of every local component it
+    * is in — so min over the frontier = min over the component.
+    *
+    * The driver only plans and reads one count; it never holds nodes or
+    * edges (round 17 rejected a driver-side union-find). A batch-sized
+    * graph costs two jobs: the checkpoint and the caller's action, where
+    * label propagation took one per round after an init job and planned
+    * each round on the driver (0.3–0.5 s a round, ROADMAP direction 5).
+    *
+    * Output columns carry the type and nullability of the union of the
+    * two endpoint columns, as the label-propagation form did — the labels
+    * layer's parquet footer records them. A pair with a null endpoint
+    * connects nothing; its other endpoint is still a node, and any null
+    * endpoint yields one (null, null) row.
+    * Contract: execute the result once (the checkpoint is released by
+    * its consuming action, [[Ckpt.freeOnConsumed]]).
+    */
+  def connectedComponents(pairs: DataFrame): DataFrame = components(pairs, EdgesPerTask)
+
+  /** [[connectedComponents]] with the per-task edge budget as a seam, so a
+    * spec can force a small graph onto the P > 1 frontier path. */
+  private[ops] def components(pairs: DataFrame, edgesPerTask: Long): DataFrame = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val uv = pairs.toDF("u", "v")
+    val nodeField = uv.select($"u".as("node")).unionByName(uv.select($"v".as("node"))).schema("node")
+    val box: Long => Any = nodeField.dataType match {
+      case LongType => x => x
+      case IntegerType => x => x.toInt
+      case t => throw new IllegalArgumentException(s"connectedComponents: node ids must be int or long, got $t")
+    }
+    val schema = StructType(Seq(nodeField, nodeField.copy(name = "component")))
+    val obs = Observation()
+    val p = uv.select($"u".cast(LongType), $"v".cast(LongType))
+      .observe(obs, count(lit(1)).as("n")).localCheckpoint()
+    // an input the optimizer proves empty drops the observation: 0 edges
+    val n = obs.get.getOrElse("n", 0L).asInstanceOf[Long]
+    val parts = math.max(1L, (n + edgesPerTask - 1) / edgesPerTask).toInt
+    val local = (if (parts == 1) p.coalesce(1) else p.repartition(parts, $"u"))
+      .mapPartitions(rows => unionFind(rows, box))(Encoders.row(schema))
+    if (parts == 1) Ckpt.freeOnConsumed(local, Seq(p))
+    else {
+      val lc = local.localCheckpoint()
+      Ckpt.free(p)
+      // a node several partitions saw links its local roots: one star
+      // per such node, from its min root, is the frontier graph
+      val multi = lc.groupBy($"node").agg(min($"component").as("m"), count(lit(1)).as("k"))
+        .filter($"k" > 1)
+      val frontier = lc.join(multi, Seq("node"))
+        .select($"m".as("u"), $"component".as("v")).filter($"u" =!= $"v")
+      val g = propagate(frontier).select($"node".as("root"), $"component".as("g"))
+      // every occurrence of a node maps to the same label, so any one is kept
+      Ckpt.freeOnConsumed(
+        lc.join(g, lc("component") === g("root"), "left")
+          .select($"node", coalesce($"g", $"component").as("component"))
+          .dropDuplicates("node"),
+        Seq(lc))
+    }
+  }
+
+  /** One partition's union-find: (node, min node of its local component)
+    * per node seen. Parents are node ids, linked by min id with path
+    * halving, so a root is its component's min; a pair with a null
+    * endpoint unites nothing. */
+  private def unionFind(rows: Iterator[Row], box: Long => Any): Iterator[Row] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x0: Long): Long = {
+      var x = parent.getOrElseUpdate(x0, x0)
+      while (parent(x) != x) { val up = parent(parent(x)); parent(x) = up; x = up }
+      x
+    }
+    var sawNull = false
+    rows.foreach { r =>
+      if (r.isNullAt(0) || r.isNullAt(1)) {
+        sawNull = true
+        for (i <- 0 to 1 if !r.isNullAt(i)) find(r.getLong(i))
+      } else {
+        val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
+        if (a < b) parent(b) = a else parent(a) = b
+      }
+    }
+    val labelled = parent.keys.toArray.iterator.map(x => Row(box(x), box(find(x))))
+    if (sawNull) Iterator.single(Row(null, null)) ++ labelled else labelled
+  }
+
+  /** Min-label propagation with pointer jumping over `(u, v)` pairs — the
+    * P > 1 frontier stage of [[connectedComponents]] (the frontier graph's
+    * nodes are local roots, so its state is root-sized). The driver loop
+    * checks a converged label SUM (monotone: min-propagation only ever
+    * decreases a label); pointer jumping halves path lengths each round,
+    * O(log n) rounds. Each round's state is a lazy local checkpoint that
+    * the convergence sum materializes; the prior round's blocks are freed
+    * once the next round's are, and the final labels release on the
+    * caller's consuming action.
+    */
+  private def propagate(pairs: DataFrame): DataFrame = {
     import pairs.sparkSession.implicits._
     // round-16 job-count fuse: every round's state is a LAZY local
     // checkpoint — localCheckpoint(eager = false) roots the frame at a
@@ -818,10 +914,11 @@ object Graph {
   /** G4 connected components of the co-purchase backbone — the component
     * structure of the supplier graph (market segments), the third classic
     * kernel after ranking (G1) and density (G2/G3). The Spark side runs
-    * [[connectedComponents]] (pointer jumping, O(log n) rounds); the
-    * DuckDB oracle computes the SAME labels from first principles with a
-    * recursive CTE (min reachable node id), so the gate checks algorithm-
-    * independent ground truth, not a replay of our iteration schedule.
+    * [[connectedComponents]] (one union-find pass: the backbone is one
+    * task's worth of edges); the DuckDB oracle computes the SAME labels
+    * from first principles with a recursive CTE (min reachable node id),
+    * so the gate checks algorithm-independent ground truth, not a replay
+    * of our iteration schedule.
     * Output: every backbone node with its component root and the
     * component's size — total order on node.
     */

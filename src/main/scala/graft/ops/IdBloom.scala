@@ -71,10 +71,10 @@ object IdBloom {
     * commits atomically with the version's data layers. `ids` is the
     * version's own contribution — batch-sized for deltas. The bloom is
     * sized from the id count: a caller that already holds it passes
-    * `knownCount` and the write is ONE job (the bloom aggregation);
+    * `knownCount` and the write is ONE job (the bloom aggregation) — an
+    * append's delta does, with the batch count the append protocol took;
     * otherwise a `count` job runs first, and both jobs evaluate `ids` (a
-    * frame that is not materialized — an append's per-doc groupBy, a
-    * compaction's chain read — is computed twice; ROADMAP direction 4).
+    * compaction's chain read is computed twice; ROADMAP direction 4).
     */
   def write(spark: SparkSession, versionDir: String, ids: DataFrame, idCol: String,
             knownCount: Option[Long] = None): Unit = {

@@ -6,7 +6,12 @@ the application started), wall (s), stages that ran (skipped stages are not
 counted), tasks, executor run seconds and executor CPU seconds summed over
 the job's tasks, the smallest task count of any stage that ran (a 1 there is
 a stage on one core), and the first `graft.*` frame of the call site that
-submitted the job (or, in parentheses, its first frame when none is `graft.*`).
+submitted the job. A job Spark submits from its own threads (a broadcast
+build) has no `graft.*` frame of its own: it is attributed to the SQL
+execution it ran for (the job's `spark.sql.execution.root.id`, whose
+`SparkListenerSQLExecutionStart` carries the action's call site), and a
+broadcast build is tagged `[broadcast]`. Otherwise the first frame is shown
+in parentheses.
 
 Getting a log needs no program change: the JVM picks the settings up from
 JAVA_TOOL_OPTIONS, e.g. for a benchmark run
@@ -67,6 +72,7 @@ def load(files):
     stages_run = {}     # stage id -> task count of the attempt that ran
     task_run_ms = {}    # stage id -> executor run ms
     task_cpu_ns = {}    # stage id -> executor cpu ns
+    sql_sites = {}      # SQL execution id -> call site of its action
     for ev in events(files):
         kind = ev.get("Event")
         if kind == "SparkListenerApplicationStart":
@@ -79,8 +85,11 @@ def load(files):
                 site = graft_frame(si.get("Details"))
                 if site:
                     break
+            props = ev.get("Properties") or {}
             jobs[jid] = {"start": ev["Submission Time"], "end": None, "stages": [],
-                         "site": site, "result": ""}
+                         "site": site, "result": "",
+                         "root": props.get("spark.sql.execution.root.id"),
+                         "broadcast": "broadcast exchange" in props.get("spark.job.tags", "")}
             for sid in ev.get("Stage IDs", []):
                 stage_job[sid] = jid
         elif kind == "SparkListenerJobEnd":
@@ -88,6 +97,8 @@ def load(files):
             if j is not None:
                 j["end"] = ev["Completion Time"]
                 j["result"] = ev.get("Job Result", {}).get("Result", "")
+        elif kind.endswith("SparkListenerSQLExecutionStart"):
+            sql_sites[str(ev.get("executionId"))] = graft_frame(ev.get("details"))
         elif kind == "SparkListenerStageSubmitted":
             si = ev["Stage Info"]
             stages_run[si["Stage ID"]] = si["Number of Tasks"]
@@ -100,6 +111,12 @@ def load(files):
         jid = stage_job.get(sid)
         if jid in jobs:
             jobs[jid]["stages"].append(sid)
+    for j in jobs.values():
+        sql_site = sql_sites.get(j["root"], "")
+        if j["site"].startswith("(") and sql_site and not sql_site.startswith("("):
+            j["site"] = sql_site
+        if j["broadcast"]:
+            j["site"] = "[broadcast] " + j["site"]
     return app_start, jobs, stages_run, task_run_ms, task_cpu_ns
 
 
