@@ -912,7 +912,7 @@ object Curation {
   def nearDedupMv(spark: SparkSession, dir: String): DataFrame = {
     val root = TextDedup.refreshPairGraphMv(spark, dir)
     nearDedupReport(qualityFrame(spark, dir),
-      TextDedup.PairGraph.read(spark, graft.weather.Staging.chainDirs(spark, root), "labels").get)
+      TextDedup.PairGraph.read(spark, graft.ops.ChainIndex.chainDirs(spark, root), "labels").get)
   }
 
   /** C23 pair-graph compaction as a REGISTERED, oracle-checked query —
@@ -943,10 +943,10 @@ object Curation {
     def batch(m: Int) = docs.filter($"doc_id" % 20 === m).select($"doc_id", $"text")
     TextDedup.appendPairGraphMv(spark, scratch, batch(7), compactAfterDeltas = 1)
     TextDedup.appendPairGraphMv(spark, scratch, batch(17), compactAfterDeltas = 1)
-    require(graft.weather.Staging.chainVersions(spark, root).size == 1,
+    require(graft.ops.ChainIndex.chainVersions(spark, root).size == 1,
       "cur_neardedup_compact: auto-compaction did not collapse the chain")
     nearDedupReport(qualityFrame(spark, dir),
-      TextDedup.PairGraph.read(spark, graft.weather.Staging.chainDirs(spark, root), "labels").get)
+      TextDedup.PairGraph.read(spark, graft.ops.ChainIndex.chainDirs(spark, root), "labels").get)
   }
 
   lazy val nearDedupCompactSql: String = nearDedupBestSql

@@ -490,14 +490,14 @@ object Embeddings {
     graft.GraftExtensions.ensure(spark)
     import spark.implicits._
     val q = vectors(spark, dir).filter($"vec_id" < 5)
-    // pin the CHAIN once (Staging.chainDirs — ONE marker-set listing),
+    // pin the CHAIN once (ChainIndex.chainDirs — ONE marker-set listing),
     // then derive BOTH layers from the pinned dirs: centroids from the
     // chain's newest carrier, cells as the union of the full base +
     // every committed append delta. Two independent chain resolutions
     // could straddle a concurrent rebuild's publish and pair the new
     // quantizer with the old chain's assignments (wrong cells probed,
     // no error) — the pin makes that impossible by construction.
-    val dirs = graft.weather.Staging.chainDirs(spark, root)
+    val dirs = ChainIndex.chainDirs(spark, root)
     val cents = Ivf.read(spark, dirs, "centroids").get
     val probes = probeCells(q, cents, nprobe = 3)
       .as[(Long, Seq[Float], Double, Int)].collect().toSeq.sortBy(r => (r._1, r._4))
@@ -609,7 +609,7 @@ object Embeddings {
     ivfHeldOutTopK(spark, dir, "cmp") { (root, heldOut) =>
       for (m <- Seq(7, 17))
         appendIvfIndex(spark, root, heldOut(col("vec_id") % 20 === m), compactAfterDeltas = 1)
-      require(graft.weather.Staging.chainVersions(spark, root).size == 1,
+      require(ChainIndex.chainVersions(spark, root).size == 1,
         "emb_ivf_compact: auto-compaction did not collapse the chain")
     }
 
@@ -1373,7 +1373,7 @@ object Embeddings {
   /** Pinned-chain corpus: (checkpoint-to-free, corpus view) = the
     * (pred-filtered) base table unioned with the chain's appended-vector
     * archive when the pinned dirs carry one. The pin (`dirs`) comes from
-    * ONE Staging.chainDirs resolution shared with the adjacency read, so
+    * ONE ChainIndex.chainDirs resolution shared with the adjacency read, so
     * vecs and adj can never come from different chains. The pair
     * distinguishes the checkpoint to FREE from the view over it (a pred
     * filter is a view on e0's checkpoint, not its own storage).
@@ -1401,7 +1401,7 @@ object Embeddings {
     val ckpts = scala.collection.mutable.ArrayBuffer[DataFrame](e0)
     try {
       // ONE chain pin for both layers (the ivfQueryFromIndex discipline)
-      val dirs = graft.weather.Staging.chainDirs(spark, root)
+      val dirs = ChainIndex.chainDirs(spark, root)
       val (eCk, e) = corpusWithVecs(spark, dirs, e0, pred)
       ckpts += eCk
       val adj = Nsw.read(spark, dirs, "adj").get.localCheckpoint()
@@ -1579,13 +1579,13 @@ object Embeddings {
     * own sub-batch — so a two-sub-batch ingest provably cannot share
     * E23's single-insert oracle the way IVF's per-row frozen-quantizer
     * assignment can. The auto-trigger path for NSW is pinned by
-    * Round14Spec/Round15Spec; what the oracle adds here is the
+    * ChainIndexSpec; what the oracle adds here is the
     * compacted-artifact correctness through the registered read path.
     */
   def nswCompactTopK(spark: SparkSession, dir: String): DataFrame =
     nswHeldOutTopK(spark, dir, "cmp") { root =>
       compactNswIndex(spark, root)
-      require(graft.weather.Staging.chainVersions(spark, root).size == 1,
+      require(ChainIndex.chainVersions(spark, root).size == 1,
         "emb_nsw_compact: compaction did not collapse the chain")
     }
 

@@ -534,7 +534,7 @@ object TextDedup {
     * certifies; layer-level reader for consumers and specs.
     */
   private[graft] def pairGraphPairs(spark: SparkSession, dir: String): DataFrame =
-    PairGraph.read(spark, graft.weather.Staging.chainDirs(spark, pairGraphRoot(dir)), "pairs").get
+    PairGraph.read(spark, ChainIndex.chainDirs(spark, pairGraphRoot(dir)), "pairs").get
 
   /** Incremental batch ingest into a pair-graph MV BUILT in this process
     * — the per-day path of the 100 TB daily-crawl shape (the full refresh
@@ -684,7 +684,7 @@ object TextDedup {
     val root = pairGraphRoot(dir)
     PairGraph.ensureBuilt(root) { refreshPairGraphMv(spark, dir); () }
     // labels are rewrite-shaped: read from the newest committed version
-    PairGraph.read(spark, graft.weather.Staging.chainDirs(spark, root), "labels").get
+    PairGraph.read(spark, ChainIndex.chainDirs(spark, root), "labels").get
   }
 
   val minhashLshSql: String =

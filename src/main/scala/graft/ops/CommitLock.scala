@@ -1,13 +1,13 @@
-package graft.weather
+package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** The cross-process writer-exclusion PRIMITIVE behind
-  * [[Staging.publishAtomic]]/publishSnapshot/publishSnapshotDelta —
-  * extracted from `withPublishLock` so the atomicity story is a pluggable
-  * strategy instead of prose (round-15 verdict item 5). The publish
+/** The cross-process writer-exclusion PRIMITIVE behind every publish —
+  * the staging table's rename swap (`Staging.publishAtomic`) and
+  * [[ChainIndex]]'s publishSnapshot/publishSnapshotDelta, each taken
+  * through the one lock scope [[CommitLock.withPublishLock]]. The publish
   * protocol (acquire → recover → write → commit → release-in-finally) is
-  * unchanged; only HOW "acquire" is made atomic varies by store:
+  * fixed; only HOW "acquire" is made atomic varies by store:
   *
   *  - [[CommitLock.FsCreate]] (default): `fs.create(lock,
   *    overwrite=false)` — a real atomic create-if-absent on HDFS and
@@ -15,7 +15,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    the SAME call is CHECK-then-PUT (HEAD probe + unconditional PUT),
   *    so two writers racing within the probe window can both believe
   *    they hold the lock — the documented hazard, now an executable
-  *    spec: StagingSpec races two writers through a check-then-act
+  *    spec: ChainIndexSpec races two writers through a check-then-act
   *    double and shows both "win", then through a conditional-put double
   *    and shows exactly one does.
   *  - A multi-process object-store deployment plugs in one of the
@@ -27,7 +27,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * Release stays best-effort delete in the publisher's finally; a writer
   * that dies between acquire and release leaves the lock behind
-  * DELIBERATELY — [[Staging.breakPublishLock]] is the recovery contract.
+  * DELIBERATELY — `Staging.breakPublishLock` is the recovery
+  * contract.
   */
 trait CommitLockProvider {
   /** Atomically create the lock marker at `lock`; true iff this caller
@@ -46,7 +47,7 @@ object CommitLock {
     * `fs.create(overwrite=false)` is an atomic namespace operation. On
     * `file:` schemes, Hadoop's LocalFileSystem implements the same call
     * as exists-probe + create — CHECK-then-act, exactly the S3A shape —
-    * which StagingSpec's two-writer race pin caught double-acquiring
+    * which ChainIndexSpec's two-writer race pin caught double-acquiring
     * (both racers landed inside the probe window; the commit-marker
     * create was what finally threw). Local locks therefore go through
     * `java.io.File.createNewFile` (O_CREAT|O_EXCL — the kernel's
@@ -66,8 +67,24 @@ object CommitLock {
 
   /** The active provider — a process-wide seam (every publish variant
     * takes its lock through it). Swapped only at deployment setup or by
-    * StagingSpec's race pins; volatile so a swap is visible to all
+    * ChainIndexSpec's race pins; volatile so a swap is visible to all
     * writer threads.
     */
   @volatile private[graft] var provider: CommitLockProvider = FsCreate
+
+  /** THE lock scope of every publish variant (rename swap, snapshot,
+    * delta): `<path>__lock` acquired through [[provider]], `body` run,
+    * the lock released in the finally. A second publisher fails fast
+    * with an IOException; a writer that dies between acquire and release
+    * leaves the lock behind deliberately (see `breakPublishLock`).
+    */
+  private[graft] def withPublishLock[A](fs: FileSystem, path: String, what: String)(body: => A): A = {
+    val lock = new Path(path + "__lock")
+    val p = provider
+    if (!p.tryAcquire(fs, lock))
+      throw new java.io.IOException(
+        s"another $what to $path is in progress ($lock exists); " +
+          "if its writer is dead, call breakPublishLock first")
+    try body finally p.release(fs, lock)
+  }
 }

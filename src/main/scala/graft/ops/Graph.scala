@@ -171,7 +171,7 @@ object Graph {
     // its own backbone, never this one's (wrong data, no error)
     val root = backboneRoot(dir)
     Backbone.ensureBuilt(root) { refreshBackboneMv(spark, dir); () }
-    Backbone.read(spark, graft.weather.Staging.chainDirs(spark, root), "").get
+    Backbone.read(spark, ChainIndex.chainDirs(spark, root), "").get
       .select(col("u"), col("v"), col("shared"))
   }
 
@@ -448,7 +448,7 @@ object Graph {
     */
   private[graft] def refreshBackboneMv(spark: SparkSession, dir: String): DataFrame = {
     val root = Backbone.build(spark, dir) { v => v.write("", deriveBackboneWeighted(spark, dir)) }
-    Backbone.read(spark, graft.weather.Staging.chainDirs(spark, root), "").get
+    Backbone.read(spark, ChainIndex.chainDirs(spark, root), "").get
   }
 
   def backboneMaterialize(spark: SparkSession, dir: String): DataFrame = {
@@ -920,14 +920,17 @@ object Graph {
     * so the gate checks algorithm-independent ground truth, not a replay
     * of our iteration schedule.
     * Output: every backbone node with its component root and the
-    * component's size — total order on node.
+    * component's size — total order on node. The size is a window count
+    * over the one CC result, so the union-find runs once (a self-join on
+    * the sizes would plan it twice); the null-component filter keeps
+    * exactly the rows an inner join on `component` would.
     */
   def concomp(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val cc = connectedComponents(backboneEdges(spark, dir).select($"u", $"v"))
-    val sizes = cc.groupBy($"component").agg(count(lit(1)).as("comp_size"))
-    cc.join(broadcast(sizes), Seq("component"))
-      .select($"node", $"component", $"comp_size")
+    connectedComponents(backboneEdges(spark, dir).select($"u", $"v"))
+      .filter($"component".isNotNull)
+      .select($"node", $"component",
+        count(lit(1)).over(Window.partitionBy($"component")).as("comp_size"))
       .orderBy($"node")
   }
 

@@ -199,7 +199,7 @@ object EventStreams {
     * via foreachBatch — the escape hatch that gives a streaming query
     * batch-only sinks and merge semantics. Each batch unions the current
     * table with the micro-batch and keeps the freshest row per user (the
-    * same W1 dedup-merge shape as weather/Staging.mergeStaging). The
+    * same W1 dedup-merge shape as `Staging.mergeStaging`). The
     * publish goes through Staging.publishAtomic's two-phase write-temp +
     * rename swap, so a crash mid-batch leaves the previous snapshot
     * readable (the foreachBatch write is also exactly-once-per-epoch via
@@ -261,6 +261,12 @@ object EventStreams {
     * NUMBERS are therefore not a stable batch count; state and reads
     * are unaffected.
     *
+    * Retention: every publish is a full, state-sized version, so each
+    * batch GCs down to the newest two (`gcChains(keepChains = 2)`, the
+    * retention `ChainIndex.Family.build` applies) — a reader still on the
+    * previous version keeps it, and a long-running stream's disk stays
+    * bounded by two states instead of one per batch.
+    *
     * 100 TB: per-batch cost is the A22 shape — feed-sized latest-change
     * aggregation + one key join against the snapshot; the publish
     * rewrites only what the merge rewrites. A deployment partitions the
@@ -286,8 +292,8 @@ object EventStreams {
         // version — per-batch cost stays FEED-sized
         if (!feed.isEmpty) {
         val cols = Seq("k", "status", "cents").map(col)
-        val base = graft.weather.Staging.currentSnapshotVersion(s, root) match {
-          case Some(_) => graft.weather.Staging.readChainLatest(s, root, "").select(cols: _*)
+        val base = graft.ops.ChainIndex.currentSnapshotVersion(s, root) match {
+          case Some(_) => graft.ops.ChainIndex.readChainLatest(s, root, "").select(cols: _*)
           case None =>
             s.createDataFrame(s.sparkContext.emptyRDD[Row],
               org.apache.spark.sql.types.StructType(Seq(
@@ -301,8 +307,9 @@ object EventStreams {
         // immutable, so this is latency hygiene, not correctness)
         val merged = graft.ops.Incremental.applyChanges(base, feed)
           .select(cols: _*).localCheckpoint(true)
-        graft.weather.Staging.publishSnapshot(s, root)(p =>
+        graft.ops.ChainIndex.publishSnapshot(s, root)(p =>
           merged.write.parquet(p))
+        graft.ops.ChainIndex.gcChains(s, root, keepChains = 2)
         graft.ops.Ckpt.free(merged)
         }
         // release the feed checkpoint whether the batch was empty or not
@@ -347,7 +354,7 @@ object EventStreams {
   // ONE resident probe per micro-batch total (the filter IS the dup
   // guard in idempotent mode), inside the writers' monitor — so two
   // concurrent ingest streams on one index serialize and dedup instead
-  // of tripping a guard; Round16Spec pins that contract. An empty
+  // of tripping a guard; ChainIndexSpec pins that contract. An empty
   // trigger tick costs one isEmpty probe (the appends' first check) —
   // no checkpoint, no resident work.
 

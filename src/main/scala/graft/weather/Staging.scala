@@ -14,6 +14,11 @@ import org.apache.spark.sql.types._
   * applied BEFORE the explodes — predicate pushdown stops at generators
   * (SURVEY.md §4 caveat), and the reference does the same (its incremental
   * filter sits in the pre-FLATTEN CTE, stg_weather_raw.sql:21-25).
+  *
+  * The table's writes and reads live here: scan, incremental filter,
+  * flatten, merge, the raw and staging writes behind the rename swap, and
+  * the V1 readers. The versioned store the indexes and views publish
+  * through is [[graft.ops.ChainIndex]].
   */
 object Staging {
 
@@ -115,28 +120,6 @@ object Staging {
       .drop("__rn")
   }
 
-  /** THE cross-process writer-exclusion seam — every publish variant
-    * (rename-swap, snapshot, delta) takes its lock through this one hook,
-    * and the acquire/release PRIMITIVE is the pluggable
-    * [[CommitLockProvider]] strategy ([[CommitLock.provider]]): the
-    * default is HDFS/local-FS atomic create-if-absent; the S3A
-    * check-then-act hazard and its conditional-PUT upgrade are documented
-    * on the trait and pinned executable by StagingSpec's race tests.
-    * Release is best-effort in the caller's finally; a writer that dies
-    * between acquire and release leaves the lock behind DELIBERATELY —
-    * see [[breakPublishLock]] for the recovery contract.
-    */
-  private def withPublishLock[A](fs: org.apache.hadoop.fs.FileSystem,
-                                 path: String, what: String)(body: => A): A = {
-    val lock = new org.apache.hadoop.fs.Path(path + "__lock")
-    val provider = CommitLock.provider
-    if (!provider.tryAcquire(fs, lock))
-      throw new java.io.IOException(
-        s"another $what to $path is in progress ($lock exists); " +
-          "if its writer is dead, call breakPublishLock first")
-    try body finally provider.release(fs, lock)
-  }
-
   /** S6 crash-safe publish: two-phase write-temp + FS rename swap — the
     * durability shape of the reference's transactional MERGE
     * (stg_weather_raw.sql:3-7) without a table format. The new snapshot is
@@ -152,9 +135,10 @@ object Staging {
     *
     * SINGLE WRITER ENFORCED: the tmp/old staging dirs are per-path, so two
     * concurrent publishers to the same path would delete each other's
-    * snapshots mid-swap. A `<path>__lock` marker (created atomically with
-    * overwrite=false) makes the second publisher fail fast instead; it is
-    * released on every exit path. A publisher that dies between acquire and
+    * snapshots mid-swap. A `<path>__lock` marker, taken through
+    * [[graft.ops.CommitLock.withPublishLock]] (the lock every chain
+    * publish takes too), makes the second publisher fail fast instead; it
+    * is released on every exit path. A publisher that dies between acquire and
     * the finally (kill -9) leaves the marker behind — that is deliberate:
     * the next run must decide whether the dead writer's job is truly gone
     * before calling [[breakPublishLock]] (same recover-then-retry contract
@@ -164,7 +148,7 @@ object Staging {
     import org.apache.hadoop.fs.Path
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withPublishLock(fs, path, "publish") {
+    graft.ops.CommitLock.withPublishLock(fs, path, "publish") {
       recoverPublished(spark, path) // a crashed prior swap's __old is the only copy — restore, don't delete
       val tmp = new Path(path + "__tmp")
       val old = new Path(path + "__old")
@@ -220,263 +204,13 @@ object Staging {
   def writeStagingAtomic(stg: DataFrame, path: String): Unit =
     publishAtomic(stg.sparkSession, path)(p => writeStaging(stg, p))
 
-  // -----------------------------------------------------------------
-  // S6+ snapshot-versioned publish — minimal MVCC ACID without a table
-  // format dependency. The reference gets MERGE + snapshot isolation
-  // free from Snowflake (stg_weather_raw.sql:3-7); publishAtomic above
-  // gives single-writer crash safety but a reader overlapping the
-  // rename swap can observe the table mid-swap. This variant gives
-  // CONCURRENT readers snapshot isolation and time travel:
-  //
-  //   <root>/snap_<N>/      immutable data directory, fully written first
-  //   <root>/_commit_<N>    empty marker; its CREATE is the atomic commit
-  //
-  // Readers resolve max committed N and read snap_N — an immutable dir a
-  // later publish never touches, so a reader holding version N is
-  // isolated from the writer publishing N+1 (and can time-travel to any
-  // retained version). Writers serialize on the same __lock contract as
-  // publishAtomic. A writer crash before the marker leaves an orphan
-  // snap dir that the next publish of that version deletes and rewrites;
-  // the commit point itself is one atomic create. GC ([[gcChains]])
-  // deletes beyond-retention MARKERS first — new readers can no longer
-  // resolve them — then the data dirs; like Delta/Iceberg VACUUM,
-  // retention must exceed the longest reader (the documented contract,
-  // not a new invention). At 100 TB the snapshot dirs hold partitioned
-  // parquet and the markers are O(1) metadata — the same shape, zero
-  // extra data copies beyond what the merge rewrites.
-
-  private def snapDir(root: String, v: Long): String = f"$root/snap_$v%06d"
-  private def commitMarker(root: String, v: Long) =
-    new org.apache.hadoop.fs.Path(f"$root/_commit_$v%06d")
-
-  private def fsOf(spark: SparkSession, root: String) =
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def committedVersions(spark: SparkSession, root: String): Seq[Long] = {
-    val fs = fsOf(spark, root)
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(rootP)) Seq.empty
-    else fs.listStatus(rootP).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("_commit_"))
-      .map(_.stripPrefix("_commit_").toLong).sorted
-  }
-
-  /** Highest committed snapshot version, None for an empty table. */
-  def currentSnapshotVersion(spark: SparkSession, root: String): Option[Long] =
-    committedVersions(spark, root).lastOption
-
-  /** Publishes `write`'s output as the next snapshot version and returns
-    * it. The marker create is the commit point: every failure before it
-    * leaves the table at its previous version with only an orphan data
-    * dir to clean up (which re-publishing overwrites).
-    */
-  def publishSnapshot(spark: SparkSession, root: String)(write: String => Unit): Long =
-    publishVersion(spark, root, delta = false)(write)
-
-  /** The one publish body behind [[publishSnapshot]] and
-    * [[publishSnapshotDelta]]: lock, next version, clear a pre-commit
-    * orphan, write, tag a delta, create the commit marker.
-    */
-  private def publishVersion(spark: SparkSession, root: String, delta: Boolean)(
-      write: String => Unit): Long = {
-    import org.apache.hadoop.fs.Path
-    val fs = fsOf(spark, root)
-    if (!delta) fs.mkdirs(new Path(root))
-    withPublishLock(fs, root, "snapshot publish") {
-      val cur = currentSnapshotVersion(spark, root)
-      if (delta && cur.isEmpty)
-        throw new java.io.IOException(s"no committed snapshot under $root to extend with a delta")
-      val next = cur.getOrElse(-1L) + 1
-      val data = new Path(snapDir(root, next))
-      fs.delete(data, true) // orphan from a pre-commit crash of this version
-      write(data.toString)
-      if (delta) fs.create(deltaTag(root, next), false).close()
-      fs.create(commitMarker(root, next), false).close()
-      next
-    }
-  }
-
-  // -----------------------------------------------------------------
-  // S6v delta chains — the append story for snapshot-versioned MVs,
-  // closing the round-13 carve-out ("appends mutate the current
-  // version's dir"): an append now publishes a batch-sized DELTA
-  // version instead of writing files into a committed snapshot, so
-  // every committed version is truly immutable (time travel to N always
-  // reproduces N) and a multi-layer append commits atomically with one
-  // marker. Layout: each version dir holds named LAYER subdirs
-  // (`snap_N/cells`, `snap_N/pairs`, …); a delta version carries a
-  // `_delta` tag file inside its dir. Readers resolve the CHAIN — the
-  // latest committed FULL version plus every committed delta after
-  // it — and union a layer across the chain dirs that carry it
-  // (append-shaped layers) or read it from the newest dir that does
-  // (rewrite-shaped layers like CC labels, which every version rewrites
-  // in full). This is the Delta-Lake full+delta file story with the
-  // commit log spelled as one marker file per version; at 100 TB a
-  // daily append stays batch-sized and the full refresh is the periodic
-  // compaction that starts a new chain. GC is chain-aware
-  // ([[gcChains]]): dropping an old delta would silently lose rows, so
-  // retention is counted in whole chains, never raw versions.
-
-  private def deltaTag(root: String, v: Long) =
-    new org.apache.hadoop.fs.Path(s"${snapDir(root, v)}/_delta")
-
-  private def isDeltaVersion(spark: SparkSession, root: String, v: Long): Boolean =
-    fsOf(spark, root).exists(deltaTag(root, v))
-
-  /** Publishes `write`'s output as a DELTA version on the current chain.
-    * Same lock + next-version + commit-marker protocol as
-    * [[publishSnapshot]]; the `_delta` tag lands inside the data dir
-    * before the marker, so a crash anywhere leaves only an uncommitted
-    * orphan the next publish of that version overwrites. Requires an
-    * existing committed version to extend.
-    */
-  def publishSnapshotDelta(spark: SparkSession, root: String)(write: String => Unit): Long =
-    publishVersion(spark, root, delta = true)(write)
-
-  /** The current chain: the latest committed FULL version and every
-    * committed delta after it, oldest first. Throws on an empty table or
-    * a corrupt one (deltas with no full base — only possible by deleting
-    * markers by hand; gcChains never strands a delta).
-    */
-  def chainVersions(spark: SparkSession, root: String): Seq[Long] = {
-    val vs = committedVersions(spark, root)
-    if (vs.isEmpty) throw new java.io.IOException(s"no committed snapshot under $root")
-    val lastFull = vs.lastIndexWhere(v => !isDeltaVersion(spark, root, v))
-    if (lastFull < 0)
-      throw new java.io.IOException(s"no committed FULL snapshot under $root (orphan deltas)")
-    vs.drop(lastFull)
-  }
-
-  /** Validated data dir of a specific committed version: time travel is
-    * a parquet read of this dir (or of one of its layer subdirs).
-    */
-  def snapshotDirAt(spark: SparkSession, root: String, v: Long): String = {
-    if (!fsOf(spark, root).exists(commitMarker(root, v)))
-      throw new java.io.IOException(s"snapshot $v of $root is not committed (or was GC'd)")
-    snapDir(root, v)
-  }
-
-  // Pinned chain resolution: a reader that needs MULTIPLE layers of the
-  // same chain (IVF centroids + cells, NSW adj + vecs) must resolve the
-  // committed marker set ONCE and derive every layer from it — two
-  // separate chain resolutions can straddle a concurrent publish and pair
-  // one chain's quantizer with another chain's assignments (wrong data,
-  // no error). `chainDirs` is the pin; the *In readers consume it, and a
-  // family's layer table decides which of them reads each layer
-  // ([[graft.ops.ChainIndex.Family.read]]). The layer name "" is the
-  // version dir itself (a single-layer table).
-  //
-  // Reader-vs-GC contract, stated completely: [[requirePinnedLive]]
-  // catches a GC that lands between the pin and layer RESOLUTION (loud
-  // error, no silent row loss). A GC landing between resolution and the
-  // Spark ACTION can still yank files mid-scan — that surfaces as a loud
-  // FileNotFoundException, never as silently missing rows, and it is the
-  // standard VACUUM retention contract (identical to Delta/Iceberg):
-  // retention (`gcChains` keepChains) must exceed the longest-running
-  // reader. A deployment tunes retention to its slowest consumer exactly
-  // as it would VACUUM horizons.
-
-  /** The current chain's data dirs, oldest first — ONE marker-set
-    * resolution to derive every layer read from.
-    */
-  def chainDirs(spark: SparkSession, root: String): Seq[String] =
-    chainVersions(spark, root).map(v => snapDir(root, v))
-
-  /** A pinned version dir that disappeared was GC'd AFTER the pin —
-    * silently skipping it would drop that version's rows from chain
-    * reads with no error (the one silent-loss mode pinning could
-    * introduce vs marker re-resolution). Fail loudly instead: this is a
-    * retention-contract violation (retention must exceed the longest
-    * reader), same as a GC yanking a live scan, but caught at resolution.
-    */
-  private def requirePinnedLive(fs: org.apache.hadoop.fs.FileSystem, dirs: Seq[String]): Unit =
-    dirs.foreach { d =>
-      if (!fs.exists(new org.apache.hadoop.fs.Path(d)))
-        throw new java.io.IOException(
-          s"pinned chain dir $d was GC'd after the pin — retention must exceed the longest reader")
-    }
-
-  /** The pinned dirs' `layer` dirs that exist, oldest first. */
-  private def carriersIn(spark: SparkSession, dirs: Seq[String], layer: String): Seq[String] = {
-    require(dirs.nonEmpty, "empty pinned chain")
-    val fs = fsOf(spark, dirs.head)
-    requirePinnedLive(fs, dirs)
-    dirs.map(d => if (layer.isEmpty) d else s"$d/$layer")
-      .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
-  }
-
-  private def layerDirsIn(spark: SparkSession, dirs: Seq[String], layer: String): Seq[String] = {
-    val ds = carriersIn(spark, dirs, layer)
-    if (ds.isEmpty)
-      throw new java.io.IOException(s"no committed chain version carries layer $layer")
-    ds
-  }
-
-  /** True when at least one pinned dir carries `layer` — for layers that
-    * only appear once the first append lands (a fresh full refresh has
-    * no batch archive yet).
-    */
-  private[graft] def chainHasLayerIn(spark: SparkSession, dirs: Seq[String], layer: String): Boolean =
-    carriersIn(spark, dirs, layer).nonEmpty
-
-  /** One layer dir, its schema memoized per (chain root, layer): every
-    * version of one root's layer is written by the same writer with one
-    * schema (the S6v protocol), so the snap_ component is stripped and
-    * all versions share the entry; roots are nonce-unique per process
-    * (ArtifactRoots).
-    */
-  private def readLayerDir(spark: SparkSession, dir: String): DataFrame = {
-    val i = dir.lastIndexOf("/snap_")
-    val key = if (i > 0) dir.take(i) + dir.drop(i).replaceAll("^/snap_[0-9]+", "") else dir
-    graft.Tables.parquetSchemaMemo(spark, dir, key)
-  }
-
-  /** Append-shaped layer read: the union of `layer` across every pinned
-    * dir that carries it (the full base + each delta batch). Dirs are
-    * read separately and unioned by name — hive-partitioned layers keep
-    * per-scan partition pruning, and no common basePath is required.
-    */
-  private[graft] def readChainIn(spark: SparkSession, dirs: Seq[String], layer: String): DataFrame =
-    layerDirsIn(spark, dirs, layer).map(readLayerDir(spark, _)).reduce(_ unionByName _)
-
-  /** Rewrite-shaped layer read: `layer` from the NEWEST pinned dir that
-    * carries it (every mutation rewrites such layers in full — CC
-    * labels, centroid tables).
-    */
-  private[graft] def readChainLatestIn(spark: SparkSession, dirs: Seq[String], layer: String): DataFrame =
-    readLayerDir(spark, layerDirsIn(spark, dirs, layer).last)
-
-  /** [[readChainLatestIn]] on the current chain of `root`; `layer` ""
-    * reads the newest version of a single-layer table.
+  /** Forwarder to [[graft.ops.ChainIndex.readChainLatest]], where the
+    * versioned store lives. It exists only because the pipeline benchmark
+    * (`pipebench/`) compiles against this name; program code calls
+    * ChainIndex.
     */
   def readChainLatest(spark: SparkSession, root: String, layer: String): DataFrame =
-    readChainLatestIn(spark, chainDirs(spark, root), layer)
-
-  /** Chain-aware GC: retains the newest `keepChains` whole chains (a
-    * full version plus its deltas) and deletes everything older —
-    * markers first, then data. Counting retention in chains is what
-    * keeps every retained read correct: dropping one old delta under
-    * raw-version retention would silently lose that batch's rows from
-    * chain reads. On a table with no deltas every version is its own
-    * chain, so this keeps exactly the newest `keepChains` versions.
-    */
-  def gcChains(spark: SparkSession, root: String, keepChains: Int = 2): Seq[Long] = {
-    require(keepChains >= 1, "must retain at least the current chain")
-    val vs = committedVersions(spark, root)
-    val fullIdxs = vs.zipWithIndex.collect {
-      case (v, i) if !isDeltaVersion(spark, root, v) => i
-    }
-    if (fullIdxs.length <= keepChains) return Seq.empty
-    val cutoff = fullIdxs(fullIdxs.length - keepChains) // first retained version index
-    val fs = fsOf(spark, root)
-    val dropped = vs.take(cutoff)
-    dropped.foreach { v =>
-      fs.delete(commitMarker(root, v), false) // new readers can no longer resolve it
-      fs.delete(new org.apache.hadoop.fs.Path(snapDir(root, v)), true)
-    }
-    dropped
-  }
+    graft.ops.ChainIndex.readChainLatest(spark, root, layer)
 
   /** V1 schema gate, FAILFAST flavor: any malformed document raises and
     * halts the load — the pydantic behavior (reference

@@ -23,7 +23,7 @@ class IvfMvSpec extends SparkSpec {
   test("probed cells scan is partition-pruned to the probe list") {
     import spark.implicits._
     val root = Embeddings.buildIvfIndex(spark, sfDir, "spec_prune", identity)
-    val snap = graft.weather.Staging.chainDirs(spark, root).last
+    val snap = graft.ops.ChainIndex.chainDirs(spark, root).last
     val all = spark.read.parquet(s"$snap/cells")
     val allCells = all.select($"cell").distinct().as[Int].collect().sorted.toSeq
     assert(allCells.size > 3, s"degenerate index: cells=$allCells")
@@ -51,7 +51,7 @@ class IvfMvSpec extends SparkSpec {
     import spark.implicits._
     val root = Embeddings.buildIvfIndex(spark, sfDir, "spec_append",
       _.filter($"vec_id" % 10 =!= 7))
-    val snap = graft.weather.Staging.chainDirs(spark, root).last
+    val snap = graft.ops.ChainIndex.chainDirs(spark, root).last
     val residentBefore = spark.read.parquet(s"$snap/cells")
       .select($"vec_id", $"cell").collect().toSet
     val centsBefore = spark.read.parquet(s"$snap/centroids").collect().toSet
@@ -68,7 +68,7 @@ class IvfMvSpec extends SparkSpec {
     assert(spark.read.parquet(s"$snap/cells").select($"vec_id", $"cell")
       .collect().toSet == residentBefore, "append mutated a committed version's cells")
     assert(spark.read.parquet(s"$snap/centroids").collect().toSet == centsBefore)
-    def cells = Embeddings.Ivf.read(spark, graft.weather.Staging.chainDirs(spark, root), "cells").get
+    def cells = Embeddings.Ivf.read(spark, graft.ops.ChainIndex.chainDirs(spark, root), "cells").get
     val afterSet = cells
       .select($"vec_id", $"cell").collect().toSet
     assert(residentBefore.subsetOf(afterSet))
@@ -94,9 +94,9 @@ class IvfMvSpec extends SparkSpec {
     // an EMPTY batch publishes nothing: no new version, and the chain
     // stays readable (a zero-row hive-partitioned write would leave an
     // unreadable cells layer)
-    val vBefore = graft.weather.Staging.currentSnapshotVersion(spark, root)
+    val vBefore = graft.ops.ChainIndex.currentSnapshotVersion(spark, root)
     Embeddings.appendIvfIndex(spark, root, batch.limit(0))
-    assert(graft.weather.Staging.currentSnapshotVersion(spark, root) === vBefore)
+    assert(graft.ops.ChainIndex.currentSnapshotVersion(spark, root) === vBefore)
     assert(cells.select($"vec_id", $"cell").collect().toSet == afterSet)
   }
 

@@ -23,7 +23,7 @@ class PairGraphMvSpec extends SparkSpec {
     import spark.implicits._
     val root = llm.TextDedup.refreshPairGraphMv(spark, sfDir)
     def layer(name: String) =
-      llm.TextDedup.PairGraph.read(spark, weather.Staging.chainDirs(spark, root), name).get
+      llm.TextDedup.PairGraph.read(spark, ops.ChainIndex.chainDirs(spark, root), name).get
     // distinct word 3-grams of every document with at least 3 tokens
     val tok = Tables.documents(spark, sfDir).select($"doc_id", split($"text", " ").as("t"))
       .filter(size($"t") >= 3)
@@ -85,14 +85,14 @@ class PairGraphMvSpec extends SparkSpec {
         .exists(e => String.valueOf(e.getMessage).contains(FailPairsLayerCommitProtocol.Message)),
         s"refresh failed for another reason: $err")
       val root = llm.TextDedup.pairGraphRoot(scratch)
-      assert(weather.Staging.currentSnapshotVersion(spark, root) === None, "a failed refresh committed")
+      assert(ops.ChainIndex.currentSnapshotVersion(spark, root) === None, "a failed refresh committed")
       val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
       def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
       while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
       assert(leaked.isEmpty, s"failed refresh left persisted RDDs: $leaked")
       // and a retry publishes
       llm.TextDedup.refreshPairGraphMv(spark, scratch)
-      assert(weather.Staging.currentSnapshotVersion(spark, root) === Some(0L))
+      assert(ops.ChainIndex.currentSnapshotVersion(spark, root) === Some(0L))
     } finally graft.ops.ArtifactRoots.delete(scratch)
   }
 

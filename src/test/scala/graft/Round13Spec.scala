@@ -264,7 +264,7 @@ class Round13Spec extends SparkSpec {
         .parquet(s"$scratch/documents.parquet")
       llm.TextDedup.refreshPairGraphMv(spark, scratch)
       val root = llm.TextDedup.pairGraphRoot(scratch)
-      val v0 = graft.weather.Staging.currentSnapshotVersion(spark, root).get
+      val v0 = graft.ops.ChainIndex.currentSnapshotVersion(spark, root).get
       val labelsBefore = llm.TextDedup.componentLabels(spark, scratch)
         .collect().map(_.toSeq).toSet
       // poisoned batch: disjoint ids pass the guard, then the shingle
@@ -280,14 +280,14 @@ class Round13Spec extends SparkSpec {
       // commit marker, so the MV is STILL the previous committed version —
       // internally consistent, readable, no rebuild forced on the next
       // consumer and no committed files yanked from pinned readers
-      assert(graft.weather.Staging.currentSnapshotVersion(spark, root).get === v0,
+      assert(graft.ops.ChainIndex.currentSnapshotVersion(spark, root).get === v0,
         "failed append committed a version")
       assert(llm.TextDedup.componentLabels(spark, scratch)
         .collect().map(_.toSeq).toSet === labelsBefore)
       // and the failed batch can simply be RETRIED (same ids, good text)
       llm.TextDedup.appendPairGraphMv(spark, scratch,
         docs.filter($"doc_id" % 5 === 0).limit(3).select($"doc_id", $"text"))
-      assert(graft.weather.Staging.currentSnapshotVersion(spark, root).get === v0 + 1)
+      assert(graft.ops.ChainIndex.currentSnapshotVersion(spark, root).get === v0 + 1)
       // a 3-doc batch may legitimately add no pairs; the relabel must
       // still carry every previously labeled doc
       assert(llm.TextDedup.componentLabels(spark, scratch).count() >= labelsBefore.size)
@@ -302,15 +302,15 @@ class Round13Spec extends SparkSpec {
       docs.filter($"doc_id" % 5 =!= 0).write.mode("overwrite")
         .parquet(s"$scratch/documents.parquet")
       val root = llm.TextDedup.refreshPairGraphMv(spark, scratch)
-      val v0 = graft.weather.Staging.currentSnapshotVersion(spark, root).get
+      val v0 = graft.ops.ChainIndex.currentSnapshotVersion(spark, root).get
       // reader pins version N's labels (a scan over the immutable snap dir)
       val held = spark.read.parquet(
-        s"${graft.weather.Staging.snapshotDirAt(spark, root, v0)}/labels")
+        s"${graft.ops.ChainIndex.snapshotDirAt(spark, root, v0)}/labels")
       val baseline = held.collect().map(_.toSeq).toSet
       // writer publishes N+1 (the append's delta) on the same chain
       llm.TextDedup.appendPairGraphMv(spark, scratch,
         docs.filter($"doc_id" % 5 === 0).select($"doc_id", $"text"))
-      assert(graft.weather.Staging.currentSnapshotVersion(spark, root).get > v0)
+      assert(graft.ops.ChainIndex.currentSnapshotVersion(spark, root).get > v0)
       // the held reader still resolves its own version, byte-identical
       assert(held.collect().map(_.toSeq).toSet === baseline)
       // and new readers see the relabeled component set

@@ -192,7 +192,7 @@ class Round9Spec extends SparkSpec {
     import spark.implicits._
     val stats = ops.Graph.backboneMaterialize(spark, sfDir).head()
     val mv = ops.Graph.Backbone.read(spark,
-      graft.weather.Staging.chainDirs(spark, ops.Graph.backboneRoot(sfDir)), "").get
+      graft.ops.ChainIndex.chainDirs(spark, ops.Graph.backboneRoot(sfDir)), "").get
     val derived = ops.Graph.backboneEdges(spark, sfDir)
     // equal count + one-directional exceptAll proves multiset equality
     // with a single consumption of the scoped-cached derivation (the

@@ -381,7 +381,7 @@ class StreamingSpec extends SparkSpec {
     val q = EventStreams.cdcApplySink(
       input.toDF.toDF("k", "seq", "op", "c_status", "c_cents"), root, ckpt).start()
     def snapshot(): Map[Long, (String, Long)] =
-      graft.weather.Staging.readChainLatest(spark, root, "").collect()
+      graft.ops.ChainIndex.readChainLatest(spark, root, "").collect()
         .map(r => r.getAs[Long]("k") ->
           (r.getAs[String]("status"), r.getAs[Long]("cents"))).toMap
     try {
@@ -389,7 +389,7 @@ class StreamingSpec extends SparkSpec {
       input.addData((1L, 1L, "I", "A", 100L), (2L, 1L, "I", "B", 200L),
         (3L, 1L, "I", "C", 300L), (4L, 1L, "U", "D", 400L))
       q.processAllAvailable()
-      val v0 = graft.weather.Staging.currentSnapshotVersion(spark, root).get
+      val v0 = graft.ops.ChainIndex.currentSnapshotVersion(spark, root).get
       val snap0 = snapshot()
       assert(snap0 === Map(1L -> ("A", 100L), 2L -> ("B", 200L),
         3L -> ("C", 300L), 4L -> ("D", 400L)))
@@ -402,10 +402,25 @@ class StreamingSpec extends SparkSpec {
       assert(snapshot() === Map(1L -> ("A2", 101L), 4L -> ("D", 400L),
         5L -> ("E", 500L)))
       // the prior version is immutable: a reader holding v0 still sees it
-      val travel = spark.read.parquet(graft.weather.Staging.snapshotDirAt(spark, root, v0))
+      val travel = spark.read.parquet(graft.ops.ChainIndex.snapshotDirAt(spark, root, v0))
         .collect().map(r => r.getAs[Long]("k")).toSet
       assert(travel === Set(1L, 2L, 3L, 4L))
-      assert(graft.weather.Staging.currentSnapshotVersion(spark, root).get === v0 + 1)
+      assert(graft.ops.ChainIndex.currentSnapshotVersion(spark, root).get === v0 + 1)
+      // batch 3: a third state-sized version — the sink keeps the newest
+      // two, so disk stays bounded while the previous version still
+      // time-travels and the oldest no longer resolves
+      input.addData((4L, 20L, "U", "D2", 401L), (6L, 20L, "I", "F", 600L))
+      q.processAllAvailable()
+      assert(snapshot() === Map(1L -> ("A2", 101L), 4L -> ("D2", 401L),
+        5L -> ("E", 500L), 6L -> ("F", 600L)))
+      assert(graft.ops.ChainIndex.currentSnapshotVersion(spark, root).get === v0 + 2)
+      val names = new java.io.File(root).list().toSeq
+      assert(names.count(_.startsWith("_commit_")) <= 2 && names.count(_.startsWith("snap_")) <= 2,
+        s"CDC sink retains every version: ${names.sorted.mkString(", ")}")
+      val prev = spark.read.parquet(graft.ops.ChainIndex.snapshotDirAt(spark, root, v0 + 1))
+        .collect().map(r => r.getAs[Long]("k")).toSet
+      assert(prev === Set(1L, 4L, 5L))
+      intercept[java.io.IOException](graft.ops.ChainIndex.snapshotDirAt(spark, root, v0))
     } finally q.stop()
   }
 
@@ -490,7 +505,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     graft.GraftExtensions.ensure(spark)
-    val S = graft.weather.Staging
+    val S = graft.ops.ChainIndex
     val pred: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
       _.filter(col("vec_id") % 20 < 12)
     // twin indexes over the same resident set: one fed by the stream,
@@ -547,7 +562,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming pair-graph ingest: micro-batch deltas equal batch appends, replay is a no-op") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val S = graft.weather.Staging
+    val S = graft.ops.ChainIndex
     val docs = Tables.documents(spark, sfDir)
     val dirS = java.nio.file.Files.createTempDirectory("graft_pg_sink").toString
     val dirB = java.nio.file.Files.createTempDirectory("graft_pg_sinktwin").toString

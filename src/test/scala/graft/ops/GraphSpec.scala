@@ -1,4 +1,5 @@
-package graft.ops
+package graft
+package ops
 
 import scala.collection.mutable
 
@@ -7,11 +8,11 @@ import org.apache.spark.sql.GraftListenerBridge
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.types._
 
-import graft.SparkSpec
-
 /** Graph.connectedComponents: the one-pass union-find against a brute-force
   * BFS oracle, its worst cases for label propagation, the output schema,
-  * the forced multi-partition frontier path, and its job and storage cost.
+  * the forced multi-partition frontier path, and its job and storage cost;
+  * its callers G4 `concomp` (one union-find pass) and the simhash clusters
+  * (cache released when CC fails).
   */
 class GraphSpec extends SparkSpec {
 
@@ -54,11 +55,11 @@ class GraphSpec extends SparkSpec {
   }
 
   /** The checkpoint releases ride the async listener bus: poll. */
-  private def awaitNoLeak(before: scala.collection.Set[Int]): Unit = {
+  private def awaitNoLeak(before: scala.collection.Set[Int], what: String = "CC"): Unit = {
     val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
     def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
-    assert(leaked.isEmpty, s"leaked RDDs: $leaked")
+    assert(leaked.isEmpty, s"$what leaked RDDs: $leaked")
   }
 
   private val pathPairs: Seq[(Long, Long)] = {
@@ -163,5 +164,48 @@ class GraphSpec extends SparkSpec {
     assert(got === bfsLabels(ps))
     assert(jobs.get <= 2, s"${jobs.get} jobs")
     awaitNoLeak(before)
+  }
+
+  test("concomp runs the union-find once and equals the inner-join form") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.functions.{broadcast, count, lit}
+    val got = Graph.concomp(spark, sfDir)
+    val rows = got.collect().toSeq
+    // after the action the adaptive plan is final: count the union-find
+    // passes across every query stage, broadcasts included
+    val passes = new AdaptiveSparkPlanHelper {}.collect(got.queryExecution.executedPlan) {
+      case m: MapPartitionsExec => m
+    }
+    assert(passes.size === 1, got.queryExecution.executedPlan.treeString)
+    val cc = Graph.connectedComponents(Graph.backboneEdges(spark, sfDir).select($"u", $"v"))
+    val sizes = cc.groupBy($"component").agg(count(lit(1)).as("comp_size"))
+    val joinForm = cc.join(broadcast(sizes), Seq("component"))
+      .select($"node", $"component", $"comp_size").orderBy($"node")
+    assert(rows.nonEmpty && rows === joinForm.collect().toSeq)
+  }
+
+  test("simhash clusters: a connected-components failure releases the cached signatures") {
+    val scratch = java.nio.file.Files.createTempDirectory("graft_r15_simhash_fail").toString
+    try {
+      val docs = s"$scratch/documents.parquet"
+      Tables.documents(spark, sfDir).write.parquet(docs)
+      // resolve the schema while the files are intact; then corrupt
+      // every data file, so the first read — inside CC's first action,
+      // after the signature cache is registered — throws
+      Tables.documents(spark, scratch).schema
+      for (f <- new java.io.File(docs).listFiles() if f.getName.endsWith(".parquet"))
+        java.nio.file.Files.write(f.toPath, "not parquet".getBytes("UTF-8"))
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      // non-adaptive execution (the engine's mode below 1 GiB) registers
+      // the signature cache for storage when CC plans it — before the
+      // read that fails
+      val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try intercept[Exception](llm.TextDedup.simhashClusters(spark, scratch))
+      finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      awaitNoLeak(before, "simhash clusters after a CC failure")
+    } finally graft.ops.ArtifactRoots.delete(scratch)
   }
 }
