@@ -14,30 +14,8 @@ import graft.functions.{CharBigrams, DotProduct, SrpProj, TokenCounts, WinnowFps
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProduct(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_char_bigrams"),
-      new ExpressionInfo(classOf[CharBigrams].getName, "graft_char_bigrams"),
-      (children: Seq[Expression]) => CharBigrams(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_token_counts"),
-      new ExpressionInfo(classOf[TokenCounts].getName, "graft_token_counts"),
-      (children: Seq[Expression]) => TokenCounts(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "graft_shingles"),
-      (children: Seq[Expression]) => WordShingles(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_winnow_fps"),
-      new ExpressionInfo(classOf[WinnowFps].getName, "graft_winnow_fps"),
-      (children: Seq[Expression]) => WinnowFps(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_srp_proj"),
-      new ExpressionInfo(classOf[SrpProj].getName, "graft_srp_proj"),
-      (children: Seq[Expression]) => SrpProj(children.head)))
+    for ((name, cls, build) <- GraftExtensions.functions)
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
     // whole-operator extension tier: the native as-of join, plus the
     // optimizer rule that narrows its children before their exchanges
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
@@ -46,31 +24,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+  /** The native functions: (SQL name, expression class, builder) — the one
+    * table both registration paths iterate. */
+  private[graft] val functions: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", classOf[DotProduct], c => DotProduct(c.head, c(1))),
+    ("graft_char_bigrams", classOf[CharBigrams], c => CharBigrams(c.head)),
+    ("graft_token_counts", classOf[TokenCounts], c => TokenCounts(c.head)),
+    ("graft_shingles", classOf[WordShingles], c => WordShingles(c.head, c(1))),
+    ("graft_winnow_fps", classOf[WinnowFps], c => WinnowFps(c.head)),
+    ("graft_srp_proj", classOf[SrpProj], c => SrpProj(c.head)))
+
   /** Idempotent late registration for an already-built session. */
-  def ensure(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      (children: Seq[Expression]) => DotProduct(children.head, children(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_char_bigrams",
-      (children: Seq[Expression]) => CharBigrams(children.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_token_counts",
-      (children: Seq[Expression]) => TokenCounts(children.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      (children: Seq[Expression]) => WordShingles(children.head, children(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow_fps",
-      (children: Seq[Expression]) => WinnowFps(children.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_srp_proj",
-      (children: Seq[Expression]) => SrpProj(children.head),
-      "built-in")
-  }
+  def ensure(spark: SparkSession): Unit =
+    for ((name, _, build) <- functions)
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "built-in")
 }

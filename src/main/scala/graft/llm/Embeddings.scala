@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.ChainIndex
+import graft.ops.{ChainIndex, Ckpt}
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
   * array<float>, label) — the vector half of an LLM data pipeline.
@@ -1116,10 +1116,10 @@ object Embeddings {
     * the index build AND every round's candidate scoring across several
     * consuming actions), query set broadcast.
     */
-  private[graft] def nswFrames(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  private def nswFrames(ck: Ckpt.Scope, spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import spark.implicits._
     val e0 = vectors(spark, dir)
-    val e = e0.filter($"vec_id" >= 5).localCheckpoint()
+    val e = ck(e0.filter($"vec_id" >= 5))
     val q = broadcast(e0.filter($"vec_id" < 5)
       .select($"vec_id".as("qid"), $"v".as("qv"), $"nrm".as("qn")))
     (e, q)
@@ -1135,8 +1135,7 @@ object Embeddings {
     * the beam stalls locally, the reason HNSW keeps long-range links;
     * the union keeps the seed graph's diversity AND the densified near
     * edges. Returns the directed (src, dst) edge list CHECKPOINTED, with
-    * every build intermediate's storage already released — the caller
-    * frees the returned frame when done ([[graft.ops.Ckpt]] discipline).
+    * every build intermediate's storage already released.
     *
     * The NN-descent pass scores only the NEW candidate pairs
     * (`non` anti-join the seed candidates): the seed pairs were already
@@ -1193,7 +1192,7 @@ object Embeddings {
     directed.withColumn("rk", rank).filter($"rk" <= 5).drop("rk")
   }
 
-  private[graft] def nswAdjacency(e: DataFrame): DataFrame = {
+  private[graft] def nswAdjacency(e: DataFrame): DataFrame = Ckpt.scope { ck =>
     val spark = e.sparkSession
     import spark.implicits._
     // cand0 feeds the seed scoring + the anti-join, adj0 feeds three
@@ -1208,36 +1207,23 @@ object Embeddings {
     // A one-file corpus checkpoints as ONE partition, and the banded
     // self-join streams that side: spread it so candidate generation
     // runs on every core.
-    // both are freed on every exit: a failed build must not strand
-    // corpus-sized blocks in a retrying driver
-    val ckpts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      val cand0 = srpCandidates(e.repartition($"vec_id")).localCheckpoint(false)
-      ckpts += cand0
-      val adj0 = nswTop5(nswDirected(nswScorePairs(e, cand0))).localCheckpoint()
-      ckpts += adj0
-      val non = adj0.as("a").join(adj0.as("b"),
-          $"a.dst" === $"b.src" && $"a.src" =!= $"b.dst")
-        .select(least($"a.src", $"b.dst").as("va"),
-          greatest($"a.src", $"b.dst").as("vb"))
-        .distinct()
-      val fresh = non.join(cand0, Seq("va", "vb"), "left_anti")
-      nswTop5(adj0.unionByName(nswDirected(nswScorePairs(e, fresh))))
-        .select("src", "dst")
-        .unionByName(adj0.select("src", "dst")).distinct()
-        .localCheckpoint()
-    } finally graft.ops.Ckpt.free(ckpts.toSeq: _*)
+    val cand0 = ck(srpCandidates(e.repartition($"vec_id")), eager = false)
+    val adj0 = ck(nswTop5(nswDirected(nswScorePairs(e, cand0))))
+    val non = adj0.as("a").join(adj0.as("b"),
+        $"a.dst" === $"b.src" && $"a.src" =!= $"b.dst")
+      .select(least($"a.src", $"b.dst").as("va"),
+        greatest($"a.src", $"b.dst").as("vb"))
+      .distinct()
+    val fresh = non.join(cand0, Seq("va", "vb"), "left_anti")
+    ck(nswTop5(adj0.unionByName(nswDirected(nswScorePairs(e, fresh))))
+      .select("src", "dst")
+      .unionByName(adj0.select("src", "dst")).distinct())
   }
 
-  def nswTopK(spark: SparkSession, dir: String): DataFrame = {
+  def nswTopK(spark: SparkSession, dir: String): DataFrame = Ckpt.scope { ck =>
     graft.GraftExtensions.ensure(spark)
-    val (e, q) = nswFrames(spark, dir)
-    val adj = nswAdjacency(e)
-    val res = nswBeamSearch(e, q, adj)
-    // the beam loop materialized every round eagerly; the result's plan
-    // reads only the final beam — corpus and adjacency are dead now
-    graft.ops.Ckpt.free(e, adj)
-    res
+    val (e, q) = nswFrames(ck, spark, dir)
+    nswBeamSearch(e, q, nswAdjacency(e))
   }
 
   /** The fixed-round batched beam search over a materialized adjacency —
@@ -1246,27 +1232,20 @@ object Embeddings {
     * from the same width-8 beam instead of the query path's top-3).
     */
   private[graft] def nswBeamSearch(e: DataFrame, q: DataFrame, adj: DataFrame,
-                                   finalK: Int = 3): DataFrame = {
+                                   finalK: Int = 3): DataFrame = Ckpt.scope { ck =>
     val spark = e.sparkSession
     import spark.implicits._
     val seeds = e.orderBy($"vec_id".asc).limit(4)
       .select($"vec_id".as("cid"), $"v".as("cv"), $"nrm".as("cn"))
     val wBeam = Window.partitionBy($"qid").orderBy($"sim".desc, $"cid".asc)
-    // Round-16 job-count fuse: the seed beam and rounds 1–3 are LAZY
-    // local checkpoints — LogicalRDD leaves immediately (identical
-    // lineage truncation to the old eager form: each round still plans
-    // against the prior round's leaf, no snowball) — and only the FINAL
-    // round is an eager localCheckpoint, whose one job materializes the
-    // whole chain. The loop drops from 5 eager checkpoint jobs to 1 with
-    // identical round trajectories; intermediate blocks are dead once the
-    // final checkpoint lands and are freed before returning.
+    // The seed beam and rounds 1–3 are LAZY checkpoints and the FINAL
+    // round is eager ([[graft.ops.Ckpt.Scope.rounds]]): one job
+    // materializes the whole chain with identical round trajectories.
     // 4 seeds × n_queries constant nested-loop broadcast (PlanAudit allowlisted)
-    var beam = seeds.join(q)
+    val beam0 = ck(seeds.join(q)
       .withColumn("sim", round(dot($"qv", $"cv") / ($"qn" * $"cn"), 6))
-      .select($"qid", $"cid", $"sim")
-      .localCheckpoint(false)
-    val rounds = scala.collection.mutable.ArrayBuffer[DataFrame](beam)
-    for (r <- 1 to 4) {
+      .select($"qid", $"cid", $"sim"), eager = false)
+    val beam = ck.rounds(beam0, 4) { beam =>
       // Round-17 note: an explicit-broadcast variant of this loop
       // (broadcast(beam) probing adj, broadcast(cand) probing e) was
       // A/B-measured and REVERTED — it cut emb_nsw_topk 3.71→2.93 s but
@@ -1293,23 +1272,16 @@ object Embeddings {
         .join(q, Seq("qid"))
         .withColumn("sim", round(dot($"qv", $"cv") / ($"qn" * $"cn"), 6))
         .select($"qid", $"cid", $"sim")
-      val next = beam.unionByName(scored).repartition($"qid").distinct()
+      beam.unionByName(scored).repartition($"qid").distinct()
         .withColumn("rk", row_number().over(wBeam))
         .filter($"rk" <= 8)
         .select($"qid", $"cid", $"sim")
-      beam = if (r < 4) { val c = next.localCheckpoint(false); rounds += c; c }
-        else next.localCheckpoint() // the ONE action: materializes all rounds
     }
-    graft.ops.Ckpt.free(rounds.toSeq: _*)
-    // the result's plan reads the FINAL beam at action time — release it
-    // through the consumed-listener, not eagerly
-    graft.ops.Ckpt.freeOnConsumed(
-      beam
-        .withColumn("rnk", row_number().over(wBeam))
-        .filter($"rnk" <= finalK)
-        .select($"qid", $"rnk", $"cid", $"sim")
-        .orderBy($"qid", $"rnk"),
-      Seq(beam))
+    beam
+      .withColumn("rnk", row_number().over(wBeam))
+      .filter($"rnk" <= finalK)
+      .select($"qid", $"rnk", $"cid", $"sim")
+      .orderBy($"qid", $"rnk")
   }
 
   // ---------------------------------------------------------------------
@@ -1355,60 +1327,43 @@ object Embeddings {
   private[graft] def buildNswIndex(spark: SparkSession, dir: String, tag: String = "",
                                    pred: DataFrame => DataFrame = identity): String =
     Nsw.build(spark, dir, tag) { v =>
-      val (e0, _) = nswFrames(spark, dir)
-      // freed on every exit: a build failure must not strand
-      // corpus-sized blocks in a retrying driver
-      val ckpts = scala.collection.mutable.ArrayBuffer[DataFrame](e0)
-      try {
-        val adj = nswAdjacency(pred(e0))
-        ckpts += adj
-        v.write("adj", adj)
-      } finally graft.ops.Ckpt.free(ckpts.toSeq: _*)
+      Ckpt.scope { ck =>
+        val (e0, _) = nswFrames(ck, spark, dir)
+        v.write("adj", nswAdjacency(pred(e0)))
+      }
     }
 
   /** Answer the standard query batch from a persisted adjacency: the 4
     * beam-search equi-joins against the artifact, nothing corpus-sized
     * rebuilt. Shared by E20 (refresh + read) and E22 (read-only).
     */
-  /** Pinned-chain corpus: (checkpoint-to-free, corpus view) = the
-    * (pred-filtered) base table unioned with the chain's appended-vector
-    * archive when the pinned dirs carry one. The pin (`dirs`) comes from
-    * ONE ChainIndex.chainDirs resolution shared with the adjacency read, so
-    * vecs and adj can never come from different chains. The pair
-    * distinguishes the checkpoint to FREE from the view over it (a pred
-    * filter is a view on e0's checkpoint, not its own storage).
+  /** Pinned-chain corpus: the (pred-filtered) base table unioned with
+    * the chain's appended-vector archive when the pinned dirs carry one,
+    * checkpointed in `ck` (the base checkpoint `e0` is then dropped). The
+    * pin (`dirs`) comes from ONE ChainIndex.chainDirs resolution shared
+    * with the adjacency read, so vecs and adj can never come from
+    * different chains.
     */
-  private def corpusWithVecs(spark: SparkSession, dirs: Seq[String], e0: DataFrame,
-                             pred: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+  private def corpusWithVecs(ck: Ckpt.Scope, spark: SparkSession, dirs: Seq[String],
+                             e0: DataFrame, pred: DataFrame => DataFrame): DataFrame =
     Nsw.read(spark, dirs, "vecs") match {
       case Some(vecs) =>
-        val u = pred(e0).unionByName(vecs).localCheckpoint()
-        graft.ops.Ckpt.free(e0)
-        (u, u)
-      case None => (e0, pred(e0))
+        val u = ck(pred(e0).unionByName(vecs))
+        ck.drop(e0)
+        u
+      case None => pred(e0)
     }
-  }
 
   private[graft] def nswQueryFromIndex(spark: SparkSession, dir: String, root: String,
-                                       pred: DataFrame => DataFrame = identity): DataFrame = {
-    graft.GraftExtensions.ensure(spark)
-    val (e0, q) = nswFrames(spark, dir)
-    // checkpoint registry freed on every exit (the appendNswIndex
-    // discipline): a chain-read or beam failure must not strand the
-    // corpus checkpoint in a long-lived query service. e0 stays listed
-    // even when corpusWithVecs frees it internally — double-free is a
-    // no-op.
-    val ckpts = scala.collection.mutable.ArrayBuffer[DataFrame](e0)
-    try {
+                                       pred: DataFrame => DataFrame = identity): DataFrame =
+    Ckpt.scope { ck =>
+      graft.GraftExtensions.ensure(spark)
+      val (e0, q) = nswFrames(ck, spark, dir)
       // ONE chain pin for both layers (the ivfQueryFromIndex discipline)
       val dirs = ChainIndex.chainDirs(spark, root)
-      val (eCk, e) = corpusWithVecs(spark, dirs, e0, pred)
-      ckpts += eCk
-      val adj = Nsw.read(spark, dirs, "adj").get.localCheckpoint()
-      ckpts += adj
-      nswBeamSearch(e, q, adj)
-    } finally graft.ops.Ckpt.free(ckpts.toSeq: _*)
-  }
+      val e = corpusWithVecs(ck, spark, dirs, e0, pred)
+      nswBeamSearch(e, q, ck(Nsw.read(spark, dirs, "adj").get))
+    }
 
   def nswMvTopK(spark: SparkSession, dir: String): DataFrame =
     nswQueryFromIndex(spark, dir, buildNswIndex(spark, dir))
@@ -1468,8 +1423,8 @@ object Embeddings {
     * materializes the full corpus ∪ vecs frame regardless (an NSW
     * insert must score against resident vectors), so the guard's
     * limit-1 semi-join probes a checkpointed frame the append already
-    * paid for. Every checkpoint this body creates is freed in the
-    * finally — the guard's require and a publish-lock failure are
+    * paid for. Every checkpoint this body creates belongs to one
+    * [[Ckpt.scope]] — the guard's require and a publish-lock failure are
     * retry paths, and retrying a poisoned batch must not leak
     * corpus-sized blocks per attempt.
     */
@@ -1483,16 +1438,9 @@ object Embeddings {
     Nsw.requireBuilt(root, "appendNswIndex", dir)
     Nsw.append(spark, root, batch.select($"vec_id", $"v", $"nrm"), "appendNswIndex",
         compactAfterDeltas) { (b, dirs, v) =>
-      // every checkpoint lands in `ckpts` the moment it exists and is
-      // freed on EVERY exit. Double-free is safe (unpersist on an
-      // already-released RDD is a no-op), so e0 stays listed even after
-      // corpusWithVecs frees it internally on the union branch.
-      val ckpts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      try {
-        val (e0, _) = nswFrames(spark, dir)
-        ckpts += e0
-        val (eCk, e) = corpusWithVecs(spark, dirs, e0, pred)
-        ckpts += eCk
+      Ckpt.scope { ck =>
+        val (e0, _) = nswFrames(ck, spark, dir)
+        val e = corpusWithVecs(ck, spark, dirs, e0, pred)
         // ingest-contract guard, exact (see above): a resident vec_id
         // re-ingested would land duplicate vecs rows and double-score
         // every beam candidate
@@ -1502,15 +1450,12 @@ object Embeddings {
         require(dup == 0,
           s"appendNswIndex: batch re-ingests vec_ids already resident in $root — " +
             "vec_ids must be disjoint (CDC ingest contract)")
-        val adj = Nsw.read(spark, dirs, "adj").get.localCheckpoint()
-        ckpts += adj
+        val adj = ck(Nsw.read(spark, dirs, "adj").get)
         // neighbor search: batch vectors as the query set, final top-5 of
         // the width-8 beam (the insert's M, matching the build's degree)
         val qb = broadcast(b.select($"vec_id".as("qid"), $"v".as("qv"), $"nrm".as("qn")))
-        val found = nswBeamSearch(e, qb, adj, finalK = 5)
-          .select($"qid".as("src"), $"cid".as("dst"))
-          .localCheckpoint()
-        ckpts += found
+        val found = ck(nswBeamSearch(e, qb, adj, finalK = 5)
+          .select($"qid".as("src"), $"cid".as("dst")))
         // batch-internal 5-NN edges: the build's exact seed-graph recipe
         // (SRP candidates → certified scoring → bounded top-out) over the
         // batch alone
@@ -1522,7 +1467,7 @@ object Embeddings {
         graft.ops.Par.all(
           () => v.write("adj", delta),
           () => v.write("vecs", b))
-      } finally graft.ops.Ckpt.free(ckpts.toSeq: _*)
+      }
     }
   }
 

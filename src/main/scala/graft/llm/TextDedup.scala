@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.ChainIndex
+import graft.ops.{ChainIndex, Ckpt}
 
 /** Deduplication operators for LLM training-data pipelines, over the driver
   * `documents` table (doc_id, text, lang, source, n_chars).
@@ -483,49 +483,45 @@ object TextDedup {
       // exchange.
       val sh = shingles(Tables.documents(spark, dir).select($"doc_id", $"text")
         .repartition($"doc_id")).cache()
-      try {
+      try Ckpt.scope { ck =>
         // set sizes and the 12 minima in ONE groupBy, materialized by ONE
         // job (lazy checkpoint + count) that also fills the shingle cache:
         // sigs, sizes, the bloom and the candidates all read its blocks, and
         // the verify's broadcast builds no longer each shingle the corpus
-        val perDoc = minhashPerDoc(sh).localCheckpoint(false)
-        try {
-          val nDocs = perDoc.count()
-          val szs = perDoc.select($"doc_id", $"n")
-          // sig stays a lazy projection of the checkpoint: the candidate
-          // self-join's two sides then share one ReusedExchange (caching
-          // the shingle-derived sig frame instead doubled the refresh,
-          // 4.4 s → 8.8 s at sf0.1, by severing that reuse). Its band rows
-          // carry the set size, so candidates arrive with both sizes and
-          // the verify needs no size join (two broadcast jobs fewer).
-          val sig = bandSigs(perDoc, "n")
-          val cand = sig.as("a").join(sig.as("b"),
-              $"a.band" === $"b.band" && $"a.sig" === $"b.sig" && $"a.doc_id" < $"b.doc_id")
-            .select($"a.doc_id".as("da"), $"b.doc_id".as("db"), $"a.n".as("na"), $"b.n".as("nb"))
-            .distinct()
-          // The verified pair set is the critical path (it feeds CC, the
-          // refresh's longest chain), so it is materialized next, alone on
-          // the cores, as an eager checkpoint: CC plans against a
-          // LogicalRDD leaf, never the shingle pipeline.
-          // Then CC→labels (its pair checkpoint, then one union-find
-          // pass inside the labels write), the pairs write and the three
-          // per-doc layers run in parallel on the driver pool (guide §2.6).
-          // The writes fill the cores the CC's single task leaves idle.
-          val vp = intersections(cand, Seq($"da", $"db", $"na", $"nb"), sh, sh)
-            .transform(jaccardPairs).localCheckpoint()
-          try {
-            graft.ops.Par.all(
-              () => v.write("labels", graft.ops.Graph.connectedComponents(vp.select($"doc_a", $"doc_b"))
-                .select($"node".as("doc_id"), $"component")),
-              () => v.write("pairs", vp),
-              () => v.write("sigs", sig.drop("n")),
-              () => v.write("sizes", szs),
-              // a fresh refresh starts a new chain, so its resident ids are
-              // exactly the shingled ones (no batchdocs layer yet); the
-              // count sizes the bloom
-              () => v.bloom(szs, Some(nDocs)))
-          } finally graft.ops.Ckpt.free(vp)
-        } finally graft.ops.Ckpt.free(perDoc)
+        val perDoc = ck(minhashPerDoc(sh), eager = false)
+        val nDocs = perDoc.count()
+        val szs = perDoc.select($"doc_id", $"n")
+        // sig stays a lazy projection of the checkpoint: the candidate
+        // self-join's two sides then share one ReusedExchange (caching
+        // the shingle-derived sig frame instead doubled the refresh,
+        // 4.4 s → 8.8 s at sf0.1, by severing that reuse). Its band rows
+        // carry the set size, so candidates arrive with both sizes and
+        // the verify needs no size join (two broadcast jobs fewer).
+        val sig = bandSigs(perDoc, "n")
+        val cand = sig.as("a").join(sig.as("b"),
+            $"a.band" === $"b.band" && $"a.sig" === $"b.sig" && $"a.doc_id" < $"b.doc_id")
+          .select($"a.doc_id".as("da"), $"b.doc_id".as("db"), $"a.n".as("na"), $"b.n".as("nb"))
+          .distinct()
+        // The verified pair set is the critical path (it feeds CC, the
+        // refresh's longest chain), so it is materialized next, alone on
+        // the cores, as an eager checkpoint: CC plans against a
+        // LogicalRDD leaf, never the shingle pipeline.
+        // Then CC→labels (its pair checkpoint, then one union-find
+        // pass inside the labels write), the pairs write and the three
+        // per-doc layers run in parallel on the driver pool (guide §2.6).
+        // The writes fill the cores the CC's single task leaves idle.
+        val vp = ck(intersections(cand, Seq($"da", $"db", $"na", $"nb"), sh, sh)
+          .transform(jaccardPairs))
+        graft.ops.Par.all(
+          () => v.write("labels", graft.ops.Graph.connectedComponents(vp.select($"doc_a", $"doc_b"))
+            .select($"node".as("doc_id"), $"component")),
+          () => v.write("pairs", vp),
+          () => v.write("sigs", sig.drop("n")),
+          () => v.write("sizes", szs),
+          // a fresh refresh starts a new chain, so its resident ids are
+          // exactly the shingled ones (no batchdocs layer yet); the
+          // count sizes the bloom
+          () => v.bloom(szs, Some(nDocs)))
       } finally { sh.unpersist(false); () }
     }
 
@@ -579,7 +575,7 @@ object TextDedup {
       batch: DataFrame, dirs: Seq[String], v: ChainIndex.Version): Unit = {
     import spark.implicits._
     val bsh = shingles(batch).cache()
-    try {
+    try Ckpt.scope { ck =>
       val bsig = minhashBandSigs(bsh)
       val bszs = bsh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
       val esig = PairGraph.read(spark, dirs, "sigs").get
@@ -603,58 +599,56 @@ object TextDedup {
       val partners = candBE.select($"db".as("doc_id")).distinct()
       val esh = shingles(
         residentDocs.join(partners, Seq("doc_id"), "left_semi"))
-      val newPairs = verifiedPairs(candBE, bsh, esh, bszs, eszs)
-        .unionByName(verifiedPairs(candBB, bsh, bsh, bszs, bszs))
-        .localCheckpoint() // consumed by the pairs write AND the relabel CC
-      try {
-        // relabel input (round-17, guide §2.3 shuffle-fewer-bytes applied
-        // to the CC input): run CC over the ROOT graph only — each new
-        // pair mapped to its endpoints' old component roots (self, when
-        // unlabeled) — then re-point members with ONE join. Equivalence:
-        // a member's only connectivity is through its root, so root-level
-        // reachability IS full reachability; an old root is its
-        // component's min doc_id, so min-over-roots = min doc of the
-        // merged component, and an unmerged root's label is itself (the
-        // left-join coalesce). CC's input shrinks from (all labeled
-        // docs + pairs) to (touched roots + batch docs); root self-loops
-        // (a pair internal to one old component) add no connectivity and
-        // are dropped before the loop.
-        val oldLbl = PairGraph.read(spark, dirs, "labels").get
-        // six INDEPENDENT write chains (labels' CC reads the newPairs
-        // checkpoint, not the written pairs file) — overlapped on the
-        // driver pool, wall = max(layer) not Σ(layer) (guide §2.6)
-        graft.ops.Par.all(
-          () => v.write("pairs", newPairs),
-          () => v.write("sigs", bsig),
-          () => v.write("sizes", bszs),
-          () => v.write("batchdocs", batch),
-          () => {
-            val np = newPairs.select($"doc_a", $"doc_b")
-            val rp = np
-              .join(oldLbl.select($"doc_id".as("doc_a"), $"component".as("ra")),
-                Seq("doc_a"), "left")
-              .join(oldLbl.select($"doc_id".as("doc_b"), $"component".as("rb")),
-                Seq("doc_b"), "left")
-              .select(coalesce($"ra", $"doc_a").as("u"), coalesce($"rb", $"doc_b").as("v"))
-              .filter($"u" =!= $"v")
-            val merged = graft.ops.Graph.connectedComponents(rp)
-              .select($"node".as("root"), $"component".as("mc"))
-            // re-point: old members via their root (left join — unmerged
-            // components keep their label); docs NEW to the label set are
-            // exactly merged's nodes absent from the old labels (every
-            // new-pair doc reaches CC as its own root, and old roots all
-            // have a labels row), so one anti-join recovers them
-            val relabeled = oldLbl.select($"doc_id", $"component".as("root"))
-              .join(merged, Seq("root"), "left")
-              .select($"doc_id", coalesce($"mc", $"root").as("component"))
-            val newDocLbl = merged.select($"root".as("doc_id"), $"mc".as("component"))
-              .join(oldLbl.select($"doc_id"), Seq("doc_id"), "left_anti")
-            v.write("labels", relabeled.unionByName(newDocLbl))
-          },
-          // bloom over ALL batch ids (matching the batchdocs layer, so a
-          // replayed <3-word doc is flagged too — the short-doc hole)
-          () => v.bloom(batch))
-      } finally graft.ops.Ckpt.free(newPairs)
+      // consumed by the pairs write AND the relabel CC
+      val newPairs = ck(verifiedPairs(candBE, bsh, esh, bszs, eszs)
+        .unionByName(verifiedPairs(candBB, bsh, bsh, bszs, bszs)))
+      // relabel input (round-17, guide §2.3 shuffle-fewer-bytes applied
+      // to the CC input): run CC over the ROOT graph only — each new
+      // pair mapped to its endpoints' old component roots (self, when
+      // unlabeled) — then re-point members with ONE join. Equivalence:
+      // a member's only connectivity is through its root, so root-level
+      // reachability IS full reachability; an old root is its
+      // component's min doc_id, so min-over-roots = min doc of the
+      // merged component, and an unmerged root's label is itself (the
+      // left-join coalesce). CC's input shrinks from (all labeled
+      // docs + pairs) to (touched roots + batch docs); root self-loops
+      // (a pair internal to one old component) add no connectivity and
+      // are dropped before the loop.
+      val oldLbl = PairGraph.read(spark, dirs, "labels").get
+      // six INDEPENDENT write chains (labels' CC reads the newPairs
+      // checkpoint, not the written pairs file) — overlapped on the
+      // driver pool, wall = max(layer) not Σ(layer) (guide §2.6)
+      graft.ops.Par.all(
+        () => v.write("pairs", newPairs),
+        () => v.write("sigs", bsig),
+        () => v.write("sizes", bszs),
+        () => v.write("batchdocs", batch),
+        () => {
+          val np = newPairs.select($"doc_a", $"doc_b")
+          val rp = np
+            .join(oldLbl.select($"doc_id".as("doc_a"), $"component".as("ra")),
+              Seq("doc_a"), "left")
+            .join(oldLbl.select($"doc_id".as("doc_b"), $"component".as("rb")),
+              Seq("doc_b"), "left")
+            .select(coalesce($"ra", $"doc_a").as("u"), coalesce($"rb", $"doc_b").as("v"))
+            .filter($"u" =!= $"v")
+          val merged = graft.ops.Graph.connectedComponents(rp)
+            .select($"node".as("root"), $"component".as("mc"))
+          // re-point: old members via their root (left join — unmerged
+          // components keep their label); docs NEW to the label set are
+          // exactly merged's nodes absent from the old labels (every
+          // new-pair doc reaches CC as its own root, and old roots all
+          // have a labels row), so one anti-join recovers them
+          val relabeled = oldLbl.select($"doc_id", $"component".as("root"))
+            .join(merged, Seq("root"), "left")
+            .select($"doc_id", coalesce($"mc", $"root").as("component"))
+          val newDocLbl = merged.select($"root".as("doc_id"), $"mc".as("component"))
+            .join(oldLbl.select($"doc_id"), Seq("doc_id"), "left_anti")
+          v.write("labels", relabeled.unionByName(newDocLbl))
+        },
+        // bloom over ALL batch ids (matching the batchdocs layer, so a
+        // replayed <3-word doc is flagged too — the short-doc hole)
+        () => v.bloom(batch))
     } finally { bsh.unpersist(false); () }
   }
 

@@ -411,36 +411,34 @@ object ChainIndex {
       require(isBuilt.containsKey(root), s"$caller: no built $name for $dir — refresh first")
 
     /** Publish `batch` as one delta version on the current chain. The
-      * batch is checkpointed once (freed on every exit — a guard failure
-      * or a publish-lock failure is a retry path, and a retrying ingest
-      * driver must not leak a checkpoint per attempt); an empty batch
-      * publishes nothing. With resident ids declared, the guard probes the
-      * chain's bloom sidecars first and scans resident ids only for
-      * flagged batch ids; `idempotent` turns the loud require into
-      * drop-resident-rows (an entirely replayed batch publishes nothing —
-      * at-least-once delivery made exactly-once). `delta` derives and
-      * writes the version from (guarded batch, pinned chain dirs).
-      * `compactAfterDeltas` > 0 compacts once the chain holds more deltas.
+      * batch is checkpointed once (a [[Ckpt.scope]]: freed on every exit —
+      * a guard failure or a publish-lock failure is a retry path); an
+      * empty batch publishes nothing. With resident ids declared, the
+      * guard probes the chain's bloom sidecars first and scans resident
+      * ids only for flagged batch ids; `idempotent` turns the loud require
+      * into drop-resident-rows (an entirely replayed batch publishes
+      * nothing — at-least-once delivery made exactly-once). `delta`
+      * derives and writes the version from (guarded batch, pinned chain
+      * dirs). `compactAfterDeltas` > 0 compacts once the chain holds more
+      * deltas.
       */
     def append(spark: SparkSession, root: String, batch: DataFrame, caller: String,
                compactAfterDeltas: Int = 0, idempotent: Boolean = false)(
         delta: (DataFrame, Seq[String], Version) => Unit): Unit = synchronized {
-      val ckpts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      val nonEmpty = try {
+      val nonEmpty = Ckpt.scope { ck =>
         // lazy checkpoint + count: ONE job materializes the batch and
         // answers whether it is empty
-        val b0 = batch.localCheckpoint(false)
-        ckpts += b0
+        val b0 = ck(batch, eager = false)
         val n0 = b0.count()
         n0 > 0 && {
           val dirs = chainDirs(spark, root)
-          guarded(spark, root, dirs, b0, n0, caller, idempotent, ckpts).foreach { case (b, n) =>
+          guarded(ck, spark, root, dirs, b0, n0, caller, idempotent).foreach { case (b, n) =>
             publishSnapshotDelta(spark, root)(p =>
               delta(b, dirs, new Version(spark, this, p, Some((b, n)))))
           }
           true
         }
-      } finally Ckpt.free(ckpts.toSeq: _*)
+      }
       if (nonEmpty && compactAfterDeltas > 0 &&
           chainVersions(spark, root).size - 1 > compactAfterDeltas)
         compact(spark, root)
@@ -448,9 +446,9 @@ object ChainIndex {
 
     /** The batch rows to publish with their count (`b0` holds `n0`), or
       * None when nothing is left. */
-    private def guarded(spark: SparkSession, root: String, dirs: Seq[String], b0: DataFrame,
-                        n0: Long, caller: String, idempotent: Boolean,
-                        ckpts: scala.collection.mutable.ArrayBuffer[DataFrame]): Option[(DataFrame, Long)] =
+    private def guarded(ck: Ckpt.Scope, spark: SparkSession, root: String, dirs: Seq[String],
+                        b0: DataFrame, n0: Long, caller: String,
+                        idempotent: Boolean): Option[(DataFrame, Long)] =
       resident match {
         case None => Some((b0, n0))
         case Some(r) =>
@@ -459,8 +457,7 @@ object ChainIndex {
             val fresh = IdBloom.filterFresh(spark, dirs, b0, r.col, exact)
             if (fresh eq b0) Some((b0, n0))
             else {
-              val c = fresh.localCheckpoint(false)
-              ckpts += c
+              val c = ck(fresh, eager = false)
               val n = c.count()
               if (n > 0) Some((c, n)) else None
             }

@@ -27,7 +27,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * Release stays best-effort delete in the publisher's finally; a writer
   * that dies between acquire and release leaves the lock behind
-  * DELIBERATELY — `Staging.breakPublishLock` is the recovery
+  * DELIBERATELY — [[CommitLock.breakPublishLock]] is the recovery
   * contract.
   */
 trait CommitLockProvider {
@@ -76,7 +76,7 @@ object CommitLock {
     * delta): `<path>__lock` acquired through [[provider]], `body` run,
     * the lock released in the finally. A second publisher fails fast
     * with an IOException; a writer that dies between acquire and release
-    * leaves the lock behind deliberately (see `breakPublishLock`).
+    * leaves the lock behind deliberately (see [[breakPublishLock]]).
     */
   private[graft] def withPublishLock[A](fs: FileSystem, path: String, what: String)(body: => A): A = {
     val lock = new Path(path + "__lock")
@@ -84,7 +84,17 @@ object CommitLock {
     if (!p.tryAcquire(fs, lock))
       throw new java.io.IOException(
         s"another $what to $path is in progress ($lock exists); " +
-          "if its writer is dead, call breakPublishLock first")
+          "if its writer is dead, call CommitLock.breakPublishLock first")
     try body finally p.release(fs, lock)
+  }
+
+  /** Clears a lock left by a publisher that died between acquiring
+    * `<path>__lock` and its finally block. Only call once the dead
+    * writer's Spark job is confirmed gone. Returns true if a lock was
+    * removed.
+    */
+  def breakPublishLock(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
+    val lock = new Path(path + "__lock")
+    lock.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(lock, false)
   }
 }

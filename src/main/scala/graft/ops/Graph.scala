@@ -267,43 +267,28 @@ object Graph {
 
   /** The 4-round Bellman–Ford kernel over a weighted (u, v, shared) edge
     * frame — shared by G8 (fresh-or-MV backbone) and the G9 pipeline
-    * (MV read-back). The edge list is localCheckpointed ONCE (one
-    * consuming action that also releases a derive-mode scoped cache —
-    * single-layer caching, the round-10 advice); each round's node-sized
-    * dist frame is checkpointed too, so the 4-round plan stays linear
-    * instead of doubling per round (the G3/G4/G5 iteration pattern).
+    * (MV read-back). The edge list is checkpointed ONCE and each round's
+    * node-sized dist frame too, so the 4-round plan stays linear instead
+    * of doubling per round (the G3/G4/G5 iteration pattern). The edge
+    * frame and rounds 1–3 are lazy and round 4 is eager ([[Ckpt.Scope.rounds]]):
+    * one job materializes the whole chain.
     */
-  private[graft] def ssspDistFrom(weighted: DataFrame): DataFrame = {
+  private[graft] def ssspDistFrom(weighted: DataFrame): DataFrame = Ckpt.scope { ck =>
     val spark = weighted.sparkSession
     import spark.implicits._
-    // round-16 job-count fuse (the connectedComponents shape): the edge
-    // frame and rounds 1–3 are LAZY local checkpoints — LogicalRDD leaves
-    // immediately (identical lineage truncation to the old eager form, so
-    // the 4-round plan stays linear) with materialization deferred — and
-    // only round 4 is an EAGER checkpoint, whose one job materializes the
-    // whole chain (5 eager checkpoint jobs → 1). Intermediate blocks are
-    // dead once it lands and are freed before returning.
-    val wEdges = weighted
-      .select($"u", $"v", expr("1000000 div shared").as("cost"))
-      .localCheckpoint(false)
+    val wEdges = ck(weighted
+      .select($"u", $"v", expr("1000000 div shared").as("cost")), eager = false)
     val und = wEdges.select($"u".as("src"), $"v".as("dst"), $"cost")
       .unionByName(wEdges.select($"v".as("src"), $"u".as("dst"), $"cost"))
     val srcRow = und.agg(min(least($"src", $"dst")).as("s"))
-    var dist = broadcast(srcRow).select($"s".as("node"), lit(0L).as("dist"))
-    val rounds = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    for (r <- 1 to 4) {
+    ck.rounds(broadcast(srcRow).select($"s".as("node"), lit(0L).as("dist")), 4) { dist =>
       val relax = und
         .join(dist.select($"node".as("src"), $"dist".as("dsrc")), Seq("src"))
         .select($"dst".as("node"), ($"dsrc" + $"cost").as("cand"))
-      val next = dist.select($"node", $"dist".as("cand"))
+      dist.select($"node", $"dist".as("cand"))
         .unionByName(relax)
         .groupBy($"node").agg(min($"cand").as("dist"))
-      dist = if (r < 4) { val c = next.localCheckpoint(false); rounds += c; c }
-        else next.localCheckpoint() // the ONE action: materializes all rounds
     }
-    graft.ops.Ckpt.free(rounds.toSeq: _*)
-    graft.ops.Ckpt.free(wEdges)
-    graft.ops.Ckpt.freeOnConsumed(dist, Seq(dist))
   }
 
   /** SSSP oracle CTE chain over the shared `edges(u, v, shared)` —
@@ -490,36 +475,32 @@ object Graph {
     * only edge-list-sized shuffles — Round11Spec pins that no kernel
     * plan re-derives from the base tables.
     */
-  def graphPipeline(spark: SparkSession, dir: String): DataFrame = {
+  def graphPipeline(spark: SparkSession, dir: String): DataFrame = Ckpt.scope { _ =>
     import spark.implicits._
     val (mv, tri, lpa, dist) = graphPipelineParts(spark, dir)
     def row(step: String, df: DataFrame): DataFrame =
       df.select(lit(step).as("step"), col("m1"), col("m2"))
-    // the read-back MV snapshot is read by three of the four stage
-    // aggregates at action time — release it through the listener
-    graft.ops.Ckpt.freeOnConsumed(
-      row("backbone", mv.agg(count(lit(1)).as("m1"), sum($"shared").as("m2")))
-        .unionByName(row("triangles",
-          tri.agg(sum($"n_tri").as("m1"),
-            sum(when($"n_tri" > 0, 1L).otherwise(0L)).as("m2"))))
-        .unionByName(row("labelprop",
-          lpa.agg(count(lit(1)).as("m1"), max($"n_nodes").as("m2"))))
-        .unionByName(row("sssp",
-          dist.agg(count(lit(1)).as("m1"), sum($"dist").as("m2"))))
-        .orderBy($"step"),
-      Seq(mv))
+    row("backbone", mv.agg(count(lit(1)).as("m1"), sum($"shared").as("m2")))
+      .unionByName(row("triangles",
+        tri.agg(sum($"n_tri").as("m1"),
+          sum(when($"n_tri" > 0, 1L).otherwise(0L)).as("m2"))))
+      .unionByName(row("labelprop",
+        lpa.agg(count(lit(1)).as("m1"), max($"n_nodes").as("m2"))))
+      .unionByName(row("sssp",
+        dist.agg(count(lit(1)).as("m1"), sum($"dist").as("m2"))))
+      .orderBy($"step")
   }
 
   /** The pipeline's stage frames, exposed so Round11Spec can pin each
     * kernel's PLAN (scans the MV artifact, never the base tables).
     */
   private[graft] def graphPipelineParts(
-      spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+      spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame, DataFrame) = Ckpt.scope { ck =>
     import spark.implicits._
-    // localCheckpoint pins the read-back snapshot for all three kernels
+    // the checkpoint pins the read-back snapshot for all three kernels
     // (and keeps each kernel's lineage rooted at the artifact, not at a
     // re-plannable parquet scan a concurrent refresh could invalidate)
-    val mv = refreshBackboneMv(spark, dir).localCheckpoint()
+    val mv = ck(refreshBackboneMv(spark, dir))
     val edges = mv.select($"u", $"v")
     (mv, trianglesFrom(edges), labelPropFrom(edges), ssspDistFrom(mv))
   }
@@ -660,10 +641,13 @@ object Graph {
     * endpoint keys — edge-list-sized shuffles, node-sized state, no
     * driver participation.
     */
-  def kcore(spark: SparkSession, dir: String): DataFrame = {
+  def kcore(spark: SparkSession, dir: String): DataFrame = kcoreFrom(backboneEdges(spark, dir))
+
+  /** The G3 peel over an undirected (u, v) edge frame. */
+  private[graft] def kcoreFrom(e0: DataFrame): DataFrame = Ckpt.scope { ck =>
+    val spark = e0.sparkSession
     import spark.implicits._
     val k = 5
-    val e0 = backboneEdges(spark, dir)
     def degreeOf(e: DataFrame): DataFrame =
       e.select($"u".as("node")).unionByName(e.select($"v".as("node")))
         .groupBy($"node").agg(count(lit(1)).as("deg"))
@@ -678,35 +662,31 @@ object Graph {
     // per-round DEGREES are checkpointed too (node-sized): the final
     // report joins rounds 0/2/3, so without the cut every edge-list
     // checkpoint of the peel would stay referenced by the result and
-    // its storage could never be released (the Ckpt discipline) — and
+    // its storage could never be released before the report runs — and
     // degreeOf(e_t) was re-evaluated once inside round t+1's alive
     // filter and again in the report
-    var e = e0.localCheckpoint()
-    var degs = List(degreeOf(e).localCheckpoint())
+    var e = ck(e0)
+    var degs = List(ck(degreeOf(e)))
     for (_ <- 1 to 3) {
       val alive = degs.head.filter($"deg" >= k).select($"node")
       val prevE = e
-      e = e
+      e = ck(e
         .join(alive.select($"node".as("u")), Seq("u"), "left_semi")
         .join(alive.select($"node".as("v")), Seq("v"), "left_semi")
-        .select($"u", $"v")
-        .localCheckpoint()
-      degs = degreeOf(e).localCheckpoint() :: degs
-      graft.ops.Ckpt.free(prevE)
+        .select($"u", $"v"))
+      degs = ck(degreeOf(e)) :: degs
+      ck.drop(prevE)
     }
-    graft.ops.Ckpt.free(e)
     val (d3, d2, d0) = (degs(0), degs(1), degs(3))
-    graft.ops.Ckpt.freeOnConsumed(
-      d0.select($"node", $"deg".as("deg0"))
-        .join(d2.select($"node", $"deg".as("deg2")), Seq("node"), "left")
-        .join(d3.select($"node", $"deg".as("deg3")), Seq("node"), "left")
-        .select($"node", $"deg0",
-          coalesce($"deg2", lit(0L)).as("deg2"),
-          coalesce($"deg3", lit(0L)).as("deg3"))
-        .withColumn("in_core", $"deg3" >= k)
-        .withColumn("stable", $"deg3" === $"deg2")
-        .orderBy($"node"),
-      degs)
+    d0.select($"node", $"deg".as("deg0"))
+      .join(d2.select($"node", $"deg".as("deg2")), Seq("node"), "left")
+      .join(d3.select($"node", $"deg".as("deg3")), Seq("node"), "left")
+      .select($"node", $"deg0",
+        coalesce($"deg2", lit(0L)).as("deg2"),
+        coalesce($"deg3", lit(0L)).as("deg3"))
+      .withColumn("in_core", $"deg3" >= k)
+      .withColumn("stable", $"deg3" === $"deg2")
+      .orderBy($"node")
   }
 
   val kcoreSql: String = {
@@ -778,14 +758,14 @@ object Graph {
     * layer's parquet footer records them. A pair with a null endpoint
     * connects nothing; its other endpoint is still a node, and any null
     * endpoint yields one (null, null) row.
-    * Contract: execute the result once (the checkpoint is released by
-    * its consuming action, [[Ckpt.freeOnConsumed]]).
+    * Contract: execute the result once (its checkpoints are released by
+    * its consuming action, the [[Ckpt]] lifetime rule).
     */
   def connectedComponents(pairs: DataFrame): DataFrame = components(pairs, EdgesPerTask)
 
   /** [[connectedComponents]] with the per-task edge budget as a seam, so a
     * spec can force a small graph onto the P > 1 frontier path. */
-  private[ops] def components(pairs: DataFrame, edgesPerTask: Long): DataFrame = {
+  private[ops] def components(pairs: DataFrame, edgesPerTask: Long): DataFrame = Ckpt.scope { ck =>
     val spark = pairs.sparkSession
     import spark.implicits._
     val uv = pairs.toDF("u", "v")
@@ -797,17 +777,17 @@ object Graph {
     }
     val schema = StructType(Seq(nodeField, nodeField.copy(name = "component")))
     val obs = Observation()
-    val p = uv.select($"u".cast(LongType), $"v".cast(LongType))
-      .observe(obs, count(lit(1)).as("n")).localCheckpoint()
+    val p = ck(uv.select($"u".cast(LongType), $"v".cast(LongType))
+      .observe(obs, count(lit(1)).as("n")))
     // an input the optimizer proves empty drops the observation: 0 edges
     val n = obs.get.getOrElse("n", 0L).asInstanceOf[Long]
     val parts = math.max(1L, (n + edgesPerTask - 1) / edgesPerTask).toInt
     val local = (if (parts == 1) p.coalesce(1) else p.repartition(parts, $"u"))
       .mapPartitions(rows => unionFind(rows, box))(Encoders.row(schema))
-    if (parts == 1) Ckpt.freeOnConsumed(local, Seq(p))
+    if (parts == 1) local
     else {
-      val lc = local.localCheckpoint()
-      Ckpt.free(p)
+      val lc = ck(local)
+      ck.drop(p)
       // a node several partitions saw links its local roots: one star
       // per such node, from its min root, is the frontier graph
       val multi = lc.groupBy($"node").agg(min($"component").as("m"), count(lit(1)).as("k"))
@@ -816,11 +796,9 @@ object Graph {
         .select($"m".as("u"), $"component".as("v")).filter($"u" =!= $"v")
       val g = propagate(frontier).select($"node".as("root"), $"component".as("g"))
       // every occurrence of a node maps to the same label, so any one is kept
-      Ckpt.freeOnConsumed(
-        lc.join(g, lc("component") === g("root"), "left")
-          .select($"node", coalesce($"g", $"component").as("component"))
-          .dropDuplicates("node"),
-        Seq(lc))
+      lc.join(g, lc("component") === g("root"), "left")
+        .select($"node", coalesce($"g", $"component").as("component"))
+        .dropDuplicates("node")
     }
   }
 
@@ -856,29 +834,25 @@ object Graph {
     * decreases a label); pointer jumping halves path lengths each round,
     * O(log n) rounds. Each round's state is a lazy local checkpoint that
     * the convergence sum materializes; the prior round's blocks are freed
-    * once the next round's are, and the final labels release on the
-    * caller's consuming action.
+    * once the next round's are.
     */
-  private def propagate(pairs: DataFrame): DataFrame = {
+  private def propagate(pairs: DataFrame): DataFrame = Ckpt.scope { ck =>
     import pairs.sparkSession.implicits._
     // round-16 job-count fuse: every round's state is a LAZY local
-    // checkpoint — localCheckpoint(eager = false) roots the frame at a
-    // LogicalRDD leaf IMMEDIATELY (the same planner/lineage truncation
-    // the eager form gave, so the round-4 snowball lesson still holds)
-    // but defers block materialization to the first consuming action,
-    // which here is the convergence sum. One job per round instead of
-    // checkpoint-job + sum-job, and one for the whole init. (A plain
-    // .cache() was tried first and HUNG the suite: caches substitute
-    // InMemoryRelation only at execution — the ANALYZED tree still grows
-    // ~4× per round, and plan canonicalization went exponential.)
-    // Storage release is unchanged: each round frees the prior round's
-    // blocks, the pair checkpoint dies at loop end, the final labels
-    // release on the caller's consuming action.
-    val p = pairs.toDF("u", "v").localCheckpoint(false)
+    // checkpoint — it roots the frame at a LogicalRDD leaf IMMEDIATELY
+    // (the same planner/lineage truncation the eager form gave, so the
+    // round-4 snowball lesson still holds) but defers block
+    // materialization to the first consuming action, which here is the
+    // convergence sum. One job per round instead of checkpoint-job +
+    // sum-job, and one for the whole init. (A plain .cache() was tried
+    // first and HUNG the suite: caches substitute InMemoryRelation only
+    // at execution — the ANALYZED tree still grows ~4× per round, and
+    // plan canonicalization went exponential.)
+    val p = ck(pairs.toDF("u", "v"), eager = false)
     val edges = p.select($"u".as("src"), $"v".as("dst"))
       .unionByName(p.select($"v".as("src"), $"u".as("dst")))
-    var labels = edges.select($"src".as("node")).distinct()
-      .withColumn("lbl", $"node").localCheckpoint(false)
+    var labels = ck(edges.select($"src".as("node")).distinct()
+      .withColumn("lbl", $"node"), eager = false)
     def labelSum(df: DataFrame): Option[BigInt] =
       Option(df.agg(sum($"lbl".cast("decimal(38,0)"))).head().getDecimal(0))
         .map(d => BigInt(d.toBigInteger))
@@ -891,24 +865,19 @@ object Graph {
         .groupBy($"src".as("node")).agg(min($"dst_lbl").as("nb_lbl"))
       val prop = labels.join(neighborMin, Seq("node"), "left")
         .select($"node", least($"lbl", coalesce($"nb_lbl", $"lbl")).as("lbl"))
-      val next = prop.as("x")
+      val next = ck(prop.as("x")
         .join(prop.select($"node".as("lbl"), $"lbl".as("lbl2")).as("m"), Seq("lbl"), "left")
-        .select($"node", least($"lbl", coalesce($"lbl2", $"lbl")).as("lbl"))
-        .localCheckpoint(false)
+        .select($"node", least($"lbl", coalesce($"lbl2", $"lbl")).as("lbl")), eager = false)
       val s = labelSum(next) // the ONE action: materializes next's blocks
       converged = s == prevSum
       prevSum = s
       // this round's checkpoint is materialized — the prior round's
-      // label blocks are dead (Ckpt release discipline)
-      graft.ops.Ckpt.free(labels)
+      // label blocks are dead
+      ck.drop(labels)
       labels = next
       rounds += 1
     }
-    // the edge checkpoint is dead once the loop ends; the final labels
-    // frame is what the caller's result reads at action time
-    graft.ops.Ckpt.free(p)
-    graft.ops.Ckpt.freeOnConsumed(
-      labels.select($"node", $"lbl".as("component")), Seq(labels))
+    labels.select($"node", $"lbl".as("component"))
   }
 
   /** G4 connected components of the co-purchase backbone — the component
@@ -964,9 +933,13 @@ object Graph {
     * 100 TB: per-round cost ∝ |frontier| × avg-degree; visited/frontier
     * frames are node-sized; localCheckpoint truncates per-round lineage.
     */
-  def hopDist(spark: SparkSession, dir: String): DataFrame = {
+  def hopDist(spark: SparkSession, dir: String): DataFrame = hopDistFrom(backboneEdges(spark, dir))
+
+  /** The G5 BFS over an undirected (u, v) edge frame. */
+  private[graft] def hopDistFrom(edges: DataFrame): DataFrame = Ckpt.scope { ck =>
+    val spark = edges.sparkSession
     import spark.implicits._
-    val e0 = backboneEdges(spark, dir).localCheckpoint()
+    val e0 = ck(edges)
     val und = e0.select($"u".as("src"), $"v".as("dst"))
       .unionByName(e0.select($"v".as("src"), $"u".as("dst")))
     val nodes = und.select($"src".as("node")).distinct()
@@ -977,30 +950,27 @@ object Graph {
     // the loop early (no node past hop t exists — result-identical to
     // running out the horizon, so the fixed-bound oracle still matches);
     // isEmpty on a checkpointed frame is a trivial job.
-    var layers = List(
+    var layers = List(ck(
       nodes.join(broadcast(seed), $"node" === $"seed")
-        .select($"node", lit(0).as("dist")).localCheckpoint())
+        .select($"node", lit(0).as("dist"))))
     var t = 1
     var exhausted = false
     while (t <= 6 && !exhausted) {
       val visited = layers.map(_.select($"node")).reduce(_ unionByName _)
-      val f = und
+      val f = ck(und
         .join(layers.head.select($"node".as("src")), Seq("src"), "left_semi")
         .select($"dst".as("node")).distinct()
         .join(visited, Seq("node"), "left_anti")
-        .select($"node", lit(t).as("dist"))
-        .localCheckpoint()
+        .select($"node", lit(t).as("dist")))
       exhausted = f.isEmpty
-      if (!exhausted) layers ::= f else graft.ops.Ckpt.free(f)
+      if (!exhausted) layers ::= f
       t += 1
     }
     // every layer checkpoint AND the edge checkpoint (via the lazy
     // `nodes` distinct) is read by the result at action time
-    graft.ops.Ckpt.freeOnConsumed(
-      nodes.join(layers.reduce(_ unionByName _), Seq("node"), "left")
-        .select($"node", coalesce($"dist", lit(-1)).as("dist"))
-        .orderBy($"node"),
-      e0 :: layers)
+    nodes.join(layers.reduce(_ unionByName _), Seq("node"), "left")
+      .select($"node", coalesce($"dist", lit(-1)).as("dist"))
+      .orderBy($"node")
   }
 
   val hopDistSql: String =

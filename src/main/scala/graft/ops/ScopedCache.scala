@@ -126,7 +126,7 @@ object ScopedCache {
   /** Run `releaseFn` after the first completed action whose plan contains
     * `result`'s analyzed fragment (or after the [[AbandonAfterActions]]
     * TTL) — the cache-release listener generalized to arbitrary cleanup,
-    * used by [[Ckpt.freeOnConsumed]] to release localCheckpoint storage
+    * used by [[Ckpt]] scopes to release localCheckpoint storage
     * blocks that `spark.catalog.clearCache()` never touches. Same
     * construct-then-execute-once contract as [[untilConsumed]]; the
     * checkpoint flavor is stricter on violation (a freed checkpoint

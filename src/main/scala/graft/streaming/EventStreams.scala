@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.Row
 
-import graft.ops.EventWindows
+import graft.ops.{Ckpt, EventWindows}
 
 /** Structured-Streaming entry points (SURVEY.md §2.7): the batch window
   * transforms of graft.ops.EventWindows applied to an unbounded source.
@@ -203,8 +203,10 @@ object EventStreams {
     * publish goes through Staging.publishAtomic's two-phase write-temp +
     * rename swap, so a crash mid-batch leaves the previous snapshot
     * readable (the foreachBatch write is also exactly-once-per-epoch via
-    * the checkpoint). The merged frame is still eagerly localCheckpoint'ed
-    * to cut per-batch lineage growth. With Delta/Iceberg the body becomes
+    * the checkpoint). The merged frame is still eagerly checkpointed to
+    * cut per-batch lineage growth, in a [[Ckpt.scope]] that frees it when
+    * the batch ends, failed or not (a long-running stream would otherwise
+    * hold snapshot-sized storage per trigger). With Delta/Iceberg the body becomes
     * a MERGE INTO and the orchestration here is unchanged.
     */
   def upsertSink(events: DataFrame, path: String, checkpoint: String): DataStreamWriter[Row] = {
@@ -212,7 +214,7 @@ object EventStreams {
     import org.apache.spark.sql.functions._
     events.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) => Ckpt.scope[Unit] { ck =>
         val s = batch.sparkSession
         // existence via the Hadoop FS API — java.io.File is always false
         // on hdfs://‌/s3a:// paths, which would silently discard the table
@@ -224,19 +226,13 @@ object EventStreams {
           else s.createDataFrame(s.sparkContext.emptyRDD[Row], batch.schema)
         val w = Window.partitionBy(col("user_id"))
           .orderBy(col("ts").desc, col("value").desc)
-        val merged = existing.unionByName(batch)
+        val merged = ck(existing.unionByName(batch)
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1)
-          .drop("__rn")
-          .localCheckpoint(true)
+          .drop("__rn"))
         graft.weather.Staging.publishAtomic(s, path)(p =>
           merged.write.mode("overwrite").parquet(p))
-        // checkpointed RDD blocks are freed only when the frame is GC'd;
-        // a long-running stream would otherwise accumulate snapshot-sized
-        // storage per trigger (the Ckpt leak class) — release explicitly
-        graft.ops.Ckpt.free(merged)
-        ()
-      }
+      }}
   }
 
   /** X26 streaming CDC apply: the A22 MERGE kernel run per micro-batch,
@@ -278,7 +274,7 @@ object EventStreams {
     import org.apache.spark.sql.functions.col
     changes.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) => Ckpt.scope[Unit] { ck =>
         val s = batch.sparkSession
         // materialize the feed ONCE (eager localCheckpoint): both the
         // emptiness probe below and the merge read the checkpointed rows,
@@ -286,7 +282,7 @@ object EventStreams {
         // trigger (an isEmpty straight on `batch` would run a second job
         // over the source — cheap for MemoryStream, measurable for real
         // feeds)
-        val feed = batch.toDF().localCheckpoint(true)
+        val feed = ck(batch.toDF())
         // an empty batch (no-data trigger, restart recovery) must not
         // rewrite the base-sized snapshot into a byte-identical new
         // version — per-batch cost stays FEED-sized
@@ -305,19 +301,12 @@ object EventStreams {
         // a lazy write inside publishSnapshot would interleave that read
         // with the lock window longer than necessary (snap_N itself is
         // immutable, so this is latency hygiene, not correctness)
-        val merged = graft.ops.Incremental.applyChanges(base, feed)
-          .select(cols: _*).localCheckpoint(true)
+        val merged = ck(graft.ops.Incremental.applyChanges(base, feed).select(cols: _*))
         graft.ops.ChainIndex.publishSnapshot(s, root)(p =>
           merged.write.parquet(p))
         graft.ops.ChainIndex.gcChains(s, root, keepChains = 2)
-        graft.ops.Ckpt.free(merged)
         }
-        // release the feed checkpoint whether the batch was empty or not
-        // (ContextCleaner GC timing would otherwise hold feed-sized
-        // blocks per trigger for the stream's lifetime)
-        graft.ops.Ckpt.free(feed)
-        ()
-      }
+      }}
   }
 
   // -------------------------------------------------------------------

@@ -141,8 +141,9 @@ object Staging {
     * is released on every exit path. A publisher that dies between acquire and
     * the finally (kill -9) leaves the marker behind — that is deliberate:
     * the next run must decide whether the dead writer's job is truly gone
-    * before calling [[breakPublishLock]] (same recover-then-retry contract
-    * the reference has with one dbt run at a time per target).
+    * before calling [[graft.ops.CommitLock.breakPublishLock]] (same
+    * recover-then-retry contract the reference has with one dbt run at a
+    * time per target).
     */
   def publishAtomic(spark: SparkSession, path: String)(write: String => Unit): Unit = {
     import org.apache.hadoop.fs.Path
@@ -164,18 +165,6 @@ object Staging {
       fs.delete(old, true)
       spark.catalog.refreshByPath(path)
     }
-  }
-
-  /** Clears a lock left by a publisher that died between acquiring
-    * `<path>__lock` and its finally block. Only call once the dead
-    * writer's Spark job is confirmed gone. Returns true if a lock was
-    * removed.
-    */
-  def breakPublishLock(spark: SparkSession, path: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val lock = new Path(path + "__lock")
-    val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(lock, false)
   }
 
   /** Recovery for [[publishAtomic]]'s rename window: if a crash left no

@@ -31,3 +31,28 @@ object GraftColumnBridge {
 object GraftListenerBridge {
   def drain(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
+
+/** `Dataset.localCheckpoint(eager)` with one hook: `taken` receives the
+  * checkpoint's RDD BEFORE the eager job runs. Spark's own call returns
+  * the RDD only when that job succeeds, so a failed eager checkpoint left
+  * persisted storage no caller could reach. The body is Spark's
+  * (`checkpoint` inside `withAction`: one SQL execution named
+  * "localCheckpoint", the same job, the same listener events); only the
+  * hook is new. [[graft.ops.Ckpt.Scope]] is its one caller.
+  */
+object GraftCheckpointBridge {
+  def localCheckpoint(df: DataFrame, eager: Boolean)(taken: org.apache.spark.rdd.RDD[_] => Unit): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val qe = ds.queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      execution.QueryExecution.withInternalError("""The "localCheckpoint" action failed.""") {
+        qe.executedPlan.resetMetrics()
+        val rdd = qe.executedPlan.execute().map(_.copy())
+        rdd.localCheckpoint()
+        taken(rdd)
+        if (eager) rdd.doCheckpoint()
+        classic.Dataset.ofRows(ds.sparkSession, execution.LogicalRDD.fromDataset(rdd, ds, ds.isStreaming))
+      }
+    }
+  }
+}

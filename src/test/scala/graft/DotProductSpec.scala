@@ -54,4 +54,18 @@ class DotProductSpec extends SparkSpec {
       .select(call_function("graft_dot", $"a", $"b")).head.getDouble(0)
     assert(one === 1.0)
   }
+
+  test("ensure registers exactly the native functions the session extension injects") {
+    val injected = scala.collection.mutable.ArrayBuffer.empty[String]
+    new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    })
+    GraftExtensions.ensure(spark)
+    val registered = spark.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_")).toSet
+    assert(injected.size === 6 && injected.toSet === registered)
+  }
 }

@@ -3,14 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.llm.TextDedup
-import graft.ops.Graph
 
 /** Round-10 hardening contracts: the L2/L2c df-capped candidate
-  * generation (losslessness + the hot-shingle worst case it exists for),
-  * the G0 materialized-backbone bench mode (unchanged results, MV scan
-  * in the plan), and the G1 rank-broadcast size gate (same trajectory
-  * with and without the hint, hint presence pinned at the logical level
-  * so AQE's own runtime broadcasts can't mask the check).
+  * generation (losslessness + the hot-shingle worst case it exists for).
+  * The G0/G1 graph contracts live in ops/GraphSpec.
   */
 class Round10Spec extends SparkSpec {
 
@@ -83,32 +79,6 @@ class Round10Spec extends SparkSpec {
     // room for boundary shingles (boiler->body transitions are unique per
     // doc) but is 3 orders of magnitude under the uncapped 19900
     assert(nCand <= 20, s"df-cap failed: $nCand candidate pairs from a hot-shingle corpus")
-  }
-
-  test("G0 MV mode: kernels read the materialized backbone, results unchanged, artifact path hardened") {
-    val root = Graph.backboneRoot(sfDir)
-    // hardened path contract: hashed canonical dataset path + process
-    // nonce, NOT the guessable basename form two sessions would share
-    assert(!root.endsWith("sf0.001") && root.contains("graft_backbone_mv_"))
-    val baseTri = Graph.triangles(spark, sfDir).collect().toSeq
-    val baseLpa = Graph.labelProp(spark, sfDir).collect().toSeq
-    Graph.backboneMaterialize(spark, sfDir).count()
-    assert(Graph.triangles(spark, sfDir).collect().toSeq === baseTri)
-    assert(Graph.labelProp(spark, sfDir).collect().toSeq === baseLpa)
-    // the MV-mode plan scans the parquet artifact and never touches the
-    // base tables the derivation needs
-    val plan = Graph.triangles(spark, sfDir).queryExecution.executedPlan.toString
-    assert(plan.contains("graft_backbone_mv_"), plan.take(1500))
-    assert(!plan.contains("lineitem"), "MV-mode plan still derives from base tables")
-    // dataset guard: a kernel asked about ANOTHER dataset must never
-    // read THIS dataset's backbone (silent wrong data); it memoized-
-    // builds its own MV, so the pin is root-exact, not substring
-    val other = Graph.triangles(spark, "/root/testdata/sf0.01")
-      .queryExecution.executedPlan.toString
-    assert(!other.contains(root),
-      "different-dataset call read the materialized backbone")
-    assert(other.contains(Graph.backboneRoot("/root/testdata/sf0.01")),
-      "different-dataset call does not read its own backbone MV")
   }
 
   test("E6 PQ: one shared vector cache spans training/encode/re-rank — no parquet rescan, no blocks left") {
@@ -197,22 +167,5 @@ class Round10Spec extends SparkSpec {
     assert(inc === nIncoming, s"report covers $inc of $nIncoming incoming docs")
     assert(dup + nw === inc, "dup + new must partition the incoming batch")
     assert(got.filter($"n_dup" < 0 || $"n_new" < 0).isEmpty)
-  }
-
-  test("G1 broadcast gate: identical trajectory hinted or not; hint present only under the gate") {
-    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
-    val hinted = Graph.pagerank(spark, sfDir)
-    val gatedOff = Graph.pagerankGated(spark, sfDir, 0L)
-    // the gate changes the physical strategy, never the numbers: the
-    // integer-nanounit contribution sums make both plans bit-identical
-    assert(hinted.collect().toSeq === gatedOff.collect().toSeq)
-    def nHints(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.analyzed.collect { case h: ResolvedHint => h }.size
-    // logical-level pin (executedPlan would be confounded by AQE electing
-    // its own runtime broadcasts for the small side)
-    assert(nHints(Graph.pagerank(spark, sfDir)) > 0,
-      "small-graph path lost its broadcast hints")
-    assert(nHints(Graph.pagerankGated(spark, sfDir, 0L)) === 0,
-      "gated-off path still injects broadcast hints")
   }
 }

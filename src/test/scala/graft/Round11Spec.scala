@@ -2,89 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.Graph
-
-/** Round-11 contracts: the weighted backbone MV (G8 reads the artifact
-  * instead of re-deriving), the G9 derive-once pipeline (backbone
-  * projection runs exactly once for three kernels), and the bipartite-
-  * projection degree cap (the last unguarded quadratic stage — hot
-  * customers are bounded, the default cap is row-identical at test SFs,
-  * and the effect of a BINDING cap on the top-decile backbone is
-  * quantified and pinned, not assumed away).
+/** Round-11 contracts: the substring cut, the C19 funnel, the NB/AUC
+  * pair, the E18 NSW beam search, the C20 budget cut, T20 winnowing and
+  * the C21 temperature mix. The G8/G9 and degree-cap graph contracts live
+  * in ops/GraphSpec.
   */
 class Round11Spec extends SparkSpec {
-
-  test("G8 weighted MV: sssp over the MV artifact equals the fresh derivation") {
-    import spark.implicits._
-    val fresh = Graph.sssp(spark, sfDir).collect().toSeq
-    Graph.backboneMaterialize(spark, sfDir).count()
-    assert(Graph.sssp(spark, sfDir).collect().toSeq === fresh)
-    // the weighted read scans the artifact, never the base
-    // tables — the (u, v, shared) columns come from parquet
-    val plan = Graph.backboneWeighted(spark, sfDir)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("graft_backbone_mv_"), plan.take(800))
-    assert(!plan.contains("lineitem"), plan.take(800))
-  }
-
-  test("G9 pipeline: backbone derived once, kernels run off the artifact, stages agree with standalone kernels") {
-    import spark.implicits._
-    val before = graft.ops.ScopedCache.scopesOpened
-    val (mv, tri, lpa, dist) = Graph.graphPipelineParts(spark, sfDir)
-    val opened = graft.ops.ScopedCache.scopesOpened - before
-    // one weighted derivation = exactly 2 scopes (w, edges — the wedge
-    // generator streams pairs without caching them); a kernel
-    // re-deriving the projection would open 2 more
-    assert(opened === 2, s"pipeline opened $opened cache scopes, expected 2")
-    for ((df, nm) <- Seq((tri, "triangles"), (lpa, "labelprop"), (dist, "sssp"))) {
-      val plan = df.queryExecution.optimizedPlan.toString
-      assert(!plan.contains("lineitem") && !plan.contains("orders"),
-        s"$nm kernel re-derives from base tables:\n${plan.take(800)}")
-    }
-    // stage summaries recompute from the standalone (derive-mode) kernels
-    val rows = Graph.graphPipeline(spark, sfDir).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(rows.keySet === Set("backbone", "triangles", "labelprop", "sssp"))
-    assert(rows("backbone")._1 === mv.count())
-    val triStandalone = Graph.triangles(spark, sfDir)
-      .agg(sum($"n_tri"), sum(when($"n_tri" > 0, 1L).otherwise(0L))).head()
-    assert(rows("triangles") === ((triStandalone.getLong(0), triStandalone.getLong(1))))
-    val lpaStandalone = Graph.labelProp(spark, sfDir)
-      .agg(count(lit(1)), max($"n_nodes")).head()
-    assert(rows("labelprop") === ((lpaStandalone.getLong(0), lpaStandalone.getLong(1))))
-  }
-
-  test("degree cap: the default cap is row-identical to uncapped at test SFs") {
-    import spark.implicits._
-    // consume one scoped-cached instance before constructing the next
-    // (the ScopedCache one-live-instance-per-plan constraint)
-    val capped = Graph.deriveBackboneWeighted(spark, sfDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    val uncapped = Graph.deriveBackboneWeighted(spark, sfDir, Int.MaxValue)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    assert(capped === uncapped)
-    assert(capped.nonEmpty)
-  }
-
-  test("degree cap: a hub customer's wedge pairs are bounded by cap², not degree²") {
-    import spark.implicits._
-    def wedgeCount(nSup: Int, cap: Int): Long = {
-      val pairs = spark.range(nSup).select(lit(1L).as("c"), $"id".as("s"))
-      Graph.wedgePairs(pairs, cap).count()
-    }
-    // uncapped: quadratic in hub degree
-    assert(wedgeCount(400, Int.MaxValue) === 400L * 399 / 2)
-    // capped: flat at cap*(cap-1)/2 no matter how large the hub grows —
-    // the projection stage can no longer go quadratic on one key
-    assert(wedgeCount(400, 64) === 64L * 63 / 2)
-    assert(wedgeCount(1600, 64) === 64L * 63 / 2)
-    // the cap keeps the hub's LOWEST supplier ids — deterministic
-    val kept = Graph.wedgePairs(
-        spark.range(100).select(lit(1L).as("c"), $"id".as("s")), 10)
-      .select(explode(array($"u", $"v")).as("s"))
-      .distinct().collect().map(_.getLong(0)).sorted.toSeq
-    assert(kept === (0L until 10L))
-  }
 
   test("substring cut removes exactly the flagged spans on a hand-built corpus") {
     import spark.implicits._
@@ -127,25 +50,6 @@ class Round11Spec extends SparkSpec {
     assert(l7.nonEmpty && l7.values.sum > 0, "fixture has no duplicated spans")
     for ((src, dup) <- l7) assert(perSource.getOrElse(src, 0L) === dup,
       s"source $src: cut=${perSource.getOrElse(src, 0L)} != L7 dup_tokens=$dup")
-  }
-
-  test("degree cap: quantified top-decile backbone stability under a BINDING cap (sf0.01)") {
-    import spark.implicits._
-    val dir = "/root/testdata/sf0.01"
-    // sf0.01 degree distribution: max 67, median 33. A cap in the upper
-    // tail (50 ≈ 0.75×max) binds on a minority of customers and keeps
-    // ≥85% of the top-decile backbone (measured 0.878 recall / 0.805
-    // precision); a cap at the MEDIAN binds on half the corpus and
-    // keeps <50% — the cap is a tail-safety bound for pathological
-    // hubs, NOT a quality-neutral sparsifier, so deployments set it
-    // above the expected degree distribution (e.g. p99.9 × margin).
-    val full = Graph.deriveBackboneWeighted(spark, dir, Int.MaxValue)
-      .select($"u", $"v").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val capped = Graph.deriveBackboneWeighted(spark, dir, 50)
-      .select($"u", $"v").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val inter = (full & capped).size.toDouble
-    assert(inter / full.size >= 0.85, f"recall ${inter / full.size}%.3f < 0.85")
-    assert(inter / capped.size >= 0.75, f"precision ${inter / capped.size}%.3f < 0.75")
   }
 
   test("C19 funnel: every stage binds on a hand-built corpus; 3 cache scopes") {

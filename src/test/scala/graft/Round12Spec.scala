@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.llm.{Multimodal, TextDedup}
-import graft.ops.{Graph, Relational}
+import graft.ops.Relational
 
-/** Round-12 operators: G6 link prediction, A21 Theil–Sen robust trend,
+/** Round-12 operators: A21 Theil–Sen robust trend,
   * L2c containment join, M2b thumbnail resample. The DuckDB oracle pins
   * cross-engine parity; these tests pin the internal contracts the oracle
   * can't see — subset semantics the corpus doesn't exhibit, robustness
@@ -40,29 +40,6 @@ class Round12Spec extends SparkSpec {
     assert(r.getAs[Double]("containment") === 1.0)
     // the symmetric-Jaccard operator must NOT pair them
     assert(TextDedup.ngramJaccard(spark, dir).count() === 0L)
-  }
-
-  test("G6 link prediction: predictions are non-edges and the top score recomputes") {
-    import spark.implicits._
-    val got = Graph.linkpred(spark, sfDir)
-    val rows = got.collect()
-    assert(rows.nonEmpty && rows.length <= 20)
-    // rnk is dense 1..n in the emitted (ra desc, cn desc, a, b) order
-    assert(rows.map(_.getAs[Int]("rnk")).toSeq === (1 to rows.length))
-    assert(rows.forall(r => r.getAs[Long]("a") < r.getAs[Long]("b")))
-    val edges = Graph.backboneEdges(spark, sfDir).collect()
-      .map(r => (r.getAs[Long]("u"), r.getAs[Long]("v"))).toSet
-    assert(rows.forall(r => !edges.contains((r.getAs[Long]("a"), r.getAs[Long]("b")))))
-    // independently recompute cn and ra_scaled for the top pair from the
-    // undirected adjacency — pins the wedge join + fixed-point weights
-    val top = rows.head
-    val (a, b) = (top.getAs[Long]("a"), top.getAs[Long]("b"))
-    val adj = edges.toSeq.flatMap { case (u, v) => Seq((u, v), (v, u)) }
-    val deg = adj.groupBy(_._1).map { case (n, xs) => n -> xs.length.toLong }
-    val common = adj.filter(_._1 == a).map(_._2).toSet
-      .intersect(adj.filter(_._1 == b).map(_._2).toSet)
-    assert(top.getAs[Long]("cn") === common.size.toLong)
-    assert(top.getAs[Long]("ra_scaled") === common.toSeq.map(z => 1000000L / deg(z)).sum)
   }
 
   test("A21 Theil–Sen: one wild outlier day leaves the median slope on trend") {

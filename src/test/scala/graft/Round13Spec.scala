@@ -197,52 +197,6 @@ class Round13Spec extends SparkSpec {
     assert(snapshot() === before, "memoized NSW read rewrote the artifact")
   }
 
-  test("backbone memo: no graph kernel plan re-derives from base tables") {
-    // the round-13 convention flip the verdict asked for: g0 bills the
-    // refresh, every kernel memoized-reads the endpoint-clustered MV —
-    // a kernel whose plan re-acquires the orders \u22c8 lineitem projection
-    // has silently reverted to derive-per-query
-    graft.ops.Graph.backboneEdges(spark, sfDir).count() // ensure built
-    for (name <- Seq("g2_triangles", "g3_kcore", "g4_concomp", "g5_hopdist",
-        "g6_linkpred", "g7_labelprop", "g8_sssp")) {
-      // a backbone DERIVATION opens exactly 2 cache scopes (the Round11
-      // pipeline pin) — a memoized-reading kernel construction opens 0,
-      // which also covers the eager kernels whose final plan is all
-      // checkpoint ExistingRDD scans
-      val before = graft.ops.ScopedCache.scopesOpened
-      val plan = SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.executedPlan.toString
-      assert(graft.ops.ScopedCache.scopesOpened === before,
-        s"$name re-derived the backbone (opened a derive scope)")
-      assert(!plan.contains("lineitem") && !plan.contains("orders"),
-        s"$name re-derives the backbone from base tables:\n${plan.take(600)}")
-    }
-    // the lazily-planned kernels must show the artifact scan itself
-    for (name <- Seq("g2_triangles", "g6_linkpred", "g7_labelprop")) {
-      val plan = SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("graft_backbone_mv_"),
-        s"$name does not read the backbone MV:\n${plan.take(600)}")
-    }
-    // the refresh itself must keep deriving fresh (never its own output)
-    val refresh = SparkEntry.queries("g0_backbone_mv")(spark, sfDir)
-    assert(refresh.collect().nonEmpty)
-  }
-
-  test("checkpoint hygiene: consuming a checkpoint-heavy query releases its blocks") {
-    // the round-12 monotonic per-pass slowdown, pinned at the root: a
-    // localCheckpoint's storage must be gone once the query's consuming
-    // action completes (clearCache never touches these blocks)
-    for (name <- Seq("emb_nsw_topk", "g8_sssp", "g4_concomp", "g3_kcore", "g9_pipeline")) {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      assert(SparkEntry.queries(name)(spark, sfDir).count() > 0)
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-      while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
-      assert(leaked.isEmpty, s"$name left checkpoint RDDs behind: $leaked")
-    }
-  }
-
   test("pair-graph append: re-ingesting a resident doc_id is rejected, MV stays valid") {
     import spark.implicits._
     llm.TextDedup.componentLabels(spark, sfDir).count() // ensure built

@@ -169,45 +169,6 @@ class Round9Spec extends SparkSpec {
     }
   }
 
-  test("G7 label propagation: communities partition the backbone node set") {
-    import spark.implicits._
-    val got = ops.Graph.labelProp(spark, sfDir)
-    assert(got.count() >= 1)
-    assert(got.filter($"min_node" > $"max_node" || $"n_nodes" < 1).isEmpty)
-    // community sizes sum to the number of backbone nodes (a partition),
-    // and communities can only refine connected components, never merge
-    // them — so there are at least as many communities as components
-    val nNodes = got.agg(sum($"n_nodes")).as[Long].head()
-    // ONE consuming collect: the CC kernel's checkpoints release after
-    // the first action (Ckpt discipline) — a second action on the same
-    // constructed frame would need freed blocks
-    val components = ops.Graph.concomp(spark, sfDir).collect()
-    assert(nNodes === components.length.toLong)
-    val nComponents = components.map(_.getAs[Long]("component")).distinct.length
-    assert(got.count() >= nComponents,
-      s"${got.count()} communities < $nComponents components")
-  }
-
-  test("G0 backbone MV: read-back artifact equals a fresh derivation") {
-    import spark.implicits._
-    val stats = ops.Graph.backboneMaterialize(spark, sfDir).head()
-    val mv = ops.Graph.Backbone.read(spark,
-      graft.ops.ChainIndex.chainDirs(spark, ops.Graph.backboneRoot(sfDir)), "").get
-    val derived = ops.Graph.backboneEdges(spark, sfDir)
-    // equal count + one-directional exceptAll proves multiset equality
-    // with a single consumption of the scoped-cached derivation (the
-    // second direction would re-run the whole co-purchase self-join)
-    val nMv = mv.count()
-    assert(stats.getLong(0) === nMv)
-    assert(derived.count() === nMv)
-    assert(mv.select($"u", $"v")
-      .exceptAll(ops.Graph.backboneEdges(spark, sfDir)).isEmpty)
-    // the round-11 artifact also stores the WEIGHT column — read-back
-    // weighted edges equal a fresh weighted derivation (multiset)
-    assert(mv.select($"u", $"v", $"shared")
-      .exceptAll(ops.Graph.deriveBackboneWeighted(spark, sfDir)).isEmpty)
-  }
-
   test("E11 rproj: projection formula matches an independent driver-side replay") {
     import spark.implicits._
     // one vector, recomputed in plain Scala with the same integer matrix

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
+import graft.ops.CommitLock
 import graft.weather.{Staging, WeatherGen, WeatherSchema}
 
 /** File-based ingest path: U1 flatten inversion, S5 incremental, S6 merge,
@@ -171,7 +172,7 @@ class StagingSpec extends SparkSpec {
     // the failed attempt must not release a lock it never acquired
     assert(fs.exists(new org.apache.hadoop.fs.Path(root + "__lock")))
     // dead writer confirmed gone → break the lock and publish normally
-    assert(Staging.breakPublishLock(spark, root))
+    assert(CommitLock.breakPublishLock(spark, root))
     Staging.publishAtomic(spark, root)(p => Seq((2L, "b")).toDF("k", "v").write.parquet(p))
     spark.catalog.refreshByPath(root)
     assert(spark.read.parquet(root).as[(Long, String)].collect().toSet === Set((2L, "b")))

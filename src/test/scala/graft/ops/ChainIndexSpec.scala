@@ -165,8 +165,8 @@ class ChainIndexSpec extends SparkSpec {
     assert(ChainIndex.currentSnapshotVersion(spark, root) === Some(0L))
     // recovery: break the stale lock once the dead writer is confirmed
     // gone; the next publish proceeds and the lock is released after it
-    assert(Staging.breakPublishLock(spark, root))
-    assert(!Staging.breakPublishLock(spark, root), "double break should find no lock")
+    assert(CommitLock.breakPublishLock(spark, root))
+    assert(!CommitLock.breakPublishLock(spark, root), "double break should find no lock")
     assert(ChainIndex.publishSnapshotDelta(spark, root) { p =>
       spark.range(2).write.parquet(s"$p/rows")
     } === 1L)
@@ -179,7 +179,7 @@ class ChainIndexSpec extends SparkSpec {
       Staging.publishAtomic(spark, tbl)(p => spark.range(9).write.parquet(p)))
     assert(e3.getMessage.contains("breakPublishLock"))
     assert(spark.read.parquet(tbl).count() === 4, "blocked publish must not touch the table")
-    assert(Staging.breakPublishLock(spark, tbl))
+    assert(CommitLock.breakPublishLock(spark, tbl))
     Staging.publishAtomic(spark, tbl)(p => spark.range(9).write.parquet(p))
     assert(spark.read.parquet(tbl).count() === 9)
   }
@@ -361,7 +361,7 @@ class ChainIndexSpec extends SparkSpec {
     assert(ChainIndex.currentSnapshotVersion(spark, root) === Some(0L))
     val n = ChainIndex.readChainLatest(spark, root, "").count()
     assert(n === 10L || n === 20L, s"committed snapshot is a complete write, got $n rows")
-    assert(!Staging.breakPublishLock(spark, root), "winner must release the lock in its finally")
+    assert(!CommitLock.breakPublishLock(spark, root), "winner must release the lock in its finally")
   }
 
   test("commit-lock providers: check-then-act double races to double-acquire; conditional-put double does not") {
@@ -835,7 +835,7 @@ class ChainIndexSpec extends SparkSpec {
     fs.create(new org.apache.hadoop.fs.Path(root + "__lock"), false).close()
     intercept[java.io.IOException](llm.Embeddings.appendIvfIndex(spark, root, fresh))
     awaitNoLeak(before, "publish-lock failure")
-    assert(Staging.breakPublishLock(spark, root))
+    assert(CommitLock.breakPublishLock(spark, root))
     // the retry after recovery succeeds — the guard saw no phantom state
     llm.Embeddings.appendIvfIndex(spark, root, fresh)
     assert(ChainIndex.chainVersions(spark, root).size === 2)
@@ -845,7 +845,7 @@ class ChainIndexSpec extends SparkSpec {
     intercept[java.io.IOException](
       llm.Embeddings.appendNswIndex(spark, sfDir, clones(7000000L), "r15leak"))
     awaitNoLeak(b2, "NSW publish-lock failure")
-    assert(Staging.breakPublishLock(spark, nswRoot))
+    assert(CommitLock.breakPublishLock(spark, nswRoot))
     llm.Embeddings.appendNswIndex(spark, sfDir, clones(7000000L), "r15leak")
     assert(ChainIndex.chainVersions(spark, nswRoot).size === 2)
   }
@@ -868,7 +868,7 @@ class ChainIndexSpec extends SparkSpec {
       awaitNoLeak(before, "pair-graph publish-lock failure")
       assert(ChainIndex.currentSnapshotVersion(spark, root) === Some(0L),
         "blocked append must commit nothing")
-      assert(Staging.breakPublishLock(spark, root))
+      assert(CommitLock.breakPublishLock(spark, root))
       llm.TextDedup.appendPairGraphMv(spark, scratch, batch)
       assert(ChainIndex.chainVersions(spark, root).size === 2)
       // the retried batch landed exactly once (no phantom rows from the
